@@ -81,15 +81,15 @@ object BeaconCli {
     import java.util.concurrent.Executors
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
-    val outputs = PrepareCalls(PrepareCalls.fromCsv(spark, callsPath), users)
-    outputs.base.count() // materialize the shared cache once, up front
     // each sink is a distributed sort+write job; every concurrent job
     // multiplies peak execution memory (sort buffers across all its
     // tasks). Measured: 3-at-a-time completes 5M rows on the default
     // heap where 7-at-a-time OOMs — and is no slower at any size (the
-    // jobs pipeline through the pool). Override via conf if needed.
-    val concurrency = spark.conf
-      .getOption("spark.graft.sink.concurrency").map(_.toInt).getOrElse(3)
+    // jobs pipeline through the pool). Override via conf if needed;
+    // read first, so a bad value fails before any work.
+    val concurrency = sinkConcurrency(spark)
+    val outputs = PrepareCalls(PrepareCalls.fromCsv(spark, callsPath), users)
+    outputs.base.count() // materialize the shared cache once, up front
     val pool = Executors.newFixedThreadPool(concurrency)
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
     try {
@@ -98,5 +98,15 @@ object BeaconCli {
       }
       Await.result(Future.sequence(writes), Duration.Inf)
     } finally pool.shutdown()
+  }
+
+  /** `spark.graft.sink.concurrency`, default 3. Anything but an integer
+    * >= 1 fails with a message naming the key and the value. */
+  private def sinkConcurrency(spark: SparkSession): Int = {
+    val key = "spark.graft.sink.concurrency"
+    spark.conf.getOption(key).fold(3) { v =>
+      v.trim.toIntOption.filter(_ >= 1).getOrElse(throw new IllegalArgumentException(
+        s"$key must be an integer >= 1; got '$v'"))
+    }
   }
 }

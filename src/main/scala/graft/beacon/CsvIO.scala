@@ -64,11 +64,16 @@ object CsvIO {
       "\"" + cell.replace("\"", "\"\"") + "\""
     else cell
 
-  /** Write to stdout (the prepare-contacts sink, prepare_contacts.py:44). */
+  /** Write to stdout (the prepare-contacts sink, prepare_contacts.py:44):
+    * the bytes [[writeCsv]] would put in a file, copied verbatim — a
+    * quoted cell's `\r\n` or lone `\r` stays as written. Goes through
+    * `Console.out`, so `Console.withOut` redirects it. */
   def writeStdout(df: DataFrame): Unit = {
     val tmp = Files.createTempFile("graft-stdout-", ".csv")
-    writeCsv(df, tmp.toString)
-    Files.lines(tmp).iterator().asScala.foreach(println)
-    Files.deleteIfExists(tmp)
+    try {
+      writeCsv(df, tmp.toString)
+      Files.copy(tmp, Console.out)
+      Console.out.flush()
+    } finally Files.deleteIfExists(tmp)
   }
 }

@@ -3,6 +3,7 @@ package graft.beacon
 import graft.beacon.BeaconExprs._
 import graft.beacon.CallsHeaderMap.{canonicalOrder, labeledFields, renameMap}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.FilePartition
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -85,36 +86,58 @@ object PrepareCalls {
     *
     * The multiLine windows-1252 scan is pinned to ONE partition (format
     * requirement, SURVEY.md §7.3.8) — but file order is already captured
-    * in `_idx` by then, so the base fans out to 4× the cluster's
-    * parallelism here. Without this, every downstream job inherits the
-    * single partition and the whole pipeline runs one task (found at the
-    * 5M-row PerfSmoke scale: single-task sorts/windows OOM'd). The
-    * base is a one-shot staging materialization read nine times, not an
-    * analytics working set, so it persists DISK_ONLY by default: memory
-    * caching a multi-GB wide-string base fills the storage pool while
-    * every core still holds the columnar cache's transient batch
-    * builders, and that unaccounted-for concurrency gap OOM'd an 8 g
-    * heap at the 20M-row scale — DISK_ONLY streams compressed batches
-    * straight to local disk (page-cache-fast on re-read) with bounded
-    * heap regardless of input size. Override with
-    * `spark.graft.base.storage` (any `StorageLevel.fromString` name) and
-    * `spark.graft.base.partitions` when the deployment's memory profile
-    * allows a hotter cache. */
+    * in `_idx` by then, so the base fans out here to [[basePartitions]]:
+    * as many partitions as Spark's own file-split rule would give a
+    * splittable scan of the same bytes. The floor is 2, never 1: a
+    * one-partition repartition plans as `SinglePartition`, which
+    * satisfies every required distribution, so every downstream window
+    * and sort would run as one task (found at the 5M-row PerfSmoke
+    * scale: single-task sorts/windows OOM'd). The base is a one-shot
+    * staging materialization read nine times, not an analytics working
+    * set, so it persists DISK_ONLY by default: memory caching a multi-GB
+    * wide-string base fills the storage pool while every core still
+    * holds the columnar cache's transient batch builders, and that
+    * unaccounted-for concurrency gap OOM'd an 8 g heap at the 20M-row
+    * scale — DISK_ONLY streams compressed batches straight to local disk
+    * (page-cache-fast on re-read) with bounded heap regardless of input
+    * size. Override with `spark.graft.base.storage` (any
+    * `StorageLevel.fromString` name) when the deployment's memory
+    * profile allows a hotter cache. */
   def base(canonical: DataFrame): DataFrame = {
     val spark = canonical.sparkSession
-    val parts = spark.conf.getOption("spark.graft.base.partitions")
-      .map(_.toInt)
-      .getOrElse(4 * spark.sparkContext.defaultParallelism)
     val storage = org.apache.spark.storage.StorageLevel.fromString(
       spark.conf.getOption("spark.graft.base.storage").getOrElse("DISK_ONLY"))
     canonical
       .filter(truthy(col("latest_attempt_date")))
-      .repartition(parts)
+      .repartition(basePartitions(canonical))
       .withColumn("import_data", serializeRow(canonicalOrder))
       .withColumn("latest_attempt_date", parseDate(col("latest_attempt_date")))
       .withColumn("created_at", col("latest_attempt_date"))
       .withColumn("updated_at", col("latest_attempt_date"))
       .persist(storage)
+  }
+
+  /** The base's partition count: ceil(bytes / maxSplitBytes), where bytes
+    * is the canonical plan's estimated size (the file length for a CSV
+    * scan, counted as one file) and maxSplitBytes is
+    * `FilePartition.maxSplitBytes` over the session's
+    * `spark.sql.files.maxPartitionBytes`, `openCostInBytes` and
+    * `minPartitionNum` (default parallelism when unset) — the split a
+    * splittable scan of the same bytes would get. A plan with no size
+    * estimate (an RDD source reports `spark.sql.defaultSizeInBytes`) gets
+    * the default parallelism instead. Floored at 2; see [[base]]. */
+  private[beacon] def basePartitions(canonical: DataFrame): Int = {
+    val spark = canonical.sparkSession
+    val conf = spark.sessionState.conf
+    val bytes = canonical.queryExecution.optimizedPlan.stats.sizeInBytes
+    val splits =
+      if (bytes >= conf.defaultSizeInBytes) spark.sparkContext.defaultParallelism
+      else {
+        val maxSplit = FilePartition.maxSplitBytes(spark,
+          bytes.toLong + conf.filesOpenCostInBytes).max(1L) // openCost may be 0
+        ((bytes + maxSplit - 1) / maxSplit).min(Int.MaxValue).toInt
+      }
+    splits.max(2)
   }
 
   def apply(canonical: DataFrame, users: Users): Outputs = {

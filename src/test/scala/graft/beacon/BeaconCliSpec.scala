@@ -50,4 +50,22 @@ class BeaconCliSpec extends AnyFunSuite with SparkTestSession {
     assert(rows.exists(r => Option(r.getString(1))
       .exists(_.contains("How many people in household: 3 (1 baby)"))))
   }
+
+  test("spark.graft.sink.concurrency must be an integer >= 1, named on failure") {
+    val inDir = Files.createTempDirectory("cli-in-")
+    val outDir = Files.createTempDirectory("cli-out-")
+    val calls = CallsFixture.writeCallsCsv(inDir)
+    val key = "spark.graft.sink.concurrency"
+    for (bad <- Seq("abc", "0", "-2", "1.5")) {
+      spark.conf.set(key, bad)
+      try {
+        val e = intercept[IllegalArgumentException] {
+          BeaconCli.run(spark, calls.toString, outDir.toString,
+            PrepareCalls.Users(101L, 102L, 103L, 104L))
+        }
+        assert(e.getMessage.contains(key) && e.getMessage.contains(s"'$bad'"))
+      } finally spark.conf.unset(key)
+    }
+    assert(Files.list(outDir).count() == 0) // failed before any sink ran
+  }
 }

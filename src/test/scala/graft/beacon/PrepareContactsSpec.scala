@@ -40,14 +40,33 @@ class PrepareContactsSpec extends AnyFunSuite with SparkTestSession {
   }
 
   test("stdout sink streams the ordered CSV (S3)") {
-    val out = new java.io.ByteArrayOutputStream()
-    Console.withOut(new java.io.PrintStream(out, true, "UTF-8")) {
-      CsvIO.writeStdout(contacts)
+    def stdout(df: org.apache.spark.sql.DataFrame): Array[Byte] = {
+      val out = new java.io.ByteArrayOutputStream()
+      Console.withOut(new java.io.PrintStream(out, true, "UTF-8")) {
+        CsvIO.writeStdout(df)
+      }
+      out.toByteArray
     }
-    val lines = out.toString("UTF-8").linesIterator.toSeq
+    val lines = new String(stdout(contacts), "UTF-8").linesIterator.toSeq
     assert(lines.head.startsWith("nhs_number,first_name,"))
     assert(lines(1).startsWith("111,Joan,M,Smith,"))
     assert(lines.length == 1 + 3)
+
+    // quoted cells holding \r\n or a lone \r: stdout is the file's bytes
+    val dir = Files.createTempDirectory("gds-cr-")
+    val gds = dir.resolve("gds.csv")
+    val rows = CallsFixture.gdsRows
+      .updated(0, CallsFixture.gdsRows(0).updated(4, "1 High St\r\nFlat 2"))
+      .updated(1, CallsFixture.gdsRows(1).updated(5, "Unit\r3"))
+    Files.write(gds, CallsFixture.toCsv(CallsFixture.gdsHeader +: rows)
+      .getBytes("UTF-8"))
+    val crContacts = PrepareContacts(PrepareContacts.fromCsv(spark, gds.toString),
+      now = "2026-08-12T00:00:00")
+    val file = dir.resolve("contacts.csv")
+    CsvIO.writeCsv(crContacts, file.toString)
+    val fileBytes = Files.readAllBytes(file)
+    assert(new String(fileBytes, "UTF-8").contains("1 High St\r\nFlat 2"))
+    assert(stdout(crContacts).sameElements(fileBytes))
   }
 
   test("gds_import_data serializes the original row keyed by source header (C1)") {

@@ -48,6 +48,19 @@ private[graft] class GroupedShuffleListener extends SparkListener {
 
   def bytesFor(group: String): Long =
     Option(bytes.get(group)).map(_.sum()).getOrElse(0L)
+
+  /** [[bytesFor]] once the group's counter is quiescent: listener events
+    * are async, so poll every 25 ms until two reads agree (at most 40
+    * polls). Late events for OTHER groups can keep arriving — they do
+    * not matter to this group's number. A caller that never sets a
+    * "bench:" job group reads group "", which then bills every task. */
+  def settled(group: String): Long = {
+    var prev = -1L; var cur = bytesFor(group); var spins = 0
+    while (cur != prev && spins < 40) {
+      Thread.sleep(25); prev = cur; cur = bytesFor(group); spins += 1
+    }
+    cur
+  }
 }
 
 /** Driver-run benchmark: times every registry query at the given SF and
@@ -56,15 +69,7 @@ private[graft] class GroupedShuffleListener extends SparkListener {
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Tables.pinDialect(spark)
+    val spark = session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
     // ad-hoc A/B knob for the streaming state-partition sizing (see
     // StreamingQueries.runToMemory); unset = the queries' default
     sys.env.get("SPARK_GRAFT_STATE_PARTS")
@@ -74,19 +79,6 @@ object Bench {
     // guessing it from plans, and group scoping keeps each delta honest
     val shuffleListener = new GroupedShuffleListener
     spark.sparkContext.addSparkListener(shuffleListener)
-    // listener events are async: wait until the group's counter is
-    // quiescent (late events for OTHER groups can keep arriving — they
-    // no longer matter to this group's number)
-    def settledShuffleBytes(group: String): Long = {
-      var prev = -1L
-      var cur = shuffleListener.bytesFor(group)
-      var spins = 0
-      while (cur != prev && spins < 40) {
-        Thread.sleep(25); prev = cur
-        cur = shuffleListener.bytesFor(group); spins += 1
-      }
-      cur
-    }
     // JIT/session warmup: exercise codegen, shuffle, and the parquet
     // reader once so the first timed query isn't billed for startup
     spark.range(1000000).selectExpr("sum(id)").collect()
@@ -253,9 +245,9 @@ object Bench {
       shuffleListener.setActiveFallback(group)
       try {
         val cold = timed(fn)
-        val before = settledShuffleBytes(group)
+        val before = shuffleListener.settled(group)
         val warm0 = if (cold.isRight) timed(fn) else cold
-        val warmShuffleMb = (settledShuffleBytes(group) - before) / 1e6
+        val warmShuffleMb = (shuffleListener.settled(group) - before) / 1e6
         // per-query warm gets the canary's GC discipline (VERDICT r8 #3):
         // a warm run slower than 1.5x its own cold is almost always the
         // bench JVM's accumulated heap aging, not the plan — re-measure
@@ -311,6 +303,21 @@ object Bench {
     println(compact)
   }
 
+  /** The bench session: `local[cpus]` with one shuffle partition per
+    * core, AQE on, no UI, the engine dialect pinned. Shared with
+    * [[graft.tools.Profile]] so a single-query profile plans exactly as
+    * the sweep does. */
+  def session(cpus: String): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    Tables.pinDialect(spark)
+  }
+
   type Res = (String, Either[String, Double], Either[String, Double], Double)
 
   /** Exposed for [[graft.tools.CanaryRamp]] only. */
@@ -339,7 +346,7 @@ object Bench {
       df: org.apache.spark.sql.DataFrame): Long =
     // RDD-level count: the SQL optimizer is already out of the
     // picture at toRdd, so this cannot re-introduce count pruning —
-    // and returning the row count serves BenchOne's display too
+    // and returning the row count serves tools.Profile's display too
     df.queryExecution.toRdd.count()
 
   /** Dead-code-elimination sink for the canary's per-thread sums. */

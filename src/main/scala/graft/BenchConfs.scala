@@ -8,7 +8,7 @@ import org.apache.spark.sql.SparkSession
   * inherited by every knob here): the driver's correctness gate NEVER
   * sets any of these, so every oracle hash is computed under the
   * registry defaults; only the stress/bench harnesses (StressSmoke,
-  * RelStress, BenchOne) set them, to pin a production regime — a fixed
+  * RelStress, tools.Profile) set them, to pin a production regime — a fixed
   * query batch, a fixed diagnostic sample, or a quantizer re-trained
   * for the scaled corpus — that the fixture's own coupling would
   * otherwise misrepresent. Each knob's semantics live at its read

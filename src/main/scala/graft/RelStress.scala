@@ -1,8 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicLong
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.functions._
 
 /** Scale-cliff probe for the RELATIONAL layer (the td_ layer has
@@ -145,35 +142,22 @@ object RelStress {
     * `dir` (cold + warm + settled shuffle-write delta), print one
     * parseable JSON line. The same harness discipline as [[Bench]]
     * minus the job-group scoping — stress runs are strictly
-    * sequential, so the global task-end counter attributes cleanly. */
+    * sequential, so group "" (every task) attributes cleanly. */
   def sweep(spark: org.apache.spark.sql.SparkSession, dir: String,
       prefix: String, metric: String, scale: Int): Unit = {
-    // counter + listener are PER CALL and detached in the finally below
+    // the listener is PER CALL and detached in the finally below
     // (ADVICE r11): a second sweep on the same session (the two-family
     // harnesses, or an engine-vs-harness A/B pair) must not leave the
     // first sweep's listener double-counting into a shared counter
-    val shuffleBytes = new AtomicLong
-    val listener = new SparkListener {
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
-        val m = e.taskMetrics
-        if (m != null) shuffleBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try sweepWith(spark, dir, prefix, metric, scale, shuffleBytes)
-    finally spark.sparkContext.removeSparkListener(listener)
+    val meter = new GroupedShuffleListener
+    spark.sparkContext.addSparkListener(meter)
+    try sweepWith(spark, dir, prefix, metric, scale, meter)
+    finally spark.sparkContext.removeSparkListener(meter)
   }
 
   private def sweepWith(spark: org.apache.spark.sql.SparkSession, dir: String,
       prefix: String, metric: String, scale: Int,
-      shuffleBytes: AtomicLong): Unit = {
-    def settled(): Long = {
-      var prev = -1L; var cur = shuffleBytes.get(); var spins = 0
-      while (cur != prev && spins < 40) {
-        Thread.sleep(25); prev = cur; cur = shuffleBytes.get(); spins += 1
-      }
-      cur
-    }
+      meter: GroupedShuffleListener): Unit = {
     def timed(fn: (org.apache.spark.sql.SparkSession, String) =>
         org.apache.spark.sql.DataFrame): Either[String, Double] = {
       val t0 = System.nanoTime()
@@ -200,12 +184,12 @@ object RelStress {
     val results = targets.zipWithIndex.map { case ((name, fn), i) =>
       if (i == targets.size / 2) canaryMid = Bench.canaryProbe(spark)
       val cold = timed(fn)
-      val before = settled()
+      val before = meter.settled("")
       val warm0 = if (cold.isRight) timed(fn) else cold
       // shuffle window closes around the FIRST warm run only — the
       // settle re-run below would otherwise double-count this query's
       // warm shuffle into its own column
-      val mb = (settled() - before) / 1e6
+      val mb = (meter.settled("") - before) / 1e6
       // same warm discipline as the bench (Bench.settledWarm): any
       // warm > cold is JVM noise until a GC'd re-run says otherwise —
       // at stress scales the COLD run's collected sink rows (verify

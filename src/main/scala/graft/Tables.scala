@@ -20,24 +20,7 @@ object Tables {
     */
   def pinDialect(spark: SparkSession): SparkSession = {
     graft.functions.GraftFunctions.register(spark)
-    if (!spark.experimental.extraStrategies.contains(graft.plans.TopKPerKeyStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ graft.plans.TopKPerKeyStrategy
-    if (!spark.experimental.extraStrategies
-        .contains(graft.plans.BucketAdmitJoinStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+
-          graft.plans.BucketAdmitJoinStrategy
-    if (!spark.experimental.extraOptimizations
-        .contains(graft.plans.RewriteRankingFilterToTopK))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+
-          graft.plans.RewriteRankingFilterToTopK
-    if (!spark.experimental.extraOptimizations
-        .contains(graft.plans.RewriteDeferredBuild))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+
-          graft.plans.RewriteDeferredBuild
+    GraftExtensions.install(spark)
     spark.conf.set("spark.sql.ansi.enabled", "false")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     // Wide-string rows make the columnar cache's per-batch column
@@ -408,16 +391,16 @@ object Tables {
     s"$prefix-$digest"
   }
 
-  /** Total on-disk bytes of a table path (file, or one directory level —
-    * the same listing scope as [[pathFingerprint]]). Driver-side, one FS
-    * listing; -1 on any error so callers treating it as a size gate fail
-    * CLOSED (gate off) rather than guessing. */
+  /** Total on-disk bytes of a table path (a file, or a directory tree
+    * at any depth — a partitioned table keeps its data in `k=v/`
+    * subdirectories). Driver-side, one content summary; -1 on any error
+    * so callers treating it as a size gate fail CLOSED (gate off) rather
+    * than guessing. */
   private[graft] def pathBytes(spark: SparkSession, path: String): Long =
     try {
       val p = new org.apache.hadoop.fs.Path(path)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val st = fs.getFileStatus(p)
-      if (st.isDirectory) fs.listStatus(p).map(_.getLen).sum else st.getLen
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .getContentSummary(p).getLength
     } catch {
       case scala.util.control.NonFatal(_) => -1L
     }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.plans.{DeferredBuild, RewriteDeferredBuild}
+import graft.plans.DeferredBuild
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.AttributeReference
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
@@ -218,9 +218,7 @@ object Butterfly {
     * stats (VERDICT r12 #6). */
   private def deferred(spark: SparkSession, schema: StructType,
       label: String)(mk: => DataFrame): DataFrame = {
-    if (!spark.experimental.extraOptimizations.contains(RewriteDeferredBuild))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ RewriteDeferredBuild
+    graft.GraftExtensions.install(spark)
     lazy val innerDf: DataFrame = mk
     val lastBuilt =
       new java.util.concurrent.atomic.AtomicReference[Option[LogicalPlan]](None)

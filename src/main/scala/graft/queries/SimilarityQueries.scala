@@ -42,8 +42,9 @@ object SimilarityQueries {
     * correctness gate never sets it, so oracle hashes are untouched;
     * same contract as ann.queryIdBound) the graph is restricted to
     * vec_id < bound, and the vec_id predicate PRUNES the corpus scan —
-    * a fixed diagnostic sample costs the same at any corpus size (the
-    * BenchOne probe in BASELINE.md measures exactly that). The
+    * a fixed diagnostic sample costs the same at any corpus size
+    * (BASELINE.md's BenchOne reading measured exactly that; take it
+    * again with `tools.Profile <query> <dir> <bound conf>=N`). The
     * unbounded brute queries are the documented n² members; the
     * full-corpus kNN build at scale is [[annKnnEdges]] /
     * `td_knn_graph_ann`, which never honors this bound. */

@@ -20,6 +20,12 @@ import org.apache.spark.sql.functions._
 object BucketMegaStress {
   def main(args: Array[String]): Unit = {
     val nExisting = args.headOption.map(_.toLong).getOrElse(600000L)
+    // the miss set starts past the largest existing token
+    // ((nExisting - 1) * 1500 + 897), so it is disjoint at every size
+    val missBase = nExisting * 1500L
+    require(missBase + 897L < (1L << 30),
+      s"nExisting $nExisting puts the largest token ${missBase + 897L} " +
+        s"at or past 2^30; the largest nExisting is ${((1L << 30) - 898) / 1500}")
     val chunk = args.lift(1) match {
       case Some("unsplit") | None => Long.MaxValue.toString
       case Some(v) => v
@@ -28,7 +34,7 @@ object BucketMegaStress {
     val spark = graft.Tables.pinDialect(
       graft.Tables.localSession("graft-megabucket", cpus))
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // shuffled exec
-    spark.conf.set("spark.graft.dedup.bucketChunkBytes", chunk)
+    spark.conf.set(graft.plans.BucketAdmitJoinApi.ChunkBytesConf, chunk)
     import graft.functions.GraftFunctions.deltaVarint
 
     // 300 sorted P-reduced tokens per set, disjoint across rows
@@ -41,8 +47,7 @@ object BucketMegaStress {
       spark.range(1).select(lit(42L).as("bkey"),
         struct(lit(k).as("nid")).as("dig"), setOf(lit(k * 1500L)).as("hsb")))
     val miss = spark.range(1).select(lit(42L).as("bkey"),
-      struct(lit(-1L).as("nid")).as("dig"),
-      setOf(lit(1000000000L)).as("hsb")) // disjoint range, still < 2^30
+      struct(lit(-1L).as("nid")).as("dig"), setOf(lit(missBase)).as("hsb"))
     val newSide = (matching :+ miss).reduce(_ unionByName _)
 
     val t0 = System.nanoTime()

@@ -24,30 +24,14 @@ object ButterflyProbe {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = Tables.pinDialect(Tables.localSession("graft-bfprobe", cpus))
 
-    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val m = e.taskMetrics
-          if (m != null)
-            shuffleBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-          ()
-        }
-      })
-    def settled(): Long = {
-      var prev = -1L; var cur = shuffleBytes.get(); var spins = 0
-      while (cur != prev && spins < 40) {
-        Thread.sleep(25); prev = cur; cur = shuffleBytes.get(); spins += 1
-      }
-      cur
-    }
+    val meter = new graft.GroupedShuffleListener
+    spark.sparkContext.addSparkListener(meter)
     def timed(label: String)(f: => Long): Unit = {
       System.gc()
-      val b = settled(); val t0 = System.nanoTime()
+      val b = meter.settled(""); val t0 = System.nanoTime()
       val n = f
       val sec = (System.nanoTime() - t0) / 1e9
-      val mb = (settled() - b) / 1e6
+      val mb = (meter.settled("") - b) / 1e6
       println(f"[bfprobe] $label%-34s $sec%6.2f s  $mb%8.1f MB  rows=$n")
     }
 

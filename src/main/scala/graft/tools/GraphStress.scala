@@ -44,8 +44,9 @@ import org.apache.spark.sql.functions._
   */
 object GraphStress {
 
-  /** One shuffle-write meter per rung JVM — listener, quiescence spin
-    * (listener events are async), and the GC'd timed wrapper (explicit
+  /** One shuffle-write meter per rung JVM — the shared
+    * [[graft.GroupedShuffleListener]] read through its settle spin
+    * (group "": every task), and the GC'd timed wrapper (explicit
     * GC first: at multi-GB shuffle volumes accumulated heap debt
     * dominates run-to-run variance — 52.6 vs 98 s observed for an
     * identical plan; same discipline as the bench canary). Shared by
@@ -53,30 +54,15 @@ object GraphStress {
     * between rungs. */
   private final class ShuffleMeter(
       spark: org.apache.spark.sql.SparkSession) {
-    private val bytes = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val m = e.taskMetrics
-          if (m != null) bytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-          ()
-        }
-      })
-    def settled(): Long = {
-      var prev = -1L; var cur = bytes.get(); var spins = 0
-      while (cur != prev && spins < 40) {
-        Thread.sleep(25); prev = cur; cur = bytes.get(); spins += 1
-      }
-      cur
-    }
+    private val listener = new graft.GroupedShuffleListener
+    spark.sparkContext.addSparkListener(listener)
     /** (result, seconds, shuffle-write MB) for one GC'd run. */
     def timed[A](f: => A): (A, Double, Double) = {
       System.gc()
-      val b = settled(); val t0 = System.nanoTime()
+      val b = listener.settled(""); val t0 = System.nanoTime()
       val r = f
       val sec = (System.nanoTime() - t0) / 1e9
-      (r, sec, (settled() - b) / 1e6)
+      (r, sec, (listener.settled("") - b) / 1e6)
     }
   }
 

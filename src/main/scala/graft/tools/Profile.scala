@@ -1,0 +1,157 @@
+package graft.tools
+
+import scala.collection.mutable.ArrayBuffer
+
+import graft.{Bench, GroupedShuffleListener, Json, SparkEntry}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.FormattedMode
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
+
+/** Single-query profiler: runs one registry query cold, then warm,
+  * through [[graft.Bench.consume]] on the bench session and prints, per
+  * run, the row count, wall, settled shuffle-write MB and one line per
+  * completed stage (wall, task and CPU time, input/shuffle records,
+  * shuffle-write and spill MB, shuffle-write time, stage name). Then
+  * the final adaptive plan in formatted form, one exchange line
+  * (shuffle exchanges, their canonical forms, ReusedExchange nodes) and
+  * a one-line JSON record.
+  *
+  * Args: `<query> [dir] [key=value ...]`. The second argument is the
+  * table dir unless it holds a `=`; every `key=value` is set as a
+  * session conf before the first run — e.g.
+  * `spark.sql.adaptive.enabled=false` reads the non-adaptive exchange
+  * layout, `spark.sql.shuffle.partitions=32` a wider shuffle.
+  *
+  * {{{ SPARK_GRAFT_CPUS=4 tools/runmain.sh graft.tools.Profile td_incremental_dedup <dir> spark.sql.shuffle.partitions=32 }}}
+  */
+object Profile extends AdaptiveSparkPlanHelper {
+
+  /** One completed stage attempt, from its aggregated task metrics. */
+  final case class StageRow(id: Int, name: String, tasks: Int,
+      wallMs: Long, taskMs: Long, cpuMs: Long, inRec: Long,
+      shReadRec: Long, shWriteRec: Long, shWriteBytes: Long,
+      spillBytes: Long, shWriteMs: Long)
+
+  final case class Run(rows: Long, sec: Double, shuffleMb: Double,
+      stages: Seq[StageRow])
+
+  final case class Report(cold: Run, warm: Run, exchanges: String,
+      json: String)
+
+  private final class StageLog extends SparkListener {
+    private val rows = ArrayBuffer.empty[StageRow]
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+      val si = e.stageInfo
+      val m = si.taskMetrics
+      val wall = (for {
+        a <- si.completionTime; b <- si.submissionTime
+      } yield a - b).getOrElse(-1L)
+      val row = StageRow(si.stageId, si.name.takeWhile(_ != '\n').take(60),
+        si.numTasks, wall, m.executorRunTime,
+        m.executorCpuTime / 1000000, m.inputMetrics.recordsRead,
+        m.shuffleReadMetrics.recordsRead,
+        m.shuffleWriteMetrics.recordsWritten,
+        m.shuffleWriteMetrics.bytesWritten, m.memoryBytesSpilled,
+        m.shuffleWriteMetrics.writeTime / 1000000)
+      rows.synchronized(rows += row)
+    }
+    def drain(): Seq[StageRow] =
+      rows.synchronized { val out = rows.toVector; rows.clear(); out }
+  }
+
+  private val header =
+    f"${"stage"}%5s ${"wall_s"}%7s ${"task_s"}%8s ${"cpu_s"}%8s " +
+      f"${"tasks"}%6s ${"in_rec"}%11s ${"sh_read"}%11s ${"sh_write"}%11s " +
+      f"${"sw_MB"}%8s ${"spill_MB"}%9s ${"swrite_s"}%9s  name"
+
+  private def line(s: StageRow): String =
+    f"${s.id}%5d ${s.wallMs / 1e3}%7.1f ${s.taskMs / 1e3}%8.1f " +
+      f"${s.cpuMs / 1e3}%8.1f ${s.tasks}%6d ${s.inRec}%11d " +
+      f"${s.shReadRec}%11d ${s.shWriteRec}%11d " +
+      f"${s.shWriteBytes / 1e6}%8.3f ${s.spillBytes / 1e6}%9.1f " +
+      f"${s.shWriteMs / 1e3}%9.1f  ${s.name}"
+
+  /** `(query, dir, confs)` from `<query> [dir] [key=value ...]`. */
+  def parseArgs(args: Seq[String]): (String, String, Seq[(String, String)]) = {
+    val name = args.headOption.getOrElse(throw new IllegalArgumentException(
+      "usage: Profile <query> [dir] [key=value ...]"))
+    val (dir, rest) = args.drop(1) match {
+      case d +: more if !d.contains('=') => (d, more)
+      case more => ("/root/testdata/sf0.1", more)
+    }
+    val confs = rest.map { kv =>
+      kv.split("=", 2) match {
+        case Array(k, v) if k.nonEmpty => (k, v)
+        case _ => throw new IllegalArgumentException(
+          s"conf argument '$kv' is not key=value")
+      }
+    }
+    (name, dir, confs)
+  }
+
+  /** Profile registry query `name` on `dir` in `spark`, writing the
+    * report lines to `out`. Shuffle bytes are read from group "" of a
+    * [[GroupedShuffleListener]], i.e. every task while the run is
+    * live. */
+  def run(spark: SparkSession, name: String, dir: String,
+      out: String => Unit = println): Report = {
+    val fn = SparkEntry.queries.getOrElse(name,
+      throw new IllegalArgumentException(s"unknown query $name; known: " +
+        SparkEntry.queries.keys.toSeq.sorted.mkString(", ")))
+    val meter = new GroupedShuffleListener
+    val stages = new StageLog
+    spark.sparkContext.addSparkListener(meter)
+    spark.sparkContext.addSparkListener(stages)
+    try {
+      def once(tag: String) = {
+        val before = meter.settled("")
+        stages.drain()
+        val t0 = System.nanoTime()
+        val df = fn(spark, dir)
+        val rows = Bench.consume(df)
+        val sec = (System.nanoTime() - t0) / 1e9
+        val mb = (meter.settled("") - before) / 1e6
+        val r = Run(rows, sec, mb, stages.drain().sortBy(-_.taskMs))
+        out(f"[profile] $tag $name rows=$rows wall=$sec%.2f s " +
+          f"shuffle_mb=$mb%.6f stages=${r.stages.size}")
+        out(header)
+        r.stages.foreach(s => out(line(s)))
+        (r, df)
+      }
+      val (cold, _) = once("cold")
+      val (warm, df) = once("warm")
+      val plan = df.queryExecution.executedPlan
+      out(df.queryExecution.explainString(FormattedMode))
+      val shuffles = collect(plan) { case e: ShuffleExchangeExec => e }
+      val reused = collect(plan) { case r: ReusedExchangeExec => r }.size
+      val exchanges = s"[profile] $name: ${shuffles.size} exchanges, " +
+        s"${shuffles.groupBy(_.canonicalized).size} canonical forms, " +
+        s"$reused ReusedExchange nodes"
+      out(exchanges)
+      val json = s"""{"query":${Json.str(name)},""" +
+        f""""cold_sec":${cold.sec}%.3f,"cold_shuffle_mb":${cold.shuffleMb}%.1f,""" +
+        f""""warm_sec":${warm.sec}%.3f,"warm_shuffle_mb":${warm.shuffleMb}%.1f,""" +
+        s""""sf":${Json.str(dir)}}"""
+      Report(cold, warm, exchanges, json)
+    } finally {
+      spark.sparkContext.removeSparkListener(stages)
+      spark.sparkContext.removeSparkListener(meter)
+    }
+  }
+
+  def main(args: Array[String]): Unit = {
+    val (name, dir, confs) = parseArgs(args.toSeq)
+    val spark = Bench.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
+    val report = try {
+      confs.foreach { case (k, v) =>
+        println(s"[profile] conf $k=$v")
+        spark.conf.set(k, v)
+      }
+      spark.range(1000000).selectExpr("sum(id)").collect() // session warm-up
+      run(spark, name, dir)
+    } finally spark.stop()
+    println(report.json)
+  }
+}

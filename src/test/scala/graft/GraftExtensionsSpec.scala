@@ -1,6 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import scala.collection.mutable.ArrayBuffer
+
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.SparkStrategy
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The cluster-deployment wiring: a session built with
@@ -50,5 +55,29 @@ class GraftExtensionsSpec extends AnyFunSuite {
       assert(plan.contains("TopKPerKey"), plan)
       assert(df.count() == 10)
     } finally spark.stop()
+  }
+
+  test("install is idempotent and installs exactly what the extensions path injects") {
+    // what GraftExtensions injects, recorded at the injection calls
+    val strategies = ArrayBuffer.empty[SparkStrategy]
+    val rules = ArrayBuffer.empty[Rule[LogicalPlan]]
+    new GraftExtensions().apply(new SparkSessionExtensions {
+      override def injectPlannerStrategy(b: StrategyBuilder): Unit =
+        strategies += b(null)
+      override def injectOptimizerRule(b: RuleBuilder): Unit =
+        rules += b(null)
+    })
+    // the shared test session (the test above stopped any earlier one)
+    val spark = Tables.localSession("graft-test", "4")
+    Tables.pinDialect(spark)
+    Tables.pinDialect(spark)
+    val ex = spark.experimental
+    for (s <- strategies)
+      assert(ex.extraStrategies.count(_ == s) == 1, s"$s installed != once")
+    for (r <- rules)
+      assert(ex.extraOptimizations.count(_ == r) == 1, s"$r installed != once")
+    assert(ex.extraStrategies.toSet == strategies.toSet)
+    assert(ex.extraOptimizations.toSet == rules.toSet)
+    assert(strategies.nonEmpty && rules.nonEmpty)
   }
 }

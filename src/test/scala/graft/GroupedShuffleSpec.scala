@@ -10,14 +10,6 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class GroupedShuffleSpec extends AnyFunSuite with SparkTestSession {
 
-  private def settle(l: GroupedShuffleListener, g: String): Long = {
-    var prev = -1L; var cur = l.bytesFor(g); var spins = 0
-    while (cur != prev && spins < 40) {
-      Thread.sleep(25); prev = cur; cur = l.bytesFor(g); spins += 1
-    }
-    cur
-  }
-
   test("shuffle bytes bill the owning job group, not neighbors") {
     val listener = new GroupedShuffleListener
     spark.sparkContext.addSparkListener(listener)
@@ -32,9 +24,9 @@ class GroupedShuffleSpec extends AnyFunSuite with SparkTestSession {
       spark.range(1000).collect() // shuffle-free
       spark.sparkContext.clearJobGroup()
 
-      assert(settle(listener, "bench:shuffler") > 0L,
+      assert(listener.settled("bench:shuffler") > 0L,
         "the aggregating query must bill its own group")
-      assert(settle(listener, "bench:mapper") === 0L,
+      assert(listener.settled("bench:mapper") === 0L,
         "a shuffle-free query must not inherit a neighbor's bytes")
     } finally spark.sparkContext.removeSparkListener(listener)
   }
@@ -55,10 +47,44 @@ class GroupedShuffleSpec extends AnyFunSuite with SparkTestSession {
       spark.sparkContext.clearJobGroup()
       listener.setActiveFallback("")
 
-      assert(settle(listener, "bench:streamish") > 0L,
+      assert(listener.settled("bench:streamish") > 0L,
         "a foreign-group job during a query must bill that query")
-      assert(settle(listener, "run-abc-123") === 0L,
+      assert(listener.settled("run-abc-123") === 0L,
         "the foreign group itself must not accumulate")
     } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("without a bench group, group \"\" bills every task") {
+    // the stress harnesses and tools.Profile never set a "bench:" job
+    // group; "" must then read what a global task-end counter reads.
+    // The counter is registered FIRST: the bus hands each event to its
+    // listeners in registration order, so once `listener` has settled
+    // the counter has seen every event too.
+    val global = new java.util.concurrent.atomic.AtomicLong
+    val counter = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(
+          e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        if (e.taskMetrics != null)
+          global.addAndGet(e.taskMetrics.shuffleWriteMetrics.bytesWritten)
+    }
+    val listener = new GroupedShuffleListener
+    spark.sparkContext.addSparkListener(counter)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      spark.range(200000)
+        .selectExpr("id % 1000 AS k", "id AS v")
+        .groupBy("k").count().collect()
+      spark.sparkContext.setJobGroup("run-xyz", "foreign")
+      spark.range(200000)
+        .selectExpr("id % 997 AS k", "id AS v")
+        .groupBy("k").count().collect()
+      spark.sparkContext.clearJobGroup()
+      val all = listener.settled("")
+      assert(all > 0L && all === global.get)
+      assert(listener.bytesFor("run-xyz") === 0L)
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      spark.sparkContext.removeSparkListener(counter)
+    }
   }
 }

@@ -422,6 +422,19 @@ class TablesSpec extends AnyFunSuite with SparkTestSession {
     assert(f1 != f2, "error stamps must never match each other")
   }
 
+  test("pathBytes counts a partitioned table's nested part files") {
+    // a partitioned table keeps its data under k=v/ subdirectories,
+    // which a one-level listing misses
+    val root = Files.createTempDirectory("tables-bytes-")
+    val table = root.resolve("documents.parquet")
+    Files.createDirectories(table.resolve("part=1"))
+    Files.write(table.resolve("part=1").resolve("a.parquet"), new Array[Byte](3000))
+    Files.write(table.resolve("b.parquet"), new Array[Byte](500))
+    assert(Tables.pathBytes(spark, table.toString) == 3500L)
+    assert(Tables.pathBytes(spark, table.resolve("b.parquet").toString) == 500L)
+    assert(Tables.pathBytes(spark, root.resolve("missing").toString) == -1L)
+  }
+
   test("getOrBuild: hit, build-once, and wholesale clear at the bound") {
     // the built-frame tier (Butterfly discipline): values are pure
     // functions of the key, so no fingerprints, no evict hooks — just

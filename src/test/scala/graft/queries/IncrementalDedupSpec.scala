@@ -421,6 +421,36 @@ class IncrementalDedupSpec extends AnyFunSuite with SparkTestSession {
     }
   }
 
+  test("spark.graft.dedup.bucketChunkBytes must be an integer >= 1, named on failure") {
+    val key = graft.plans.BucketAdmitJoinApi.ChunkBytesConf
+    val conf = new org.apache.spark.sql.internal.SQLConf
+    assert(graft.plans.BucketAdmitJoinApi.chunkBytes(conf) == 8388608L)
+    conf.setConfString(key, "1")
+    assert(graft.plans.BucketAdmitJoinApi.chunkBytes(conf) == 1L)
+    for (bad <- Seq("abc", "0", "-5", "1.5", "")) {
+      conf.setConfString(key, bad)
+      val e = intercept[IllegalArgumentException](
+        graft.plans.BucketAdmitJoinApi.chunkBytes(conf))
+      assert(e.getMessage.contains(key) && e.getMessage.contains(s"'$bad'"))
+    }
+    // a query on the shuffled walk surfaces that message
+    val prevBc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    spark.conf.set(key, "0")
+    try {
+      val docs = graft.Tables.load(spark, "/root/testdata/sf0.001", "documents")
+      val e = intercept[Exception](
+        DedupQueries.incrementalDedup(docs).collect())
+      val msgs = Iterator.iterate[Throwable](e)(_.getCause)
+        .takeWhile(_ != null).map(t => String.valueOf(t.getMessage)).toSeq
+      assert(msgs.exists(m => m.contains(key) && m.contains("'0'")),
+        msgs.mkString("\n"))
+    } finally {
+      spark.conf.unset(key)
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBc)
+    }
+  }
+
   test("staged plan is deterministic across runs") {
     val docs = graft.Tables.load(spark, "/root/testdata/sf0.01", "documents")
     val a = DedupQueries.incrementalDedup(docs).collect().toSeq

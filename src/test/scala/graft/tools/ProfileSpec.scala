@@ -1,0 +1,56 @@
+package graft.tools
+
+import scala.collection.mutable.ArrayBuffer
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.ObjectMapper
+import org.scalatest.funsuite.AnyFunSuite
+
+/** [[Profile]]: one registry query cold then warm, per-run rows and
+  * stage tables, the exchange line, and the one-line JSON record whose
+  * keys earlier single-query tooling emitted. */
+class ProfileSpec extends AnyFunSuite with graft.SparkTestSession {
+
+  private val sfDir = "/root/testdata/sf0.001"
+  private val name = "rel_agg_group"
+
+  test("cold and warm runs report the registry's rows, stages and a JSON line") {
+    val lines = ArrayBuffer.empty[String]
+    val report = Profile.run(spark, name, sfDir, lines += _)
+    val expected = graft.SparkEntry.registry(name).build(spark, sfDir)
+      .collect().length.toLong
+    assert(expected > 0)
+    assert(report.cold.rows == expected && report.warm.rows == expected)
+    assert(report.cold.stages.nonEmpty && report.warm.stages.nonEmpty)
+    assert(lines.exists(_.startsWith(s"[profile] cold $name rows=$expected")))
+    assert(lines.exists(_.startsWith(s"[profile] warm $name rows=$expected")))
+    assert(lines.contains(report.exchanges))
+    assert(report.exchanges.matches(
+      s"\\[profile\\] $name: \\d+ exchanges, \\d+ canonical forms, " +
+        "\\d+ ReusedExchange nodes"), report.exchanges)
+    val json = new ObjectMapper().readTree(report.json)
+    assert(json.fieldNames().asScala.toSet == Set("query", "cold_sec",
+      "cold_shuffle_mb", "warm_sec", "warm_shuffle_mb", "sf"))
+    assert(json.get("query").asText == name && json.get("sf").asText == sfDir)
+    assert(json.get("cold_sec").asDouble > 0 && json.get("warm_sec").asDouble > 0)
+  }
+
+  test("an unknown query fails naming it") {
+    val e = intercept[IllegalArgumentException](
+      Profile.run(spark, "no_such_query", sfDir, _ => ()))
+    assert(e.getMessage.contains("no_such_query"))
+  }
+
+  test("args are <query> [dir] [key=value ...]; a conf without '=' fails naming it") {
+    assert(Profile.parseArgs(Seq("q", "/d", "a=1", "b=x=y")) ==
+      (("q", "/d", Seq("a" -> "1", "b" -> "x=y"))))
+    assert(Profile.parseArgs(Seq("q", "a=1"))._3 == Seq("a" -> "1"))
+    for (bad <- Seq("spark.sql.shuffle.partitions", "=32")) {
+      val e = intercept[IllegalArgumentException](
+        Profile.parseArgs(Seq("q", "/d", "a=1", bad)))
+      assert(e.getMessage.contains(s"'$bad'"), e.getMessage)
+    }
+    assert(intercept[IllegalArgumentException](Profile.parseArgs(Nil))
+      .getMessage.contains("usage"))
+  }
+}

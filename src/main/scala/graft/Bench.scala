@@ -3,7 +3,9 @@ import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.LongAdder
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Shuffle-write bytes attributed to the JOB GROUP owning each task's
   * stage, so per-query deltas stop bleeding across neighbors: listener
@@ -61,6 +63,30 @@ private[graft] class GroupedShuffleListener extends SparkListener {
     }
     cur
   }
+
+  /** (result, seconds, shuffle-write MB) for one run of `f`, read
+    * through group "" (every task) — the graph ladders' and probes'
+    * meter. Explicit GC first: at multi-GB shuffle volumes accumulated
+    * heap debt dominates run-to-run variance (52.6 vs 98 s observed
+    * for an identical plan; the bench canary's min-after-GC
+    * discipline). */
+  def timed[A](f: => A): (A, Double, Double) = {
+    System.gc()
+    val b = settled(""); val t0 = System.nanoTime()
+    val r = f
+    val sec = (System.nanoTime() - t0) / 1e9
+    (r, sec, (settled("") - b) / 1e6)
+  }
+}
+
+private[graft] object GroupedShuffleListener {
+  /** A listener registered on `spark` until the caller removes it (a
+    * sweep, in `finally`) or the session stops (a one-rung JVM). */
+  def attach(spark: SparkSession): GroupedShuffleListener = {
+    val l = new GroupedShuffleListener
+    spark.sparkContext.addSparkListener(l)
+    l
+  }
 }
 
 /** Driver-run benchmark: times every registry query at the given SF and
@@ -74,11 +100,6 @@ object Bench {
     // StreamingQueries.runToMemory); unset = the queries' default
     sys.env.get("SPARK_GRAFT_STATE_PARTS")
       .foreach(spark.conf.set("spark.graft.stream.statePartitions", _))
-    // per-job-group shuffle write bytes — per-query deltas quantify the
-    // shuffle story (the number that grows 1000× at 100 TB) instead of
-    // guessing it from plans, and group scoping keeps each delta honest
-    val shuffleListener = new GroupedShuffleListener
-    spark.sparkContext.addSparkListener(shuffleListener)
     // JIT/session warmup: exercise codegen, shuffle, and the parquet
     // reader once so the first timed query isn't billed for startup
     spark.range(1000000).selectExpr("sum(id)").collect()
@@ -100,43 +121,12 @@ object Bench {
           // per-query error rows downstream, but a fatal JVM error
           // (OOM, StackOverflow) must abort — a bench continuing on a
           // corrupted JVM would record a plausible-looking lie
-          case scala.util.control.NonFatal(e) =>
+          case NonFatal(e) =>
             System.err.println(s"[bench] warm-up of table $t failed: " +
               s"${e.getClass.getSimpleName}: " +
               Option(e.getMessage).getOrElse("").take(200))
         }
       }
-    // cold = first run (plan + codegen + execute, what a one-shot job
-    // pays); warm = immediate second run (steady-state, what a resident
-    // cluster pays — where round-over-round regressions actually show,
-    // instead of being buried in compile noise). A throwing query
-    // reports time -1 and its error, never a fake elapsed time.
-    def timed(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
-        : Either[String, Double] = {
-      val t0 = System.nanoTime()
-      try {
-        consume(fn(spark, sfDir))
-        Right((System.nanoTime() - t0) / 1e9)
-      } catch {
-        case scala.util.control.NonFatal(e) =>
-          Left(s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").take(120)}")
-      }
-    }
-    // Contention canary: a fixed all-core CPU probe timed at the start,
-    // middle, and end of the sweep. A bench sharing the box with other
-    // load records inflated per-query times that look like plan
-    // regressions (round 6 recorded a 2.3×-wrong total this way); the
-    // canary makes a contaminated run self-identifying — `canary_drift`
-    // (max/min of the three probes) near 1.0 means the box was steady,
-    // and consumers must disregard a record with drift >~1.5.
-    // Each checkpoint takes the MIN of 3 back-to-back probes after an
-    // explicit GC: a single probe also measures the bench JVM's own heap
-    // aging (a 136-query sweep accumulates GC pressure, and the lone
-    // probe drifted ~2× on an IDLE box), which is not the external
-    // contention the canary exists to detect. The min-of-3 after GC is
-    // the box's actual capacity at that moment; cross-process load still
-    // inflates all three.
-    def canaryProbe(): Double = Bench.canaryProbe(spark)
     // Streaming-stack warm-up: the first streaming query otherwise pays
     // one-time costs a resident cluster never re-pays — micro-batch
     // machinery class-loading/codegen and (for the foreachBatch upsert)
@@ -170,7 +160,7 @@ object Bench {
         spark.conf.set("spark.sql.shuffle.partitions", prevParts)
       }
     } catch {
-      case scala.util.control.NonFatal(e) =>
+      case NonFatal(e) =>
         System.err.println(s"[bench] streaming warm-up failed: " +
           s"${e.getClass.getSimpleName}: " +
           Option(e.getMessage).getOrElse("").take(200))
@@ -180,90 +170,17 @@ object Bench {
         .getConnection("jdbc:derby:memory:benchwarm;create=true")
       java.sql.DriverManager
         .getConnection("jdbc:derby:memory:benchwarm;drop=true")
-    } catch { case scala.util.control.NonFatal(_) => () } // drop=true throws 08006 by design
-    // Canary JIT ramp-out: the probe's own generated code keeps getting
-    // faster over its first executions (C2 recompiles of shared Spark
-    // internals as profiling data accumulates) — on a fast box the probe
-    // read 0.19 s at the start checkpoint and 0.09 s at the end of the
-    // SAME sweep while two back-to-back full sweeps agreed to 0.03% on
-    // cold total, i.e. the drift was the canary's ramp, not the box.
-    // The canary exists to detect EXTERNAL contention, so warm it to its
-    // own steady state before the first checkpoint counts: repeat until
-    // two consecutive probes agree within 10% (bounded at 8 rounds —
-    // a box too noisy to converge will fail the pre-sweep gate anyway,
-    // which is the correct verdict for it).
-    {
-      var prev = canaryProbe()
-      var spins = 0
-      var cur = canaryProbe()
-      while (spins < 6 &&
-          math.max(prev, cur) / math.min(prev, cur) > 1.10) {
-        prev = cur; cur = canaryProbe(); spins += 1
-      }
-    }
-    // Self-defending pre-sweep gate (VERDICT r12 #3: no driver record
-    // met the ≤1.15 drift protocol since r8, so every driver record was
-    // silently anchor-ineligible and rounds risked phantom-regression
-    // cycles). TWO back-to-back start checkpoints: if they already
-    // disagree by >1.15 the box is contended before a single query has
-    // run — sleep once and re-measure, giving a transient neighbor
-    // (a compile, a GC storm) a chance to clear instead of poisoning
-    // the whole record. Both checkpoints land in the canary array, so
-    // the final drift (and the machine-readable anchor_eligible stamp
-    // renderLines derives from it) reflects whatever the box actually
-    // did.
-    def canaryPair(): (Double, Double) = (canaryProbe(), canaryProbe())
-    var (canaryStart, canaryStart2) = canaryPair()
-    if (math.max(canaryStart, canaryStart2) /
-        math.min(canaryStart, canaryStart2) > 1.15) {
-      System.err.println(f"[bench] pre-sweep canary unstable " +
-        f"($canaryStart%.3f vs $canaryStart2%.3f); sleeping 60 s and " +
-        "retrying once")
-      Thread.sleep(60000)
-      val p = canaryPair(); canaryStart = p._1; canaryStart2 = p._2
-    }
+    } catch { case NonFatal(_) => () } // drop=true throws 08006 by design
     // Ad-hoc local iteration only: SPARK_GRAFT_BENCH_ONLY holds
     // comma-separated name prefixes (e.g. "st_,rel_graph_") restricting
     // the sweep. The driver never sets it, so official records stay
     // full-registry; totals from a filtered run are not comparable and
     // the line's n_queries says so.
-    val allSorted = SparkEntry.queries.toSeq.sortBy(_._1)
-    val sorted = sys.env.get("SPARK_GRAFT_BENCH_ONLY") match {
-      case Some(p) =>
-        val ps = p.split(",").map(_.trim).filter(_.nonEmpty)
-        allSorted.filter { case (n, _) => ps.exists(n.startsWith) }
-      case None => allSorted
-    }
-    var canaryMid = 0.0
-    val results = sorted.zipWithIndex.map { case ((name, fn), i) =>
-      if (i == sorted.size / 2) canaryMid = canaryProbe()
-      // every action of this query (cold, warm, settledWarm's re-run)
-      // runs under its own job group so the listener attributes shuffle
-      // to THIS query even when its task-end events arrive late
-      val group = s"bench:$name"
-      spark.sparkContext.setJobGroup(group, name)
-      shuffleListener.setActiveFallback(group)
-      try {
-        val cold = timed(fn)
-        val before = shuffleListener.settled(group)
-        val warm0 = if (cold.isRight) timed(fn) else cold
-        val warmShuffleMb = (shuffleListener.settled(group) - before) / 1e6
-        // per-query warm gets the canary's GC discipline (VERDICT r8 #3):
-        // a warm run slower than 1.5x its own cold is almost always the
-        // bench JVM's accumulated heap aging, not the plan — re-measure
-        // once after an explicit GC and keep the min, so warm numbers are
-        // usable for round-over-round regression gating. A genuinely
-        // regressed query stays slow on the re-run and is reported as is.
-        val warm = Bench.settledWarm(cold, warm0, () => { System.gc(); timed(fn) })
-        (name, cold, warm, warmShuffleMb)
-      } finally {
-        shuffleListener.setActiveFallback("")
-        spark.sparkContext.clearJobGroup()
-      }
-    }
-    val canaryEnd = canaryProbe()
-    val (full, compact) = renderLines(results, sfDir,
-      Seq(canaryStart, canaryStart2, canaryMid, canaryEnd))
+    val prefixes = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
+    val (results, canaries) = sweep(spark, sfDir,
+      registry(n => prefixes.forall(_.exists(n.startsWith))))
+    val (full, compact) = renderLines(results, sfDir, canaries)
     // Full detail first (useful when reading the whole log, and persisted
     // to a file), then a COMPACT line LAST: the harness captures only the
     // final ~2000 chars of output, so the parseable line must be short
@@ -320,16 +237,152 @@ object Bench {
 
   type Res = (String, Either[String, Double], Either[String, Double], Double)
 
-  /** Exposed for [[graft.tools.CanaryRamp]] only. */
-  def probeForRampTool(spark: SparkSession): Double = canaryProbe(spark)
+  /** The registry queries whose names pass `keep`, in sorted name
+    * order — the order every sweep runs them in. */
+  private[graft] def registry(keep: String => Boolean)
+      : Seq[(String, (SparkSession, String) => DataFrame)] =
+    SparkEntry.queries.filter(q => keep(q._1)).toSeq.sortBy(_._1)
 
-  /** One contention-canary checkpoint: min of 3 back-to-back runs of a
-    * fixed pure-CPU all-core loop after an explicit GC (the min-after-
-    * GC discipline — see the probe comment below for why this replaced
-    * the earlier Spark-job probe). Shared with the stress ladders
-    * (VERDICT r12 #7): GraphStress/RelStress/StressSmoke/StreamStress
-    * stamp their records with the SAME probe so cross-round octave
-    * tables carry comparability evidence the way Bench records do. */
+  /** The registry sweep, shared by [[main]] and the stress harnesses
+    * ([[RelStress.sweep]]): starts a [[Canary]], runs each query cold
+    * then warm against `dir` in the given order, and takes a canary
+    * checkpoint before the middle query and after the last. Returns
+    * the per-query results and the canary readings (start, start
+    * again, middle, end).
+    *
+    * cold = first run (plan + codegen + execute, what a one-shot job
+    * pays); warm = immediate second run (steady-state, what a resident
+    * cluster pays — where round-over-round regressions actually show,
+    * instead of being buried in compile noise). A throwing query
+    * reports its error, never a fake elapsed time. Only NonFatal
+    * errors are recorded: a fatal JVM error (OOM, StackOverflow)
+    * aborts the sweep, which would otherwise go on recording
+    * plausible-looking lies from a corrupted JVM.
+    *
+    * Shuffle: per-job-group write bytes of the first warm run — the
+    * number that grows 1000× at 100 TB, quantified instead of guessed
+    * from plans. Every action of a query runs under its own
+    * `bench:<name>` job group, so late task-end events still bill the
+    * right query. The listener is per call and detached in the
+    * `finally` below (ADVICE r11): a second sweep on the same session
+    * (the two-family harnesses, or an engine-vs-harness A/B pair) must
+    * not leave the first one's listener double-counting. */
+  private[graft] def sweep(spark: SparkSession, dir: String,
+      queries: Seq[(String, (SparkSession, String) => DataFrame)])
+      : (Seq[Res], Seq[Double]) = {
+    val meter = GroupedShuffleListener.attach(spark)
+    def timed(fn: (SparkSession, String) => DataFrame): Either[String, Double] = {
+      val t0 = System.nanoTime()
+      try {
+        consume(fn(spark, dir))
+        Right((System.nanoTime() - t0) / 1e9)
+      } catch {
+        case NonFatal(e) =>
+          Left(s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").take(120)}")
+      }
+    }
+    try {
+      val canary = new Canary(spark)
+      val results = queries.zipWithIndex.map { case ((name, fn), i) =>
+        if (i == queries.size / 2) canary.checkpoint()
+        val group = s"bench:$name"
+        spark.sparkContext.setJobGroup(group, name)
+        meter.setActiveFallback(group)
+        try {
+          val cold = timed(fn)
+          val before = meter.settled(group)
+          val warm0 = if (cold.isRight) timed(fn) else cold
+          // the window closes around the FIRST warm run only: the
+          // settle re-run below would otherwise bill this query's warm
+          // shuffle twice
+          val mb = (meter.settled(group) - before) / 1e6
+          // per-query warm gets the canary's GC discipline (VERDICT r8
+          // #3): see settledWarm. At stress scales the cold run's
+          // collected sink rows become garbage exactly when the warm
+          // run starts (sessionize 21.8 cold → 28.3 warm at 100×, r12).
+          val warm = settledWarm(cold, warm0, () => { System.gc(); timed(fn) })
+          System.err.println(f"[sweep] $name cold=${cold.fold(_ => -1.0, identity)}%.1fs " +
+            f"warm=${warm.fold(_ => -1.0, identity)}%.1fs shuffle=$mb%.3fMB" +
+            cold.left.toOption.map(e => s" ERROR $e").getOrElse(""))
+          (name, cold, warm, mb)
+        } finally {
+          meter.setActiveFallback("")
+          spark.sparkContext.clearJobGroup()
+        }
+      }
+      canary.checkpoint()
+      (results, canary.readings)
+    } finally spark.sparkContext.removeSparkListener(meter)
+  }
+
+  /** Contention canary for one sweep or ladder: a fixed all-core CPU
+    * probe ([[canaryProbe]]) read at the start, at checkpoints the
+    * caller takes, and at the end. A run sharing the box with other
+    * load records inflated times that look like plan regressions
+    * (round 6 recorded a 2.3×-wrong total this way); the readings make
+    * a contaminated record self-identifying through its drift (see
+    * [[canaryFields]]). Bench, the registry stress sweeps and both
+    * GraphStress ladders stamp their records with the same readings.
+    *
+    * Construction takes the two start readings, after two steps.
+    * Ramp-out: the probe's own code keeps getting faster over its
+    * first executions (on a fast box it read 0.19 s at the start
+    * checkpoint and 0.09 s at the end of the SAME sweep while two
+    * back-to-back full sweeps agreed to 0.03% on cold total), so it is
+    * repeated until two consecutive readings agree within 10% (bounded
+    * at 8 — a box too noisy to converge fails the gate anyway, the
+    * correct verdict for it). Pre-sweep gate (VERDICT r12 #3: no
+    * bench record met the drift protocol from r8 to r12): if the two
+    * start readings already fail [[steady]], the box is contended
+    * before anything has run — sleep once and re-measure, giving a
+    * transient neighbor (a compile, a GC storm) a chance to clear. Both
+    * start readings are kept, so the drift reflects whatever the box
+    * actually did. */
+  private[graft] final class Canary(spark: SparkSession) {
+    private val buf = scala.collection.mutable.ArrayBuffer.empty[Double]
+    locally {
+      var prev = canaryProbe(spark)
+      var cur = canaryProbe(spark)
+      var spins = 0
+      while (spins < 6 && math.max(prev, cur) / math.min(prev, cur) > 1.10) {
+        prev = cur; cur = canaryProbe(spark); spins += 1
+      }
+    }
+    private def pair() = Seq(canaryProbe(spark), canaryProbe(spark))
+    buf ++= {
+      val p = pair()
+      if (steady(p)) p
+      else {
+        System.err.println(f"[canary] pre-sweep canary unstable " +
+          f"(${p(0)}%.3f vs ${p(1)}%.3f); sleeping 60 s and retrying once")
+        Thread.sleep(60000)
+        pair()
+      }
+    }
+    def checkpoint(): Unit = buf += canaryProbe(spark)
+    def readings: Seq[Double] = buf.toSeq
+  }
+
+  /** Max/min of the canary readings — 1.0 on a steady box; None when
+    * there are none or one is missing (≤ 0). */
+  private def canaryDrift(canaries: Seq[Double]): Option[Double] =
+    if (canaries.nonEmpty && canaries.min > 0) Some(canaries.max / canaries.min)
+    else None
+
+  /** The anchor protocol: the readings drifted by at most 15%. */
+  private def steady(canaries: Seq[Double]): Boolean =
+    canaryDrift(canaries).exists(_ <= 1.15)
+
+  /** A record's canary fields: `canary` (the raw readings),
+    * `canary_drift` (-1 when a reading is missing, never a fake 1.0)
+    * and `anchor_eligible` (VERDICT r12 #3 — record status made
+    * machine-readable instead of re-derived each round): true iff the
+    * readings are [[steady]] AND `clean`, the caller's own success
+    * condition. Consumers gate cross-round comparisons on it. */
+  private[graft] def canaryFields(canaries: Seq[Double], clean: Boolean): String =
+    s""""canary":${canaries.map(c => f"$c%.3f").mkString("[", ",", "]")},""" +
+      s""""canary_drift":${canaryDrift(canaries).fold("-1")(d => f"$d%.3f")},""" +
+      s""""anchor_eligible":${clean && steady(canaries)}"""
 
   /** Benchmark action: execute the query's FULL output — every row and
     * column, final sort included — consumed on the executors
@@ -352,6 +405,14 @@ object Bench {
   /** Dead-code-elimination sink for the canary's per-thread sums. */
   private val canarySink = new java.util.concurrent.atomic.AtomicLong
 
+  /** One contention-canary reading: the min of 3 back-to-back runs of
+    * a fixed pure-CPU all-core loop after an explicit GC. A lone probe
+    * also measures the JVM's own heap aging (a 136-query sweep
+    * accumulates GC pressure, and it drifted ~2× on an IDLE box), which
+    * is not the external contention the canary exists to detect; the
+    * min-of-3 after GC is the box's capacity at that moment, and
+    * cross-process load still inflates all three. Read through
+    * [[Canary]], and by tools.CanaryRamp, which measures its ramp. */
   private[graft] def canaryProbe(spark: SparkSession): Double = {
     // Pure-CPU, all-core probe: fixed xorshift iterations on one thread
     // per core, joined. Earlier rounds probed with a small Spark job
@@ -504,14 +565,13 @@ object Bench {
     * carry it); per-query error detail is in `errors`. Factored out of
     * main so BenchSpec can pin the JSON shape without running queries.
     *
-    * `canaries` are the start/mid/end contention-probe times; both lines
-    * carry `canary` (the raw checkpoints) and `canary_drift` (max/min —
-    * 1.0 on a steady box). A record with drift >~1.5 was measured on a
-    * contended box and must not be used for round-over-round
-    * comparison. `anchor_eligible` (VERDICT r12 #3) makes record status
-    * machine-readable instead of re-derived each round: true iff the
-    * drift met the ≤1.15 anchor protocol AND every query succeeded —
-    * consumers gate cross-round comparisons on this one field.
+    * `canaries` are the [[Canary]] readings; both lines carry
+    * [[canaryFields]], eligible only when every query succeeded (and at
+    * least one ran).
+    *
+    * `metric` names the record ("total" for the bench; the stress
+    * harnesses name their sweep, e.g. "relstress_total") and `scale`,
+    * when given, stamps a stress sweep's replica factor.
     *
     * SCHEMA CONTRACT (VERDICT r13 #7 — identical keys every round, so
     * cross-round per-query diffs never need archaeology): the FULL line
@@ -525,7 +585,8 @@ object Bench {
     * carries the same head plus only the 10 slowest cold. BenchSpec
     * pins the three-map symmetry. */
   private[graft] def renderLines(results: Seq[Res], sfDir: String,
-      canaries: Seq[Double] = Nil): (String, String) = {
+      canaries: Seq[Double] = Nil, metric: String = "total",
+      scale: Option[Int] = None): (String, String) = {
     def jStr(s: String) = Json.str(s)
     def secs(sel: Res => Either[String, Double]) =
       results.map(r => jStr(r._1) + ":" + sel(r).fold(_ => "-1", _.toString))
@@ -533,7 +594,7 @@ object Bench {
     val qs = secs(_._2)
     val warmQs = secs(_._3)
     val shuffleQs = results
-      .map(r => jStr(r._1) + ":" + f"${r._4}%.2f").mkString("{", ",", "}")
+      .map(r => jStr(r._1) + ":" + f"${r._4}%.6f").mkString("{", ",", "}")
     val errs = results.collect { case (n, Left(e), _, _) => jStr(n) + ":" + jStr(e) }
       .mkString("{", ",", "}")
     val ok = results.filter(_._2.isRight)
@@ -541,16 +602,11 @@ object Bench {
     val warmTotal = ok.flatMap(_._3.toOption).sum
     val errCount = results.count(_._2.isLeft)
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_full.json")
-    val canaryJson = canaries.map(c => f"$c%.3f").mkString("[", ",", "]")
-    val canaryDrift =
-      if (canaries.nonEmpty && canaries.min > 0) f"${canaries.max / canaries.min}%.3f"
-      else "-1"
-    // results.nonEmpty: a BENCH_ONLY filter matching zero queries must
-    // not stamp an eligible value-0 record (errCount == 0 is vacuous)
-    val anchorEligible = results.nonEmpty &&
-      canaries.nonEmpty && canaries.min > 0 &&
-      canaries.max / canaries.min <= 1.15 && errCount == 0
-    val head = s""""metric":"total","value":$total,"unit":"sec","cold_total":$total,"warm_total":$warmTotal,"n_queries":${results.size},"n_succeeded":${ok.size},"n_errors":$errCount,"canary":$canaryJson,"canary_drift":$canaryDrift,"anchor_eligible":$anchorEligible,"sf":"$sfDir""""
+    // results.nonEmpty: a filter matching zero queries must not stamp
+    // an eligible value-0 record (errCount == 0 is vacuous)
+    val canary = canaryFields(canaries, results.nonEmpty && errCount == 0)
+    val head = s""""metric":${jStr(metric)},"value":$total,"unit":"sec","cold_total":$total,"warm_total":$warmTotal,"n_queries":${results.size},"n_succeeded":${ok.size},"n_errors":$errCount,$canary,"sf":${jStr(sfDir)}""" +
+      scale.fold("")(k => s""","scale":$k""")
     val full =
       s"""{$head,"queries":$qs,"warm":$warmQs,"warm_shuffle_mb":$shuffleQs,"errors":$errs}"""
     val slowest = ok.sortBy(-_._2.getOrElse(0.0)).take(10)

@@ -48,22 +48,6 @@ import org.apache.spark.sql.functions._
   */
 object StressSmoke {
 
-  /** Completion sentinel for the td_ fixture generation — same
-    * collision-proofing as RelStress.markerPath (hash of the RAW
-    * (src, scale) pair AND the source directory's content fingerprint,
-    * so a refreshed corpus at the same path invalidates the sentinel
-    * instead of silently reusing data scaled from the old vintage),
-    * distinct prefix so a dir can never satisfy the OTHER harness's
-    * growth model. */
-  private def markerPath(spark: org.apache.spark.sql.SparkSession,
-      out: String, src: String, scale: Int): java.nio.file.Path = {
-    val vintage = Tables.pathFingerprint(spark, src)
-    val digest = java.security.MessageDigest.getInstance("SHA-1")
-      .digest(s"$scale|$src|$vintage".getBytes("UTF-8"))
-      .take(6).map(b => f"$b%02x").mkString
-    java.nio.file.Paths.get(s"$out/_graft_tdscaled_${scale}x_$digest")
-  }
-
   def main(args: Array[String]): Unit = {
     val scale = args.headOption.map(_.toInt).getOrElse(50)
     val src = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
@@ -86,7 +70,10 @@ object StressSmoke {
     val emb = Tables.load(spark, src, "embeddings")
     val nVecs = emb.count()
 
-    if (!java.nio.file.Files.exists(markerPath(spark, out, src, scale))) {
+    // completion sentinel: RelStress.copyDone, under this harness's own
+    // prefix so a dir never satisfies the relational growth model
+    val sentinel = "_graft_tdscaled_"
+    if (!RelStress.copyDone(spark, src, out, scale, sentinel)) {
       val reps = spark.range(scale).toDF("rep")
       docs.crossJoin(broadcast(reps))
         .select(
@@ -113,23 +100,9 @@ object StressSmoke {
 
       // td_* queries that touch other tables (events for the distinct
       // sketch) read them unscaled from the source dir
-      for (name <- Seq("region", "nation", "customer", "supplier", "part",
-          "orders", "lineitem", "events")) {
-        val from = java.nio.file.Paths.get(s"$src/$name.parquet")
-        if (java.nio.file.Files.exists(from))
-          java.nio.file.Files.copy(from,
-            java.nio.file.Paths.get(s"$out/$name.parquet"),
-            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      }
-      // sentinel written LAST (a crashed half-write never passes for
-      // done); stale sentinels of other (src, scale) pairs cleared so
-      // only this generation's marker stands
-      val listing = java.nio.file.Files.list(java.nio.file.Paths.get(out))
-      try listing.filter(p =>
-          p.getFileName.toString.startsWith("_graft_tdscaled_"))
-        .forEach(java.nio.file.Files.delete(_))
-      finally listing.close()
-      java.nio.file.Files.createFile(markerPath(spark, out, src, scale))
+      RelStress.sealCopy(spark, src, out, scale, sentinel, Seq("region",
+        "nation", "customer", "supplier", "part", "orders", "lineitem",
+        "events"))
     }
 
     // fixture sizes on their own line (RelStress.sweep's JSON carries
@@ -138,10 +111,6 @@ object StressSmoke {
     val q = if (mode == "fixedq") nVecs / 50 else nVecs * scale / 50
     println(s"""{"metric":"stress_fixture","scale":$scale,""" +
       s""""docs":${nDocs * scale},"vecs":${nVecs * scale},"ann_q":$q}""")
-    // measurement delegates to the shared sweep harness: per-call
-    // shuffle listener detached on exit, the settled-warm discipline
-    // (GC + re-measure on any warm > cold, min kept), and the canary
-    // drift stamp
     // IVF quantizer re-trained as the corpus grows (both modes): cell
     // count follows the k ∝ √n exact-assignment optimum — assignment
     // n·k + in-cell candidates ~ n²/k balance at k ∝ √n, so td_ann_ivf

@@ -181,7 +181,7 @@ object IvfIndex {
     * complete the instant it becomes visible), and atomically rename
     * it into place. A concurrent builder that loses the rename simply
     * discards its staging dir and reads the winner — the registry's
-    * sentinel discipline (StressSmoke.markerPath) adapted to an
+    * sentinel discipline (RelStress.copyDone) adapted to an
     * artifact multiple JVMs may race to create. A `dir` left behind
     * WITHOUT the marker is torn down and rebuilt ONLY when it carries
     * the graft ownership sentinel (stamped into every staging dir

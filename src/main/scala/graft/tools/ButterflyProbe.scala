@@ -24,14 +24,9 @@ object ButterflyProbe {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = Tables.pinDialect(Tables.localSession("graft-bfprobe", cpus))
 
-    val meter = new graft.GroupedShuffleListener
-    spark.sparkContext.addSparkListener(meter)
+    val meter = graft.GroupedShuffleListener.attach(spark)
     def timed(label: String)(f: => Long): Unit = {
-      System.gc()
-      val b = meter.settled(""); val t0 = System.nanoTime()
-      val n = f
-      val sec = (System.nanoTime() - t0) / 1e9
-      val mb = (meter.settled("") - b) / 1e6
+      val (n, sec, mb) = meter.timed(f)
       println(f"[bfprobe] $label%-34s $sec%6.2f s  $mb%8.1f MB  rows=$n")
     }
 

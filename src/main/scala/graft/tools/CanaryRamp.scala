@@ -5,7 +5,7 @@ import graft.{Bench, Tables}
 /** Measurement-tooling probe for the bench canary's own JIT ramp: runs
   * the exact Bench.canaryProbe checkpoint N times back-to-back on an
   * idle box and prints each reading, so the canary warm-up policy in
-  * Bench.main rests on a measured convergence curve rather than a
+  * Bench.Canary rests on a measured convergence curve rather than a
   * guess (round 13: two full sweeps agreed to 0.03% on cold total
   * while the canary read 0.19 s at start vs 0.09 s at end — drift 2.2
   * reported on a provably steady box).
@@ -18,7 +18,7 @@ object CanaryRamp {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = Tables.pinDialect(Tables.localSession("graft-canaryramp", cpus))
     for (i <- 1 to n)
-      println(f"[canary-ramp] $i%3d ${Bench.probeForRampTool(spark)}%.4f")
+      println(f"[canary-ramp] $i%3d ${Bench.canaryProbe(spark)}%.4f")
     spark.stop()
   }
 }

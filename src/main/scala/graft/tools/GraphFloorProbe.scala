@@ -2,11 +2,13 @@ package graft.tools
 
 import org.apache.spark.sql.functions._
 
-/** VERDICT r18 #6: the kcore/labelprop analogue of [[PagerankProbe]] —
-  * times each graph query's operator at 0..3 iterations on a warm JVM,
-  * so iters=0 isolates the shared edge-derivation + cache-
-  * materialization floor (lineitem⋈orders distinct + persist + node
-  * count) and the deltas give the per-round cost. All three operators
+/** Attribution probe for the graph queries' warm walls (VERDICT r17
+  * #4 for pagerank, r18 #6 for kcore/labelprop): times each graph
+  * query's operator at 0..3 iterations on a warm JVM, so iters=0
+  * isolates the shared edge-derivation + cache-materialization floor
+  * (lineitem⋈orders distinct + persist + node count) and the deltas
+  * give the per-round cost; `op=pagerank` lines are the pagerank
+  * ladder. All three operators
   * already persist the derived edge table once per run (within-query
   * derivation reuse), so what this probe settles is whether the warm
   * walls are that shared floor or per-round work. Measurement tooling

@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.Tables
+import graft.{Bench, GroupedShuffleListener, Tables}
 import graft.operators.{Butterfly, LabelPropagation, PageRank}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -44,28 +44,6 @@ import org.apache.spark.sql.functions._
   */
 object GraphStress {
 
-  /** One shuffle-write meter per rung JVM — the shared
-    * [[graft.GroupedShuffleListener]] read through its settle spin
-    * (group "": every task), and the GC'd timed wrapper (explicit
-    * GC first: at multi-GB shuffle volumes accumulated heap debt
-    * dominates run-to-run variance — 52.6 vs 98 s observed for an
-    * identical plan; same discipline as the bench canary). Shared by
-    * all three entry points so the settle heuristic can never drift
-    * between rungs. */
-  private final class ShuffleMeter(
-      spark: org.apache.spark.sql.SparkSession) {
-    private val listener = new graft.GroupedShuffleListener
-    spark.sparkContext.addSparkListener(listener)
-    /** (result, seconds, shuffle-write MB) for one GC'd run. */
-    def timed[A](f: => A): (A, Double, Double) = {
-      System.gc()
-      val b = listener.settled(""); val t0 = System.nanoTime()
-      val r = f
-      val sec = (System.nanoTime() - t0) / 1e9
-      (r, sec, (listener.settled("") - b) / 1e6)
-    }
-  }
-
   def main(args: Array[String]): Unit = {
     if (args.headOption.contains("dense")) { denseMain(args.drop(1)); return }
     if (args.headOption.contains("triangles")) {
@@ -104,17 +82,12 @@ object GraphStress {
     // shuffle-write bytes per stage-block (VERDICT r8 #6): the stress
     // table must show vp SHUFFLE growing ~linearly with edges, not just
     // wedge counts — shuffle is the number that grows 1000x at 100 TB
-    val meter = new ShuffleMeter(spark)
-    def timed[A](f: => A): (A, Double) = {
-      val (r, sec, _) = meter.timed(f); (r, sec)
-    }
-    def timedWithShuffle[A](f: => A): (A, Double, Double) = meter.timed(f)
+    val meter = GroupedShuffleListener.attach(spark)
 
-    // same canary stamp as Bench / RelStress.sweep (VERDICT r12 #7):
-    // one checkpoint before the ladder, one after, so cross-round
-    // octave comparisons carry their own contention evidence
-    graft.Bench.canaryProbe(spark) // JIT warm-up, untimed
-    val canaryStart = graft.Bench.canaryProbe(spark)
+    // the registry sweeps' canary (VERDICT r12 #7): started before the
+    // ladder, read again after it, so cross-round octave comparisons
+    // carry their own contention evidence
+    val canary = new Bench.Canary(spark)
     val lines = scales.map { k =>
       val e = scaled(k).cache()
       val nEdges = e.count()
@@ -125,14 +98,14 @@ object GraphStress {
       // bipartite one-id-space encoding, as rel_graph_butterfly_vp
       val enc = e.select((col("c") * 2).as("src"),
         (col("s") * 2 + 1).as("dst"))
-      val (vpWedges, wedgeSec) =
-        timed(Butterfly.wedges(enc, "src", "dst").count())
+      val (vpWedges, wedgeSec, _) =
+        meter.timed(Butterfly.wedges(enc, "src", "dst").count())
       val (nVerts, vpSec, vpShuffleMb) =
-        timedWithShuffle(Butterfly.perVertexCounts(enc, "src", "dst").count())
+        meter.timed(Butterfly.perVertexCounts(enc, "src", "dst").count())
       val und = enc.union(enc.select(col("dst").as("src"),
         col("src").as("dst")))
-      val (_, prSec) = timed(PageRank.run(und, 3).count())
-      val (_, lpaSec) = timed(LabelPropagation.run(und, 3).count())
+      val (_, prSec, _) = meter.timed(PageRank.run(und, 3).count())
+      val (_, lpaSec, _) = meter.timed(LabelPropagation.run(und, 3).count())
       // drop THIS scale's butterfly caches (undirected adjacency +
       // bounded wedge/pair entries) before the next, larger scale is
       // measured — accumulated storage from earlier scales would
@@ -146,14 +119,12 @@ object GraphStress {
         f"bf_verts=$nVerts pagerank_sec=$prSec%.1f lpa_sec=$lpaSec%.1f")
       s"""{"scale":$k,"edges":$nEdges,"naive_wedges":$naiveWedges,""" +
         s""""vp_wedges":$vpWedges,"vp_sec":$vpSec,""" +
-        f""""vp_shuffle_mb":$vpShuffleMb%.1f,"bf_verts":$nVerts,""" +
+        f""""vp_shuffle_mb":$vpShuffleMb%.6f,"bf_verts":$nVerts,""" +
         s""""pagerank_sec":$prSec,"lpa_sec":$lpaSec}"""
     }
-    val canaryEnd = graft.Bench.canaryProbe(spark)
-    val drift = canaryStart.max(canaryEnd) / canaryStart.min(canaryEnd)
-    println(s"""{"metric":"graphstress","canary":""" +
-      f"""[$canaryStart%.3f,$canaryEnd%.3f],"canary_drift":$drift%.3f,""" +
-      s""""anchor_eligible":${drift <= 1.15},""" +
+    canary.checkpoint()
+    println(s"""{"metric":"graphstress",""" +
+      s"""${Bench.canaryFields(canary.readings, clean = true)},""" +
       s""""scales":[${lines.mkString(",")}]}""")
     spark.stop()
   }
@@ -198,21 +169,20 @@ object GraphStress {
       .cache()
     val nEdges = e.count()
 
-    val meter = new ShuffleMeter(spark)
-    def timedShuffle[A](f: => A): (A, Double, Double) = meter.timed(f)
+    val meter = GroupedShuffleListener.attach(spark)
     spark.range(1000000).selectExpr("sum(id)").collect()
 
     // adaptive default: tier-1 bound must already pick windowed here
     val (nAdaptive, adSec, adMb) =
-      timedShuffle(Butterfly.perVertexCounts(e, "src", "dst").count())
+      meter.timed(Butterfly.perVertexCounts(e, "src", "dst").count())
     val (_, adWarmSec, adWarmMb) =
-      timedShuffle(Butterfly.perVertexCounts(e, "src", "dst").count())
+      meter.timed(Butterfly.perVertexCounts(e, "src", "dst").count())
     // forced broadcast: lift both tiers so the probe materializes and
     // broadcasts the wedge-sized pair table — the measured collapse
     spark.conf.set(Butterfly.ProbePairBoundConf, "1000000000000")
     spark.conf.set(Butterfly.BroadcastPairLimitConf, "1000000000000")
     val (nForced, bcSec, bcMb) =
-      try timedShuffle(Butterfly.perVertexCounts(e, "src", "dst").count())
+      try meter.timed(Butterfly.perVertexCounts(e, "src", "dst").count())
       finally {
         spark.conf.unset(Butterfly.ProbePairBoundConf)
         spark.conf.unset(Butterfly.BroadcastPairLimitConf)
@@ -277,11 +247,8 @@ object GraphStress {
       intra.unionAll(hubs).unionAll(hubhub)
     }
 
-    val meter = new ShuffleMeter(spark)
-    def timedShuffle[A](f: => A): (A, Double, Double) = meter.timed(f)
-
-    graft.Bench.canaryProbe(spark) // JIT warm-up, untimed
-    val canaryStart = graft.Bench.canaryProbe(spark)
+    val meter = GroupedShuffleListener.attach(spark)
+    val canary = new Bench.Canary(spark)
     val lines = scales.map { k =>
       val b = blocksBase * k
       val e = fixture(b).cache()
@@ -292,9 +259,9 @@ object GraphStress {
         .agg(sum(expr("deg * (deg - 1) div 2"))).head().getLong(0)
       val orientedWedges =
         Triangles.orientedWedgeCount(e).head().getLong(0)
-      val (nTri, coldSec, coldMb) = timedShuffle(
+      val (nTri, coldSec, coldMb) = meter.timed(
         Triangles.globalFromCanonical(e).head().getLong(0))
-      val (_, warmSec, warmMb) = timedShuffle(
+      val (_, warmSec, warmMb) = meter.timed(
         Triangles.globalFromCanonical(e).head().getLong(0))
       val expected = 696L * b + 120
       require(nTri == expected,
@@ -307,14 +274,12 @@ object GraphStress {
       s"""{"scale":$k,"blocks":$b,"edges":$nEdges,""" +
         s""""naive_wedges":$naiveWedges,""" +
         s""""oriented_wedges":$orientedWedges,"triangles":$nTri,""" +
-        f""""cold_sec":$coldSec%.1f,"cold_mb":$coldMb%.1f,""" +
-        f""""warm_sec":$warmSec%.1f,"warm_mb":$warmMb%.1f}"""
+        f""""cold_sec":$coldSec%.1f,"cold_mb":$coldMb%.6f,""" +
+        f""""warm_sec":$warmSec%.1f,"warm_mb":$warmMb%.6f}"""
     }
-    val canaryEnd = graft.Bench.canaryProbe(spark)
-    val drift = canaryStart.max(canaryEnd) / canaryStart.min(canaryEnd)
-    println(s"""{"metric":"tristress","canary":""" +
-      f"""[$canaryStart%.3f,$canaryEnd%.3f],"canary_drift":$drift%.3f,""" +
-      s""""anchor_eligible":${drift <= 1.15},""" +
+    canary.checkpoint()
+    println(s"""{"metric":"tristress",""" +
+      s"""${Bench.canaryFields(canary.readings, clean = true)},""" +
       s""""scales":[${lines.mkString(",")}]}""")
     spark.stop()
   }

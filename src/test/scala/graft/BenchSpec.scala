@@ -47,6 +47,16 @@ class BenchSpec extends AnyFunSuite with SparkTestSession {
     assert(n.get("warm_shuffle_mb").get("q_ok_fast").asDouble() === 2.25)
   }
 
+  test("warm_shuffle_mb keeps six decimals, so a 1% change at fixture scale shows") {
+    // two decimals printed 0.38 or 0.37 for a query whose warm shuffle
+    // is 0.374739 MB on every run
+    val (f, _) = Bench.renderLines(
+      Seq(("rel_orc_roundtrip", Right(1.0), Right(0.5), 0.374739)), "/tmp/sf")
+    assert(f.contains("\"warm_shuffle_mb\":{\"rel_orc_roundtrip\":0.374739}"))
+    assert(mapper.readTree(f).get("warm_shuffle_mb")
+      .get("rel_orc_roundtrip").asDouble() === 0.374739)
+  }
+
   test("full line's three per-query maps cover one identical key set (schema contract)") {
     // VERDICT r13 #7: cold (`queries`), `warm` and `warm_shuffle_mb`
     // must ship EVERY round over the SAME keys — a round whose full

@@ -55,8 +55,9 @@ class GroupedShuffleSpec extends AnyFunSuite with SparkTestSession {
   }
 
   test("without a bench group, group \"\" bills every task") {
-    // the stress harnesses and tools.Profile never set a "bench:" job
-    // group; "" must then read what a global task-end counter reads.
+    // the graph ladders, the probes and tools.Profile never set a
+    // "bench:" job group; "" must then read what a global task-end
+    // counter reads.
     // The counter is registered FIRST: the bus hands each event to its
     // listeners in registration order, so once `listener` has settled
     // the counter has seen every event too.

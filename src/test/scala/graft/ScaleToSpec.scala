@@ -10,9 +10,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * remapped keys DISJOINT (so fact-fact and windowed joins fan out
   * linearly, never across replicas), preserve per-user behavior
   * (event-time spans unshifted), and leave dimension tables
-  * byte-identical. A silent violation — overlapping key ranges, a
-  * shifted clock — would turn the sweeps' "linear growth" readings
-  * into fixture artifacts. */
+  * byte-identical, whether a table is one file or a directory. A
+  * silent violation — overlapping key ranges, a shifted clock — would
+  * turn the sweeps' "linear growth" readings into fixture artifacts. */
 class ScaleToSpec extends AnyFunSuite with SparkTestSession {
 
   private val src = "/root/testdata/sf0.001"
@@ -125,6 +125,31 @@ class ScaleToSpec extends AnyFunSuite with SparkTestSession {
     assert(!java.nio.file.Files.exists(m0),
       "the old vintage's sentinel must be dropped on regeneration")
     assert(marker() != m0, "the new sentinel must carry the new vintage")
+    Tables.deleteRecursively(srcCopy.toString)
+    Tables.deleteRecursively(dir)
+  }
+
+  test("a directory-form dimension table passes through whole, also over a previous copy") {
+    // Spark writes tables as directories of part files (a scaled copy's
+    // own orders.parquet is one): copying only the top-level entry left
+    // an EMPTY directory, and a copy onto an existing directory threw
+    val srcCopy = java.nio.file.Files
+      .createTempDirectory("graft-scaleto-dirform-src-")
+    val listing = java.nio.file.Files.list(java.nio.file.Paths.get(src))
+    try listing.forEach(p => java.nio.file.Files.copy(p,
+      srcCopy.resolve(p.getFileName.toString)))
+    finally listing.close()
+    java.nio.file.Files.delete(srcCopy.resolve("customer.parquet"))
+    spark.read.parquet(s"$src/customer.parquet").repartition(2)
+      .write.parquet(s"$srcCopy/customer.parquet")
+    val n0 = Tables.load(spark, src, "customer").count()
+    assert(n0 > 0)
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft-scaleto-dirform-").toString
+    RelStress.scaleTo(spark, srcCopy.toString, dir, scale = 2, cpus = 4)
+    assert(Tables.load(spark, dir, "customer").count() == n0)
+    RelStress.scaleTo(spark, srcCopy.toString, dir, scale = 3, cpus = 4)
+    assert(Tables.load(spark, dir, "customer").count() == n0)
     Tables.deleteRecursively(srcCopy.toString)
     Tables.deleteRecursively(dir)
   }

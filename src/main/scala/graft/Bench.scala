@@ -99,7 +99,7 @@ object Bench {
     // ad-hoc A/B knob for the streaming state-partition sizing (see
     // StreamingQueries.runToMemory); unset = the queries' default
     sys.env.get("SPARK_GRAFT_STATE_PARTS")
-      .foreach(spark.conf.set("spark.graft.stream.statePartitions", _))
+      .foreach(spark.conf.set(GraftConf.StreamStatePartitions.name, _))
     // JIT/session warmup: exercise codegen, shuffle, and the parquet
     // reader once so the first timed query isn't billed for startup
     spark.range(1000000).selectExpr("sum(id)").collect()
@@ -178,9 +178,10 @@ object Bench {
     // the line's n_queries says so.
     val prefixes = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
+    val confs = GraftConf.nonDefaults(spark) // a malformed key fails here
     val (results, canaries) = sweep(spark, sfDir,
       registry(n => prefixes.forall(_.exists(n.startsWith))))
-    val (full, compact) = renderLines(results, sfDir, canaries)
+    val (full, compact) = renderLines(results, sfDir, canaries, confs = confs)
     // Full detail first (useful when reading the whole log, and persisted
     // to a file), then a COMPACT line LAST: the harness captures only the
     // final ~2000 chars of output, so the parseable line must be short
@@ -571,7 +572,9 @@ object Bench {
     *
     * `metric` names the record ("total" for the bench; the stress
     * harnesses name their sweep, e.g. "relstress_total") and `scale`,
-    * when given, stamps a stress sweep's replica factor.
+    * when given, stamps a stress sweep's replica factor. `confs` is
+    * [[GraftConf.nonDefaults]] of the swept session, carried by the full
+    * line only (the compact line must fit the driver's tail window).
     *
     * SCHEMA CONTRACT (VERDICT r13 #7 — identical keys every round, so
     * cross-round per-query diffs never need archaeology): the FULL line
@@ -581,12 +584,13 @@ object Bench {
     * plus ALL THREE per-query maps over the same key set —
     * `queries` (cold seconds; -1 on error), `warm` (warm seconds; -1 on
     * error) and `warm_shuffle_mb` (warm-run shuffle write MB) — and
-    * `errors`. The COMPACT line (the driver's tail-window capture)
+    * `errors` and `confs`. The COMPACT line (the driver's tail-window capture)
     * carries the same head plus only the 10 slowest cold. BenchSpec
     * pins the three-map symmetry. */
   private[graft] def renderLines(results: Seq[Res], sfDir: String,
       canaries: Seq[Double] = Nil, metric: String = "total",
-      scale: Option[Int] = None): (String, String) = {
+      scale: Option[Int] = None,
+      confs: Seq[(String, String)] = Nil): (String, String) = {
     def jStr(s: String) = Json.str(s)
     def secs(sel: Res => Either[String, Double]) =
       results.map(r => jStr(r._1) + ":" + sel(r).fold(_ => "-1", _.toString))
@@ -607,8 +611,10 @@ object Bench {
     val canary = canaryFields(canaries, results.nonEmpty && errCount == 0)
     val head = s""""metric":${jStr(metric)},"value":$total,"unit":"sec","cold_total":$total,"warm_total":$warmTotal,"n_queries":${results.size},"n_succeeded":${ok.size},"n_errors":$errCount,$canary,"sf":${jStr(sfDir)}""" +
       scale.fold("")(k => s""","scale":$k""")
+    val confsJson = confs.map { case (k, v) => jStr(k) + ":" + jStr(v) }
+      .mkString("{", ",", "}")
     val full =
-      s"""{$head,"queries":$qs,"warm":$warmQs,"warm_shuffle_mb":$shuffleQs,"errors":$errs}"""
+      s"""{$head,"queries":$qs,"warm":$warmQs,"warm_shuffle_mb":$shuffleQs,"errors":$errs,"confs":$confsJson}"""
     val slowest = ok.sortBy(-_._2.getOrElse(0.0)).take(10)
       .map(r => jStr(r._1) + ":" + f"${r._2.getOrElse(0.0)}%.3f").mkString("{", ",", "}")
     // bounded: ≤3 errors at ≤60 chars each, so the line stays under the window

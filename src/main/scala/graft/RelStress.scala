@@ -161,8 +161,10 @@ object RelStress {
     * named `metric` and stamped with the replica factor `scale`. */
   def sweep(spark: SparkSession, dir: String,
       prefix: String, metric: String, scale: Int): Unit = {
+    val confs = GraftConf.nonDefaults(spark) // a malformed key fails here
     val (results, canaries) =
       Bench.sweep(spark, dir, Bench.registry(_.startsWith(prefix)))
-    println(Bench.renderLines(results, dir, canaries, metric, Some(scale))._1)
+    println(Bench.renderLines(results, dir, canaries, metric, Some(scale),
+      confs)._1)
   }
 }

@@ -116,10 +116,10 @@ object StressSmoke {
     // n·k + in-cell candidates ~ n²/k balance at k ∝ √n, so td_ann_ivf
     // and the td_knn_graph_ann build scale n^1.5, never fixed-k n².
     // Bench-only conf, same contract as queryIdBound below.
-    spark.conf.set(BenchConfs.IvfCells,
+    spark.conf.set(GraftConf.AnnIvfCells.name,
       math.max(16, math.round(math.sqrt(nVecs * scale / 2.0))).toString)
     if (mode == "fixedq") {
-      spark.conf.set(BenchConfs.QueryIdBound, nVecs.toString)
+      spark.conf.set(GraftConf.AnnQueryIdBound.name, nVecs.toString)
       RelStress.sweep(spark, out, "td_ann_", "stress_fixedq_total", scale)
     } else {
       // td_semdedup's quantizer re-trains as the corpus grows; cell
@@ -128,7 +128,7 @@ object StressSmoke {
       // nlist=√n sizing), so BOTH the assignment and the within-cell
       // pair term grow as n^1.5, never the fixed-k n² pair blow-up.
       // Bench-only conf, same contract as queryIdBound above.
-      spark.conf.set(BenchConfs.SemdedupCells,
+      spark.conf.set(GraftConf.SemdedupCells.name,
         math.max(8, math.round(8 * math.sqrt(scale.toDouble))).toString)
       // the brute-force n² kNN members (td_knn_graph_stats, purity,
       // ann_recall) run in their documented fixed-sample diagnostic
@@ -136,7 +136,7 @@ object StressSmoke {
       // the full-corpus member in the sweep is td_knn_graph_ann, which
       // never reads this bound
       if (scale > 10)
-        spark.conf.set(BenchConfs.NodeBound, nVecs.toString)
+        spark.conf.set(GraftConf.KnnNodeBound.name, nVecs.toString)
       // optional 5th arg: registry-name prefix restricting the sweep
       // (e.g. `td_semdedup` for a single-query rung). Totals from a
       // filtered run are not family-comparable; the metric says so —

@@ -1,6 +1,6 @@
 package graft.beacon
 
-import graft.Tables
+import graft.{GraftConf, Tables}
 import org.apache.spark.sql.SparkSession
 
 /** Argument-compatible CLI for the two reference commands
@@ -87,7 +87,7 @@ object BeaconCli {
     // heap where 7-at-a-time OOMs — and is no slower at any size (the
     // jobs pipeline through the pool). Override via conf if needed;
     // read first, so a bad value fails before any work.
-    val concurrency = sinkConcurrency(spark)
+    val concurrency = GraftConf.SinkConcurrency(spark)
     val outputs = PrepareCalls(PrepareCalls.fromCsv(spark, callsPath), users)
     outputs.base.count() // materialize the shared cache once, up front
     val pool = Executors.newFixedThreadPool(concurrency)
@@ -98,15 +98,5 @@ object BeaconCli {
       }
       Await.result(Future.sequence(writes), Duration.Inf)
     } finally pool.shutdown()
-  }
-
-  /** `spark.graft.sink.concurrency`, default 3. Anything but an integer
-    * >= 1 fails with a message naming the key and the value. */
-  private def sinkConcurrency(spark: SparkSession): Int = {
-    val key = "spark.graft.sink.concurrency"
-    spark.conf.getOption(key).fold(3) { v =>
-      v.trim.toIntOption.filter(_ >= 1).getOrElse(throw new IllegalArgumentException(
-        s"$key must be an integer >= 1; got '$v'"))
-    }
   }
 }

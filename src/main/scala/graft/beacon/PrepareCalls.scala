@@ -94,19 +94,14 @@ object PrepareCalls {
     * and sort would run as one task (found at the 5M-row PerfSmoke
     * scale: single-task sorts/windows OOM'd). The base is a one-shot
     * staging materialization read nine times, not an analytics working
-    * set, so it persists DISK_ONLY by default: memory caching a multi-GB
+    * set, so it persists DISK_ONLY: memory caching a multi-GB
     * wide-string base fills the storage pool while every core still
     * holds the columnar cache's transient batch builders, and that
     * unaccounted-for concurrency gap OOM'd an 8 g heap at the 20M-row
     * scale — DISK_ONLY streams compressed batches straight to local disk
     * (page-cache-fast on re-read) with bounded heap regardless of input
-    * size. Override with `spark.graft.base.storage` (any
-    * `StorageLevel.fromString` name) when the deployment's memory
-    * profile allows a hotter cache. */
+    * size. */
   def base(canonical: DataFrame): DataFrame = {
-    val spark = canonical.sparkSession
-    val storage = org.apache.spark.storage.StorageLevel.fromString(
-      spark.conf.getOption("spark.graft.base.storage").getOrElse("DISK_ONLY"))
     canonical
       .filter(truthy(col("latest_attempt_date")))
       .repartition(basePartitions(canonical))
@@ -114,7 +109,7 @@ object PrepareCalls {
       .withColumn("latest_attempt_date", parseDate(col("latest_attempt_date")))
       .withColumn("created_at", col("latest_attempt_date"))
       .withColumn("updated_at", col("latest_attempt_date"))
-      .persist(storage)
+      .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
   }
 
   /** The base's partition count: ceil(bytes / maxSplitBytes), where bytes

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.GraftConf
 import graft.plans.DeferredBuild
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.AttributeReference
@@ -82,26 +83,20 @@ import org.apache.spark.storage.StorageLevel
   */
 object Butterfly {
 
-  /** Probe tier: run the exact pair-count probe only when the cheap
-    * dominated-edge bound proves the pair table under this many rows.
-    * The same bound caps the WEDGE rows at 2× this value, and the probe
-    * persists both the wedge set and the pair table — so the limit is
-    * also the cache-size commitment (default: ≤32M wedge rows ≈ ~800 MB
-    * executor storage). 0 disables the probe → always the windowed
-    * shape, which skips the wedge/pair caches (the O(2E) undirected
-    * edge set is still persisted by [[adjacency]] in every regime). */
-  val ProbePairBoundConf = "spark.graft.butterfly.probePairBound"
-  val DefaultProbePairBound = 16000000L
-
-  /** Broadcast tier: join the wedge set back against the pair table as
-    * a broadcast when its EXACT count is under this (4M rows ≈ ~100 MB
-    * broadcast — small enough for every executor, big enough to cover
-    * real sparse graphs). */
-  val BroadcastPairLimitConf = "spark.graft.butterfly.broadcastPairLimit"
-  val DefaultBroadcastPairLimit = 4000000L
-
-  private def confLong(df: DataFrame, key: String, dflt: Long): Long =
-    df.sparkSession.conf.getOption(key).map(_.toLong).getOrElse(dflt)
+  // Probe tier (GraftConf.ButterflyProbePairBound): run the exact
+  // pair-count probe only when the cheap dominated-edge bound proves the
+  // pair table under this many rows. The same bound caps the WEDGE rows
+  // at 2× this value, and the probe persists both the wedge set and the
+  // pair table — so the limit is also the cache-size commitment
+  // (default: ≤32M wedge rows ≈ ~800 MB executor storage). 0 disables
+  // the probe → always the windowed shape, which skips the wedge/pair
+  // caches (the O(2E) undirected edge set is still persisted by
+  // [[adjacency]] in every regime).
+  //
+  // Broadcast tier (GraftConf.ButterflyBroadcastPairLimit): join the
+  // wedge set back against the pair table as a broadcast when its EXACT
+  // count is under this (4M rows ≈ ~100 MB broadcast — small enough for
+  // every executor, big enough to cover real sparse graphs).
 
   /** Persisted-entry registry, keyed by the canonicalized undirected-
     * edge plan (one key per distinct edge set): every DataFrame this
@@ -161,10 +156,9 @@ object Butterfly {
     (String, LogicalPlan, String), DataFrame]()
 
   private def decisionConfs(edges: DataFrame): String =
-    Seq(ProbePairBoundConf, BroadcastPairLimitConf,
-      "spark.graft.pagerank.broadcastNodeLimit")
-      .map(k => edges.sparkSession.conf.getOption(k).getOrElse(""))
-      .mkString("|")
+    Seq(GraftConf.ButterflyProbePairBound,
+      GraftConf.ButterflyBroadcastPairLimit, GraftConf.BroadcastNodeLimit)
+      .map(_(edges.sparkSession)).mkString("|")
 
   /** Get-or-build outside any map lock via the shared built-frame memo
     * ([[graft.Memo.getOrBuild]] — the builder runs multi-second driver
@@ -227,8 +221,7 @@ object Butterfly {
         .toSeq,
       label,
       () => {
-        val trace = spark.conf.getOption("spark.graft.deferred.timing")
-          .contains("true")
+        val trace = GraftConf.DeferredTiming(spark)
         val t0 = System.nanoTime()
         val inner = innerDf // mk: the sizing actions (memoized per closure)
         if (trace) System.err.println(
@@ -311,9 +304,7 @@ object Butterfly {
       und.groupBy("x").agg(count(lit(1)).as("d"))
         .select(col("x").as("id"), col("d")))
 
-    val limit = edges.sparkSession.conf
-      .getOption("spark.graft.pagerank.broadcastNodeLimit")
-      .map(_.toLong).getOrElse(PageRank.DefaultBroadcastNodeLimit)
+    val limit = GraftConf.BroadcastNodeLimit(edges.sparkSession)
     // one action: node count (degree-broadcast decision) + id/degree
     // ranges (packed-priority decision)
     val r = deg.agg(count(lit(1)).as("n"), min(col("id")).as("lo"),
@@ -442,8 +433,7 @@ object Butterfly {
       val key = undKey(edges, aCol, bCol)
       val adj = adjacency(edges, aCol, bCol)
       val wd = wedgesFrom(adj)
-      val probeBound =
-        confLong(edges, ProbePairBoundConf, DefaultProbePairBound)
+      val probeBound = GraftConf.ButterflyProbePairBound(edges.sparkSession)
       val pc =
         if (probeBound > 0 && dominatedWedgeBound(adj) / 2 <= probeBound)
           cachedIfCold(key, pairCounts(cachedIfCold(key, wd)))
@@ -466,10 +456,9 @@ object Butterfly {
       val key = undKey(edges, aCol, bCol)
       val adj = adjacency(edges, aCol, bCol)
       val wd = wedgesFrom(adj)
-      val probeBound =
-        confLong(edges, ProbePairBoundConf, DefaultProbePairBound)
+      val probeBound = GraftConf.ButterflyProbePairBound(edges.sparkSession)
       val bcastLimit =
-        confLong(edges, BroadcastPairLimitConf, DefaultBroadcastPairLimit)
+        GraftConf.ButterflyBroadcastPairLimit(edges.sparkSession)
       if (probeBound > 0 && dominatedWedgeBound(adj) / 2 <= probeBound) {
         // tier 2 — exact: materialize the wedge set AND its pair table
         // once (both bounded by tier 1 — the dominated-edge sum bounds

@@ -37,18 +37,13 @@ import org.apache.spark.storage.StorageLevel
   *
   * Fault tolerance: by default each round `localCheckpoint`s (fast,
   * executor-local — an executor loss fails the job). For long jobs set
-  * `spark.graft.cc.checkpointDir`: every
-  * `spark.graft.cc.checkpointInterval` rounds (default 5) the edge set is
-  * reliably `checkpoint()`ed to that directory and intermediate rounds
-  * keep recomputable lineage rooted at the last reliable checkpoint, so
-  * executor loss costs at most `interval` rounds of recompute instead of
-  * the whole job.
+  * `GraftConf.CcCheckpointDir`: every `GraftConf.CcCheckpointInterval`
+  * rounds (default 5) the edge set is reliably `checkpoint()`ed to that
+  * directory and intermediate rounds keep recomputable lineage rooted at
+  * the last reliable checkpoint, so executor loss costs at most
+  * `interval` rounds of recompute instead of the whole job.
   */
 object ConnectedComponents {
-
-  /** Salt-bucket count for the two-phase per-node min (0 disables the
-    * salted first phase). Overridable via `spark.graft.cc.saltBuckets`. */
-  val DefaultSaltBuckets = 8
 
   /** (id, label = component-minimum id) for every node incident to an
     * edge. Input edges are undirected; self-loops and duplicates are
@@ -57,11 +52,11 @@ object ConnectedComponents {
   def labels(edges: DataFrame, srcCol: String = "src",
       dstCol: String = "dst", maxIterations: Int = 64): DataFrame = {
     val spark = edges.sparkSession
-    val salt = spark.conf
-      .get("spark.graft.cc.saltBuckets", DefaultSaltBuckets.toString).toInt
-    val ckDir = spark.conf.getOption("spark.graft.cc.checkpointDir")
-    val ckInterval = math.max(1,
-      spark.conf.get("spark.graft.cc.checkpointInterval", "5").toInt)
+    // salt buckets of the two-phase per-node min (0 disables the salted
+    // first phase)
+    val salt = graft.GraftConf.CcSaltBuckets(spark)
+    val ckDir = graft.GraftConf.CcCheckpointDir(spark)
+    val ckInterval = graft.GraftConf.CcCheckpointInterval(spark)
     ckDir.foreach(spark.sparkContext.setCheckpointDir)
 
     // Reliable-mode bookkeeping. A checkpoint-round frame is persisted

@@ -25,7 +25,7 @@ import org.apache.spark.storage.StorageLevel
   *    freshly-counted degree could otherwise resurrect it), never as a
   *    second O(edges) semi-join;
   *  - the survivor set is broadcast into the dst semi-join below
-  *    [[PageRank.DefaultBroadcastNodeLimit]] vertices, an ordinary
+  *    [[graft.GraftConf.BroadcastNodeLimit]] vertices, an ordinary
   *    hash join above (LPA's adaptive posture);
   *  - survivors are `localCheckpoint`ed EVERY round: referenced twice
   *    per round (the semi-join and the count join), so unbounded
@@ -56,9 +56,7 @@ object KCore {
     val nodes = base.select(col("src").as("id")).distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
 
-    val limit = edges.sparkSession.conf
-      .getOption("spark.graft.pagerank.broadcastNodeLimit")
-      .map(_.toLong).getOrElse(PageRank.DefaultBroadcastNodeLimit)
+    val limit = graft.GraftConf.BroadcastNodeLimit(edges.sparkSession)
     val small = nodes.count() <= limit
     def bcast(df: DataFrame) = if (small) broadcast(df) else df
 

@@ -22,7 +22,7 @@ import org.apache.spark.storage.StorageLevel
   *  - the O(edges) table is hash-partitioned by `src` once and cached,
   *    never reshuffled inside the loop;
   *  - the O(nodes) label table is broadcast into the per-iteration
-  *    join below the [[PageRank.DefaultBroadcastNodeLimit]] ceiling
+  *    join below the [[graft.GraftConf.BroadcastNodeLimit]] ceiling
   *    (checkpointed tables carry no size stats — same reasoning as
   *    PageRank), so the only corpus-sized shuffle per iteration is the
   *    (src, lbl) count, which map-side partials collapse to the
@@ -59,9 +59,7 @@ object LabelPropagation {
       .distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
 
-    val limit = edges.sparkSession.conf
-      .getOption("spark.graft.pagerank.broadcastNodeLimit")
-      .map(_.toLong).getOrElse(PageRank.DefaultBroadcastNodeLimit)
+    val limit = graft.GraftConf.BroadcastNodeLimit(edges.sparkSession)
     val small = nodes.count() <= limit
     def bcast(df: DataFrame) = if (small) broadcast(df) else df
 

@@ -25,7 +25,7 @@ import org.apache.spark.storage.StorageLevel
   *  - the edge set is hash-partitioned by `src` ONCE and cached — the
   *    O(edges) table is never reshuffled inside the loop;
   *  - the rank and degree tables are O(nodes): below
-  *    [[DefaultBroadcastNodeLimit]] they are broadcast into every
+  *    [[graft.GraftConf.BroadcastNodeLimit]] they are broadcast into every
   *    iteration join (necessary explicitly — the checkpointed rank
   *    table has no size stats, so Spark would otherwise plan shuffle
   *    joins), leaving exactly one shuffle per iteration; above it they
@@ -49,16 +49,6 @@ object PageRank {
     * directions. Duplicate edges count twice (multigraph semantics) —
     * `distinct()` upstream if that is not wanted.
     */
-  /** Node-count ceiling under which the O(nodes) rank/degree tables are
-    * broadcast into the per-iteration joins (overridable via
-    * `spark.graft.pagerank.broadcastNodeLimit`). A checkpointed rank
-    * table carries no size statistics, so without the hint Spark plans
-    * every iteration's rank join as a shuffle join regardless of actual
-    * size; below this limit the hint leaves ONE shuffle per iteration
-    * (the received-token aggregate). Above it, ranks genuinely may not
-    * fit an executor and the plain shuffle-join path is correct. */
-  val DefaultBroadcastNodeLimit = 5000000L
-
   /** Rounds between lineage-flattening localCheckpoints. */
   val CheckpointInterval = 5
 
@@ -88,9 +78,11 @@ object PageRank {
       .distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
 
-    val limit = edges.sparkSession.conf
-      .getOption("spark.graft.pagerank.broadcastNodeLimit")
-      .map(_.toLong).getOrElse(DefaultBroadcastNodeLimit)
+    // broadcast the rank/degree tables up to this many nodes: a
+    // checkpointed rank table has no size statistics, so without the hint
+    // every iteration's rank join plans as a shuffle join; above the
+    // limit ranks may not fit an executor and the shuffle join is right
+    val limit = graft.GraftConf.BroadcastNodeLimit(edges.sparkSession)
     // nodes is cached; this count also materializes the caches once
     val small = nodes.count() <= limit
     def bcast(df: DataFrame) = if (small) broadcast(df) else df

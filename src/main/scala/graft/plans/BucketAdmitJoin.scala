@@ -122,7 +122,7 @@ case class BucketAdmitJoinExec(left: SparkPlan, right: SparkPlan)
     // identical to the unsplit walk). A pathological mega-bucket past
     // executor heap completes where the unsplit walk OOMs
     // (BucketMegaStress, OPTIMIZATION_r19.md).
-    val chunkBytes = BucketAdmitJoinApi.chunkBytes(
+    val chunkBytes = graft.GraftConf.DedupBucketChunkBytes(
       org.apache.spark.sql.internal.SQLConf.get)
     left.execute().zipPartitions(right.execute()) { (li, ri) =>
       val lit = li.buffered
@@ -282,17 +282,4 @@ object BucketAdmitJoinApi {
     PlanShim.ofRows(probe.sparkSession,
       BucketAdmitJoin(probe.queryExecution.analyzed,
         existing.queryExecution.analyzed))
-
-  val ChunkBytesConf = "spark.graft.dedup.bucketChunkBytes"
-
-  /** The shuffled walk's existing-side chunk budget in encoded payload
-    * bytes (default 8 MB, see [[BucketAdmitJoinExec]]): an integer >= 1,
-    * anything else fails naming the key and the value. */
-  private[graft] def chunkBytes(
-      conf: org.apache.spark.sql.internal.SQLConf): Long = {
-    val v = conf.getConfString(ChunkBytesConf, "8388608")
-    v.trim.toLongOption.filter(_ >= 1).getOrElse(
-      throw new IllegalArgumentException(
-        s"$ChunkBytesConf must be an integer >= 1; got '$v'"))
-  }
 }

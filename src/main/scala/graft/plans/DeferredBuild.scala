@@ -142,8 +142,7 @@ object DeferredBuild {
 
   def memoizedOptimize(spark: SparkSession, logical: LogicalPlan)
       : LogicalPlan = {
-    val trace = spark.conf.getOption("spark.graft.deferred.timing")
-      .contains("true")
+    val trace = graft.GraftConf.DeferredTiming(spark)
     val t0 = System.nanoTime()
     val df = PlanShim.ofRows(spark, logical)
     val t1 = System.nanoTime()

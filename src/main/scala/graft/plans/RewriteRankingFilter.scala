@@ -28,8 +28,6 @@ import org.apache.spark.sql.catalyst.rules.Rule
   */
 object RewriteRankingFilterToTopK extends Rule[LogicalPlan] {
 
-  val ConfKey = "spark.graft.topk.rewrite"
-
   /** Extract k from the supported predicate shapes over `rn`. */
   private def limitFromCond(cond: Expression, rn: Attribute): Option[Int] =
     cond match {
@@ -45,7 +43,7 @@ object RewriteRankingFilterToTopK extends Rule[LogicalPlan] {
     }
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (!conf.getConfString(ConfKey, "true").toBoolean) return plan
+    if (!graft.GraftConf.TopkRewrite(conf)) return plan
     plan.transformUp {
     case p @ Project(projectList,
         Filter(cond, w @ Window(Seq(alias @ Alias(

@@ -114,11 +114,7 @@ case class TopKPerKeyExec(
     // inside the task from the EXECUTOR's own heap and task-slot count —
     // a driver-side Runtime.maxMemory / defaultParallelism would size
     // executor buffers from the wrong JVM's heap on a real cluster
-    val explicitBudget = conf.getConfString(
-      "spark.graft.topk.partialBudgetBytes", "").trim match {
-      case "" => None
-      case s => Some(s.toLong)
-    }
+    val explicitBudget = graft.GraftConf.TopkPartialBudgetBytes(conf)
     child.execute().mapPartitions { iter =>
       // heap/(slots*16), clamped to [8 MB, 64 MB] — the aggregate across
       // this JVM's concurrently-running tasks stays a bounded heap slice:

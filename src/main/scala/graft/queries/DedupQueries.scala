@@ -1,9 +1,10 @@
 package graft.queries
 
-import graft.{QueryDef, Tables}
+import graft.{GraftConf, QueryDef, Tables}
 import graft.functions.GraftFunctions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** Deduplication operators for the training-data pipeline layer
   * (SURVEY.md §7.1 step 9): exact, n-gram Jaccard, MinHash-LSH, SimHash,
@@ -36,8 +37,8 @@ object DedupQueries {
     * `spark.catalog.clearCache()` (the label MEMO below re-keys itself
     * by fingerprint, but plan-keyed caches cannot). */
   private def cachedIfCold(df: DataFrame): DataFrame =
-    if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-      df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    if (df.storageLevel == StorageLevel.NONE)
+      df.persist(StorageLevel.MEMORY_AND_DISK)
     else df
 
   /** DuckDB CTE prefix: distinct 3-shingle hashes (mod P), mirroring the
@@ -101,36 +102,29 @@ object DedupQueries {
     * The threshold is SESSION-DERIVED, never a local constant: idle-core
     * hiding is what makes small corpora favor recompute, so the
     * crossover scales with core count — gate on documents bytes ≥
-    * perCoreBytes × defaultParallelism (perCoreBytes from the rung
-    * study, overridable via `spark.graft.dedup.materializePerCoreBytes`;
-    * `spark.graft.dedup.materialize` = on/off forces either side for
-    * A/B). A size-listing error fails CLOSED (pathBytes -1 < any gate).
+    * perCoreBytes × defaultParallelism, perCoreBytes =
+    * `GraftConf.DedupMaterializePerCoreBytes` (0 forces the pass on,
+    * Long.MaxValue off). Its default is the round-19 StressSmoke rung
+    * study's crossover (OPTIMIZATION_r19.md §materialize-once; 32
+    * cores): recompute still won cold at the 50×/28.8 MB rung
+    * (minhash_lsh 12.5 vs 20.1 s), the checkpoint won at 100×/58.1 MB
+    * (87.2 vs 111.7 s, simhash a wash) and above — the default sits at
+    * the bracket midpoint, 1.34 MiB/core ≈ 43 MB on the study box. A
+    * size-listing error fails CLOSED (pathBytes -1 is below any gate).
     * Results are unchanged on both sides — localCheckpoint is
     * semantics-preserving and each query build re-materializes from the
-    * parquet inputs (nothing is reused across runs). */
+    * parquet inputs (nothing is reused across runs). A build calls this
+    * once and threads the answer to every subtree it shapes. */
   private[graft] def materializeContraction(s: SparkSession, dir: String)
-      : Boolean =
-    s.conf.getOption("spark.graft.dedup.materialize").getOrElse("auto") match {
-      case "on" => true
-      case "off" => false
-      case _ =>
-        val perCore = s.conf
-          .getOption("spark.graft.dedup.materializePerCoreBytes")
-          .map(_.toLong).getOrElse(DefaultMaterializePerCoreBytes)
-        Tables.pathBytes(s, s"$dir/documents.parquet") >=
-          perCore * s.sparkContext.defaultParallelism
-    }
+      : Boolean = {
+    val bytes = Tables.pathBytes(s, s"$dir/documents.parquet")
+    // divided, not multiplied: perCore × parallelism overflows a long
+    bytes >= 0 && bytes / s.sparkContext.defaultParallelism >=
+      GraftConf.DedupMaterializePerCoreBytes(s)
+  }
 
-  /** Crossover bytes-per-core for [[materializeContraction]], measured
-    * by the round-19 StressSmoke rung study (OPTIMIZATION_r19.md
-    * §materialize-once; 32 cores): recompute still won cold at the
-    * 50×/28.8 MB rung (minhash_lsh 12.5 vs 20.1 s), the checkpoint won
-    * at 100×/58.1 MB (87.2 vs 111.7 s, simhash a wash) and above —
-    * the default sits at the bracket midpoint, 1.34 MiB/core ≈ 43 MB
-    * on the 32-core study box. */
-  private[graft] val DefaultMaterializePerCoreBytes = 1400000L
-
-  private def shingleGroups(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
+  private[queries] def shingleGroups(s: SparkSession, dir: String,
+      mat: Boolean): (DataFrame, DataFrame) = {
     // digest = (md5, xxhash64, length): an md5 collision between distinct
     // texts would silently merge their rep groups (fabricating jaccard-1.0
     // pairs); requiring a SIMULTANEOUS collision of two unrelated hash
@@ -156,13 +150,11 @@ object DedupQueries {
     // shared across runs. `members` is checkpointed too ((doc_id, rep),
     // two longs/row): its digest scan of the corpus is otherwise
     // duplicated once per expansion join.
-    val repHs = if (materializeContraction(s, dir))
-      repHs0.localCheckpoint(false) else repHs0
+    val repHs = if (mat) repHs0.localCheckpoint(false) else repHs0
     val members0 = keyed.select(col("doc_id"), col("_dig"))
       .join(repHs.select(col("_dig"), col("doc_id").as("rep")), "_dig")
       .select(col("doc_id"), col("rep"))
-    val members = if (materializeContraction(s, dir))
-      members0.localCheckpoint(false) else members0
+    val members = if (mat) members0.localCheckpoint(false) else members0
     (repHs.select(col("doc_id"), col("hs")), members)
   }
 
@@ -170,8 +162,8 @@ object DedupQueries {
     * texts (rep level): band → bucket equi-join → exact verify.
     * Identical-text (within-group) pairs are jaccard 1.0 by construction
     * and handled at expansion time. */
-  private def minhashVerifiedRepPairs(sh: DataFrame,
-      persistPairs: Boolean = true): DataFrame = {
+  private[queries] def minhashVerifiedRepPairs(s: SparkSession, dir: String,
+      sh: DataFrame, mat: Boolean): DataFrame = {
     val sig = sh.select(col("doc_id"), minhashSig(col("hs"), 8).as("sig"))
     val bandArr = transform(sequence(lit(0), lit(3)), b =>
       concat_ws("_", b, element_at(col("sig"), b * 2 + 1),
@@ -187,15 +179,24 @@ object DedupQueries {
       .select(col("a_id"), col("b_id"),
         jaccard(col("a_hs"), col("b_hs")).as("jaccard"))
       .filter(col("jaccard") >= 0.5)
-    // persistPairs=false rides the materialize-once gate: a checkpointed
-    // `sh` makes this plan's canonical form unique PER BUILD (ExistingRDD
-    // identity), so cachedIfCold would persist a never-hit new copy every
-    // build — a storage leak with zero reuse. Above the gate each build
-    // recomputes the pair join from the checkpointed contraction instead
-    // (one linear band join; the corpus passes are already deduplicated
-    // by the checkpoint).
-    if (persistPairs) cachedIfCold(pairs) else pairs
+    // above the materialize-once gate (mat) nothing is persisted: a
+    // checkpointed `sh` makes this plan's canonical form unique PER BUILD
+    // (ExistingRDD identity), so a persist would cache a never-hit new
+    // copy every build — a storage leak with zero reuse. Above the gate
+    // each build recomputes the pair join from the checkpointed
+    // contraction instead (one linear band join; the corpus passes are
+    // already deduplicated by the checkpoint).
+    if (mat || pairs.storageLevel != StorageLevel.NONE) pairs
+    else {
+      persistedPairs.merge(memoKey(s, dir), List(pairs), _ ++ _)
+      pairs.persist(StorageLevel.MEMORY_AND_DISK)
+    }
   }
+
+  /** The pair tables persisted per [[memoKey]], so [[releaseMemos]] frees
+    * what the builds persisted even if the gate reads differently now. */
+  private val persistedPairs =
+    new java.util.concurrent.ConcurrentHashMap[String, List[DataFrame]]()
 
   /** All verified near-dup DOC pairs: rep-level pairs expanded to member
     * pairs across groups, plus the within-group pairs (identical sets,
@@ -203,9 +204,9 @@ object DedupQueries {
     * uncontracted machinery produces: band match and jaccard are
     * functions of `hs` alone. */
   private def minhashVerifiedPairs(s: SparkSession, dir: String): DataFrame = {
-    val (repHs, m) = shingleGroups(s, dir)
-    val cross = minhashVerifiedRepPairs(repHs,
-        persistPairs = !materializeContraction(s, dir))
+    val mat = materializeContraction(s, dir)
+    val (repHs, m) = shingleGroups(s, dir, mat)
+    val cross = minhashVerifiedRepPairs(s, dir, repHs, mat)
       .join(m.select(col("rep").as("a_id"), col("doc_id").as("x")), "a_id")
       .join(m.select(col("rep").as("b_id"), col("doc_id").as("y")), "b_id")
       .select(least(col("x"), col("y")).as("a_id"),
@@ -255,6 +256,11 @@ object DedupQueries {
   private def sessionId(s: SparkSession): String =
     org.apache.spark.sql.graft.SessionShim.sessionId(s)
 
+  /** `<sessionUUID>/<documents path>`: the key of this session's memos
+    * for the corpus under `dir`. */
+  private def memoKey(s: SparkSession, dir: String): String =
+    s"${sessionId(s)}/$dir/documents.parquet"
+
   /** Memoized [[computeDupClusterLabels]]: the label table is a
     * deterministic artifact of the corpus version, but computing it
     * runs the large-star/small-star loop with one driver ACTION and a
@@ -280,7 +286,7 @@ object DedupQueries {
     * the artifact a production pipeline would write between stages. */
   private def dupClusterLabels(s: SparkSession, dir: String): DataFrame = {
     val path = s"$dir/documents.parquet"
-    graft.Memo.memoized(labelsCache, s"${sessionId(s)}/$path",
+    graft.Memo.memoized(labelsCache, memoKey(s, dir),
         graft.Tables.pathFingerprint(s, path))(
       cachedIfCold(computeDupClusterLabels(s, dir)))(
       onEvict = _.unpersist(),
@@ -295,33 +301,25 @@ object DedupQueries {
     * unrelated caches). Blocking so storage is actually free on
     * return. */
   def releaseMemos(s: SparkSession, dir: String): Unit = {
-    val path = s"$dir/documents.parquet"
     // releaseMemo drops the entry AND its per-key monitor (VERDICT r11
     // #6) — a long-lived session releasing many corpora must not retain
     // one Object per key it ever memoized
-    graft.Memo.releaseMemo(labelsCache, s"${sessionId(s)}/$path")
+    graft.Memo.releaseMemo(labelsCache, memoKey(s, dir))
       .foreach(_.unpersist(blocking = true))
-    // same canonical-plan unpersist discipline as Butterfly: the lazy
-    // re-persist inside the builder materializes nothing before the
-    // unpersist drops the entry. Above the materialize gate nothing was
-    // persisted (see minhashVerifiedRepPairs) and the canonical-plan
-    // reconstruction could not match a checkpoint-built plan anyway, so
-    // the unpersist is skipped rather than persisting a fresh no-op copy.
-    if (!materializeContraction(s, dir))
-      minhashVerifiedRepPairs(shingleGroups(s, dir)._1)
-        .unpersist(blocking = true)
+    Option(persistedPairs.remove(memoKey(s, dir)))
+      .foreach(_.foreach(_.unpersist(blocking = true)))
   }
 
   private def computeDupClusterLabels(s: SparkSession, dir: String)
       : DataFrame = {
-    val (repHs, m) = shingleGroups(s, dir)
+    val mat = materializeContraction(s, dir)
+    val (repHs, m) = shingleGroups(s, dir, mat)
     // contraction keeps CC's input LINEAR in corpus size: within-group
     // edges collapse to the group node, so components form over distinct
     // texts; a group's rep id is its min doc_id, hence the
     // component-min label at rep level IS the component-min doc id
     val repLabels = graft.operators.ConnectedComponents.labels(
-      minhashVerifiedRepPairs(repHs,
-        persistPairs = !materializeContraction(s, dir)),
+      minhashVerifiedRepPairs(s, dir, repHs, mat),
       srcCol = "a_id", dstCol = "b_id")
     val sizes = m.groupBy(col("rep")).agg(count(lit(1)).as("_n"))
     // labeled nodes = docs incident to >=1 verified pair: members of a
@@ -554,7 +552,7 @@ object DedupQueries {
         |WHERE jaccard >= 0.5 ORDER BY a_id, b_id""".stripMargin) { (s, dir) =>
       // blocking key and jaccard are functions of the text → contract
       // identical texts, pair at rep level, expand (see shingleGroups)
-      val (repHs, m) = shingleGroups(s, dir)
+      val (repHs, m) = shingleGroups(s, dir, materializeContraction(s, dir))
       val blk = repHs
         .select(col("doc_id"), col("hs"), array_min(col("hs")).as("bkey"))
       val x = blk.select(col("doc_id").as("ra"), col("hs").as("a_hs"),
@@ -1182,8 +1180,7 @@ object DedupQueries {
         |SELECT c.vec_id, c.cell, d.vec_id IS NULL AS kept
         |FROM cv c LEFT JOIN dup d ON c.vec_id = d.vec_id
         |ORDER BY c.vec_id""".stripMargin) { (s, dir) =>
-      val k = graft.BenchConfs.intOpt(s, graft.BenchConfs.SemdedupCells)
-        .getOrElse(8)
+      val k = GraftConf.SemdedupCells(s)
       // the assignment subtree is referenced three times (both
       // self-join sides + the final projection); lazily localCheckpoint
       // it so the n x k distance evaluation — the query's dominant term

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{QueryDef, Tables}
+import graft.{GraftConf, QueryDef, Tables}
 import graft.functions.GraftFunctions._
 import graft.operators.Triangles
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -32,7 +32,7 @@ object SimilarityQueries {
     */
   private def isQueryVec(s: SparkSession, c: Column): Column = {
     val base = c % 50 === 0
-    graft.BenchConfs.longOpt(s, graft.BenchConfs.QueryIdBound)
+    GraftConf.AnnQueryIdBound(s)
       .map(b => base && c < lit(b)).getOrElse(base)
   }
 
@@ -49,7 +49,7 @@ object SimilarityQueries {
     * full-corpus kNN build at scale is [[annKnnEdges]] /
     * `td_knn_graph_ann`, which never honors this bound. */
   private def knnNodes(s: SparkSession, n: DataFrame): DataFrame =
-    graft.BenchConfs.longOpt(s, graft.BenchConfs.NodeBound)
+    GraftConf.KnnNodeBound(s)
       .map(b => n.filter(col("vec_id") < b)).getOrElse(n)
 
   /** IVF coarse-quantizer cell count, shared by td_ann_ivf and the
@@ -63,7 +63,7 @@ object SimilarityQueries {
     * in-cell candidate term grow as n^1.5, never a fixed-k n² pair
     * blow-up. */
   private def ivfCells(s: SparkSession): Int =
-    graft.BenchConfs.intOpt(s, graft.BenchConfs.IvfCells).getOrElse(16)
+    GraftConf.AnnIvfCells(s)
 
   /** IVF multi-probe count for the ANN kNN build.
     * `spark.graft.ann.probes` is BENCH-ONLY (ann.queryIdBound
@@ -75,7 +75,7 @@ object SimilarityQueries {
     * linear in the knob: candidates per query grow ∝ probes
     * (probes·n²/k pair volume), shuffle stays O(n·probes). */
   private def ivfProbes(s: SparkSession): Int =
-    graft.BenchConfs.intOpt(s, graft.BenchConfs.Probes).getOrElse(2)
+    GraftConf.AnnProbes(s)
 
   /** Directed exact cosine k-NN edges,
     * (q_id, q_label, n_id, n_label) — the brute-force baseline:
@@ -118,9 +118,7 @@ object SimilarityQueries {
       cells: Int): DataFrame = {
     val seeds = n.filter(col("vec_id") < cells)
       .select(col("vec_id").as("cid"), col("an").as("ca"))
-    val iters = graft.BenchConfs.intOpt(s, graft.BenchConfs.IvfTrain)
-      .getOrElse(0)
-    graft.operators.IvfIndex.lloydRefine(n, seeds, iters)
+    graft.operators.IvfIndex.lloydRefine(n, seeds, GraftConf.AnnIvfTrain(s))
   }
 
   /** The IVF multi-probe frame (vec_id, label, an, cell, rn): each
@@ -363,13 +361,11 @@ object SimilarityQueries {
     // 40-row codebook: out-of-range element_at = NULL adc_dist under
     // the non-ANSI dialect, i.e. well-formed garbage. Fail loudly
     // instead (review r15).
-    val nCodes = graft.BenchConfs.intOpt(s, graft.BenchConfs.PqCodes)
-      .getOrElse(10)
-    val pqIters = graft.BenchConfs.intOpt(s, graft.BenchConfs.PqTrain)
-      .getOrElse(0)
+    val nCodes = GraftConf.AnnPqCodes(s)
+    val pqIters = GraftConf.AnnPqTrain(s)
     require(nCodes <= 10 || pqIters > 0,
-      s"${graft.BenchConfs.PqCodes}=$nCodes exceeds the label codebook's " +
-        s"10-code cardinality; set ${graft.BenchConfs.PqTrain} > 0 (the " +
+      s"${GraftConf.AnnPqCodes.name}=$nCodes exceeds the label codebook's " +
+        s"10-code cardinality; set ${GraftConf.AnnPqTrain.name} > 0 (the " +
         "trained codebook is the only path past 10 codes)")
     // micro-unit vectors: exact integers in doubles
     val vd = Tables.load(s, dir, "embeddings")
@@ -394,7 +390,7 @@ object SimilarityQueries {
       .groupBy(col("label").as("code"))
       .agg(array_sort(collect_list(struct(col("pos"), col("cm")))).as("pc"))
       .select(col("code"), transform(col("pc"), p => p("cm")).as("cma"))
-    // `spark.graft.ann.pq.train` (BENCH-ONLY, BenchConfs contract —
+    // `spark.graft.ann.pq.train` (BENCH-ONLY, GraftConf contract —
     // the oracle-pinned default is the label%10 codebook above) swaps
     // in the unsupervised per-subspace k-means codebook; everything
     // downstream (encode, qdist, ADC) is shape-identical
@@ -1194,7 +1190,7 @@ object SimilarityQueries {
       // 100× rung). Bounded, cells follow the sample's own √(n/2)
       // optimum; unbounded (the correctness gate), ivfCells'
       // oracle-pinned default governs.
-      val sampleCells = graft.BenchConfs.longOpt(s, graft.BenchConfs.NodeBound)
+      val sampleCells = GraftConf.KnnNodeBound(s)
         .map(b => math.max(16L, math.round(math.sqrt(b.toDouble / 2))).toInt)
       val ann = annKnnEdges(s, nodes, cellsOverride = sampleCells)
         .select(col("q_id"), col("n_id"))

@@ -42,12 +42,6 @@ object StreamingQueries {
     * on a shared memory-sink table name. */
   private val runSeq = new AtomicInteger
 
-  /** Default state-partition count for every streaming run here (both
-    * harness paths below): tracks fixture state volume, not core count
-    * — see runToMemory's sizing note. One constant so the next
-    * retuning is one edit. */
-  private val DefaultStateParts = "4"
-
   /** Run `df` (a streaming frame) to completion under AvailableNow into
     * a memory sink; returns the sink table. The temp checkpoint dir is
     * removed by Spark on clean stop.
@@ -62,7 +56,7 @@ object StreamingQueries {
     * with every query flat-or-faster, including the RocksDB MapState
     * leg). The count should track state volume, not core count:
     * default 4 suits the fixture scale; production streams override
-    * `spark.graft.stream.statePartitions` to cluster scale. The
+    * `GraftConf.StreamStatePartitions` to cluster scale. The
     * session's global shuffle setting is restored afterwards (batch
     * queries keep their core-count sizing).
     *
@@ -76,12 +70,12 @@ object StreamingQueries {
     * today because the memory-sink table and downstream joins would
     * then live in different analyzer sessions. */
   /** Engine-vs-harness A/B knob (VERDICT r11 #1, extended r12 #4/#5):
-    * `spark.graft.stream.sink` routes every streaming run here through
+    * `GraftConf.StreamSink` routes every streaming run here through
     * an alternative sink leg. The full streaming plan — file source,
     * state machinery, micro-batch commit protocol — always runs; the
     * modes differ only in what happens to the emitted rows:
     *
-    *  - unset (correctness/default): memory sink (or the DSv2
+    *  - `memory` (unset; correctness): memory sink (or the DSv2
     *    committed store for the connector queries) — the oracle
     *    harness path, which collects every emitted row to the driver;
     *  - `noop`: Spark's noop sink — engine-only, rows dropped at the
@@ -105,7 +99,7 @@ object StreamingQueries {
     * committed tables separate state-machinery cost from harness-
     * collection cost; correctness runs never set the conf. */
   private def sinkMode(sess: SparkSession): String =
-    sess.conf.getOption("spark.graft.stream.sink").getOrElse("")
+    graft.GraftConf.StreamSink(sess)
 
   private def noopSink(sess: SparkSession): Boolean =
     sinkMode(sess) == "noop"
@@ -207,9 +201,8 @@ object StreamingQueries {
     val name = s"graft_stream_${runSeq.incrementAndGet()}"
     val sess = df.sparkSession
     val prev = sess.conf.get("spark.sql.shuffle.partitions")
-    val stateParts = sess.conf.getOption("spark.graft.stream.statePartitions")
-      .getOrElse(DefaultStateParts)
-    sess.conf.set("spark.sql.shuffle.partitions", stateParts)
+    val stateParts = graft.GraftConf.StreamStatePartitions(sess)
+    sess.conf.set("spark.sql.shuffle.partitions", stateParts.toLong)
     // `connector` only changes the DSv2 leg (runToGraftGen); for
     // memory-sink queries it means engine-only, same as noop
     val engineOnly = Set("noop", "connector").contains(sinkMode(sess))
@@ -324,9 +317,8 @@ object StreamingQueries {
     val sess = df.sparkSession
     graft.sources.GraftGen.committed.remove(table)
     val prev = sess.conf.get("spark.sql.shuffle.partitions")
-    val stateParts = sess.conf.getOption("spark.graft.stream.statePartitions")
-      .getOrElse(DefaultStateParts)
-    sess.conf.set("spark.sql.shuffle.partitions", stateParts)
+    val stateParts = graft.GraftConf.StreamStatePartitions(sess)
+    sess.conf.set("spark.sql.shuffle.partitions", stateParts.toLong)
     // Sink-mode A/B (see [[sinkMode]]): `noop` drops the connector
     // write with the sink (pure engine lower bound); `connector`
     // (VERDICT r12 #5) keeps the graftgen sink's committed-store write
@@ -355,7 +347,7 @@ object StreamingQueries {
       } finally deleteRecursively(ck)
     } finally sess.conf.set("spark.sql.shuffle.partitions", prev)
     val rows =
-      if (m.nonEmpty) Vector.empty
+      if (m != "memory") Vector.empty
       else graft.sources.GraftGen.committed.getOrDefault(table, Vector.empty)
     // Same lifetime discipline as runToMemory's sink views: the rows
     // are copied into the returned LOCAL dataset, so drop the store

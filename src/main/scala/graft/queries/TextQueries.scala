@@ -153,8 +153,9 @@ object TextQueries {
     * posture as ConnectedComponents. */
   private val CheckpointEvery = 10
 
-  /** Vocabulary row bound under which the merge loop runs DRIVER-SIDE
-    * (0 disables — always distributed). The distributed loop is 50
+  /** The merge loop runs DRIVER-SIDE while the vocabulary is within
+    * `GraftConf.BpeLocalVocabLimit` rows (0 disables — always
+    * distributed). The distributed loop is 50
     * sequential ~120 ms Spark jobs over a few-thousand-row vocab
     * (6-7 s cold, VERDICT r10 #2 backlog): each merge is inherently
     * sequential, so at small vocab the cost is pure job-scheduling
@@ -166,9 +167,6 @@ object TextQueries {
     * paths are bit-equal — pinned by BpeTrainSpec's dual-path property
     * sweep, incl. UTF-8-byte argmax tie-breaks on supplementary-plane
     * symbols. */
-  val LocalVocabLimitConf = "spark.graft.bpe.localVocabLimit"
-  val DefaultLocalVocabLimit = 1000000
-
   private[graft] def bpeTrainRaw(docs: DataFrame,
       numMerges: Int = TrainMerges)
       : (Seq[(Int, String, Long)], Seq[(String, String)]) = {
@@ -179,9 +177,7 @@ object TextQueries {
       .filter(length(col("word")) >= 1)
       .groupBy(col("word")).agg(count(lit(1)).as("freq"))
       .select(col("word").as("repr"), col("freq"))
-    val localLimit = docs.sparkSession.conf
-      .getOption(LocalVocabLimitConf).map(_.toInt)
-      .getOrElse(DefaultLocalVocabLimit)
+    val localLimit = graft.GraftConf.BpeLocalVocabLimit(docs.sparkSession)
     // the vocab table is cached BEFORE the size probe: both outcomes
     // consume it (the local path collects it, the distributed loop
     // iterates over it), so the probe's materialization is never wasted

@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.{BenchConfs, SparkEntry, Tables}
+import graft.{GraftConf, SparkEntry, Tables}
 import org.apache.spark.sql.functions._
 
 /** ANN quality A/B on a CLUSTERED embedding fixture (VERDICT r14 #1/#2).
@@ -20,8 +20,8 @@ import org.apache.spark.sql.functions._
   *
   * over td_knn_ann_recall (vs brute truth, bench-only nodeBound sample)
   * and td_knn_purity_ann (full corpus). Everything runs through the
-  * REGISTRY queries — the A/B toggles only the bench-only confs
-  * (BenchConfs contract: the correctness gate never sets them, so the
+  * REGISTRY queries — the A/B toggles only bench-only confs
+  * ([[graft.GraftConf]]: the correctness gate never sets them, so the
   * oracle-pinned defaults are untouched).
   *
   * Noise scale s (4th arg, default 1.2): intra-label cosine
@@ -100,8 +100,8 @@ object AnnQualityAb {
     // diagnostic regime; the recall member re-sizes its own quantizer
     // from that sample, SimilarityQueries review r14)
     val cells = math.max(16, math.round(math.sqrt(total / 2.0))).toInt
-    spark.conf.set(BenchConfs.IvfCells, cells.toString)
-    spark.conf.set(BenchConfs.NodeBound, nVecs.toString)
+    spark.conf.set(GraftConf.AnnIvfCells.name, cells.toString)
+    spark.conf.set(GraftConf.KnnNodeBound.name, nVecs.toString)
     println(s"""{"metric":"ann_ab_fixture","scale":$scale,"vecs":$total,""" +
       s""""cells":$cells,"node_bound":$nVecs,"dim":$dim,"noise":$noise}""")
 
@@ -116,9 +116,9 @@ object AnnQualityAb {
     println(f"""{"metric":"ann_ab_brute_purity","value":$brutePurity%.6f}""")
 
     for (train <- Seq(false, true); probes <- Seq(2, 4)) {
-      if (train) spark.conf.set(BenchConfs.IvfTrain, "2")
-      else spark.conf.unset(BenchConfs.IvfTrain)
-      spark.conf.set(BenchConfs.Probes, probes.toString)
+      if (train) spark.conf.set(GraftConf.AnnIvfTrain.name, "2")
+      else spark.conf.unset(GraftConf.AnnIvfTrain.name)
+      spark.conf.set(GraftConf.AnnProbes.name, probes.toString)
       val t0 = System.nanoTime()
       val recall = mean("td_knn_ann_recall", "recall_at_3")
       val tRecall = (System.nanoTime() - t0) / 1e9
@@ -129,8 +129,8 @@ object AnnQualityAb {
         f""""recall_at_3":$recall%.6f,"purity_ann":$purity%.6f,""" +
         f""""sec_recall":$tRecall%.2f,"sec_purity":$tPurity%.2f}""")
     }
-    spark.conf.unset(BenchConfs.IvfTrain)
-    spark.conf.unset(BenchConfs.Probes)
+    spark.conf.unset(GraftConf.AnnIvfTrain.name)
+    spark.conf.unset(GraftConf.AnnProbes.name)
 
     // PQ codebook A/B (round 15): the label%10 codebook is effectively
     // SUPERVISED on this fixture (labels ARE the planted clusters), so
@@ -138,25 +138,25 @@ object AnnQualityAb {
     // per-subspace k-means recovers it — the production regime, where
     // no labels exist. td_ann_pq_recall needs q·n exact cosine truth;
     // bound the query set at scale via the fixedq knob.
-    spark.conf.set(BenchConfs.QueryIdBound, nVecs.toString)
+    spark.conf.set(GraftConf.AnnQueryIdBound.name, nVecs.toString)
     // grid: the supervised-on-this-fixture label codebook (10 codes),
     // unsupervised trained at the same resolution, and trained at the
     // production lever (more codes than clusters — the regime where
     // PQ stops quantizing whole clusters to one point)
     for ((pqTrain, codes) <- Seq((false, 10), (true, 10), (true, 64),
         (true, 256))) {
-      if (pqTrain) spark.conf.set(BenchConfs.PqTrain, "2")
-      else spark.conf.unset(BenchConfs.PqTrain)
-      spark.conf.set(BenchConfs.PqCodes, codes.toString)
+      if (pqTrain) spark.conf.set(GraftConf.AnnPqTrain.name, "2")
+      else spark.conf.unset(GraftConf.AnnPqTrain.name)
+      spark.conf.set(GraftConf.AnnPqCodes.name, codes.toString)
       val t0 = System.nanoTime()
       val recall = mean("td_ann_pq_recall", "recall_at_3")
       val sec = (System.nanoTime() - t0) / 1e9
       println(f"""{"metric":"pq_ab","train":$pqTrain,"codes":$codes,""" +
         f""""recall_at_3":$recall%.6f,"sec":$sec%.2f}""")
     }
-    spark.conf.unset(BenchConfs.PqTrain)
-    spark.conf.unset(BenchConfs.PqCodes)
-    spark.conf.unset(BenchConfs.QueryIdBound)
+    spark.conf.unset(GraftConf.AnnPqTrain.name)
+    spark.conf.unset(GraftConf.AnnPqCodes.name)
+    spark.conf.unset(GraftConf.AnnQueryIdBound.name)
     spark.stop()
   }
 }

@@ -34,7 +34,7 @@ object BucketMegaStress {
     val spark = graft.Tables.pinDialect(
       graft.Tables.localSession("graft-megabucket", cpus))
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // shuffled exec
-    spark.conf.set(graft.plans.BucketAdmitJoinApi.ChunkBytesConf, chunk)
+    spark.conf.set(graft.GraftConf.DedupBucketChunkBytes.name, chunk)
     import graft.functions.GraftFunctions.deltaVarint
 
     // 300 sorted P-reduced tokens per set, disjoint across rows

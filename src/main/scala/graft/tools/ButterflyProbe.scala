@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.Tables
+import graft.{GraftConf, Tables}
 import graft.operators.Butterfly
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -60,7 +60,7 @@ object ButterflyProbe {
     // Two rounds: round 1 pays a fresh closure's sizing re-reads and
     // the optimizer-memo's first fill for this JVM; round 2 is the
     // steady memo-hit path.
-    spark.conf.set("spark.graft.deferred.timing", "true")
+    spark.conf.set(GraftConf.DeferredTiming.name, "true")
     for (round <- 1 to 2) {
       System.gc()
       val t0 = System.nanoTime()
@@ -73,7 +73,7 @@ object ButterflyProbe {
       println(f"[bfprobe] vp phase split #$round      compose=${(t1 - t0) / 1e9}%5.2f s" +
         f"  plan=${(t2 - t1) / 1e9}%5.2f s  exec=${(t3 - t2) / 1e9}%5.2f s  rows=$n")
     }
-    spark.conf.unset("spark.graft.deferred.timing")
+    spark.conf.unset(GraftConf.DeferredTiming.name)
 
     // phase 2: true cold adaptive — caches dropped, first run pays
     // enumeration + cache build, second run is the cached path again
@@ -99,7 +99,7 @@ object ButterflyProbe {
     // (the dense-regime cost model; with caches live the windowed plan
     // would silently read the cached wedge set instead)
     Butterfly.releaseCaches(edges, "src", "dst")
-    spark.conf.set(Butterfly.ProbePairBoundConf, "0")
+    spark.conf.set(GraftConf.ButterflyProbePairBound.name, "0")
     for (round <- 1 to 2) {
       timed(s"vp windowed uncached #$round")(
         Butterfly.perVertexCounts(edges, "src", "dst").count())
@@ -108,7 +108,7 @@ object ButterflyProbe {
       timed(s"globalCount uncached #$round")(
         Butterfly.globalCount(edges, "src", "dst").count())
     }
-    spark.conf.unset(Butterfly.ProbePairBoundConf)
+    spark.conf.unset(GraftConf.ButterflyProbePairBound.name)
     spark.stop()
   }
 }

@@ -2,7 +2,7 @@ package graft.tools
 
 import java.util.concurrent.atomic.AtomicReference
 
-import graft.{BenchConfs, Tables}
+import graft.{GraftConf, Tables}
 import graft.operators.IvfIndex
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
@@ -107,7 +107,7 @@ object DriftAutoRetrain {
     // (Lloyd-2 on the pre-drift corpus; seed bound widened 5/4 so both
     // quantizers train exactly `cells` centroids — the DriftRetrain
     // discipline)
-    spark.conf.set(BenchConfs.IvfTrain, "2")
+    spark.conf.set(GraftConf.AnnIvfTrain.name, "2")
     val staleDir = IvfIndex.ensureSaved(
       s"$tmp/${Tables.artifactKey(spark, "graft-ardx-stale", embPath)}") {
       IvfIndex.build(preDrift, cells, Some(SimilarityQueries
@@ -191,7 +191,7 @@ object DriftAutoRetrain {
       .outputMode("complete").trigger(Trigger.AvailableNow()).start()
     query.awaitTermination()
     Tables.deleteRecursively(ck, bestEffort = true)
-    spark.conf.unset(BenchConfs.IvfTrain)
+    spark.conf.unset(GraftConf.AnnIvfTrain.name)
 
     import scala.jdk.CollectionConverters._
     HandoffReport(nBase, total, cells, staleDir,

@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.{BenchConfs, SparkEntry, Tables}
+import graft.{GraftConf, SparkEntry, Tables}
 import graft.operators.IvfIndex
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -135,7 +135,7 @@ object DriftRetrain {
     // arriving with spark.graft.stream.sink = noop/digest/connector
     // would hand an EMPTY frame to the min/max below) and fail loudly
     // if the monitor still emits nothing.
-    spark.conf.unset("spark.graft.stream.sink")
+    spark.conf.unset(GraftConf.StreamSink.name)
     val drift = SparkEntry.registry("st_embedding_drift")
       .build(spark, out).collect()
     require(drift.nonEmpty,
@@ -166,14 +166,14 @@ object DriftRetrain {
     // bound is widened 5/4 so BOTH quantizers train exactly `cells`
     // centroids (ivfCentroids seeds vec_id < bound, and the pre-drift
     // corpus holds 4 of every 5 ids)
-    spark.conf.set(BenchConfs.IvfTrain, "2")
+    spark.conf.set(GraftConf.AnnIvfTrain.name, "2")
     val stale = graft.queries.SimilarityQueries
       .ivfCentroids(spark, preDrift, cells * 5 / 4)
       .localCheckpoint(false)
     val fresh = graft.queries.SimilarityQueries
       .ivfCentroids(spark, grown, cells)
       .localCheckpoint(false)
-    spark.conf.unset(BenchConfs.IvfTrain)
+    spark.conf.unset(GraftConf.AnnIvfTrain.name)
 
     // fixed arrival-batch query set (2× id bound — misses are a
     // percent-scale effect, so the sample needs a few thousand truth

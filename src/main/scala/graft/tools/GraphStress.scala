@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.{Bench, GroupedShuffleListener, Tables}
+import graft.{Bench, GraftConf, GroupedShuffleListener, Tables}
 import graft.operators.{Butterfly, LabelPropagation, PageRank}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -179,13 +179,13 @@ object GraphStress {
       meter.timed(Butterfly.perVertexCounts(e, "src", "dst").count())
     // forced broadcast: lift both tiers so the probe materializes and
     // broadcasts the wedge-sized pair table — the measured collapse
-    spark.conf.set(Butterfly.ProbePairBoundConf, "1000000000000")
-    spark.conf.set(Butterfly.BroadcastPairLimitConf, "1000000000000")
+    spark.conf.set(GraftConf.ButterflyProbePairBound.name, "1000000000000")
+    spark.conf.set(GraftConf.ButterflyBroadcastPairLimit.name, "1000000000000")
     val (nForced, bcSec, bcMb) =
       try meter.timed(Butterfly.perVertexCounts(e, "src", "dst").count())
       finally {
-        spark.conf.unset(Butterfly.ProbePairBoundConf)
-        spark.conf.unset(Butterfly.BroadcastPairLimitConf)
+        spark.conf.unset(GraftConf.ButterflyProbePairBound.name)
+        spark.conf.unset(GraftConf.ButterflyBroadcastPairLimit.name)
       }
     require(nForced == nAdaptive,
       s"regime results diverged: $nAdaptive adaptive vs $nForced forced")

@@ -5,7 +5,7 @@ import scala.collection.mutable.ArrayBuffer
 import graft.{Bench, GroupedShuffleListener, Json, SparkEntry}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.FormattedMode
+import org.apache.spark.sql.execution.{FormattedMode, InputAdapter, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
 
@@ -40,8 +40,9 @@ object Profile extends AdaptiveSparkPlanHelper {
   final case class Report(cold: Run, warm: Run, exchanges: String,
       json: String)
 
+  /** Each stage row with the accumulator ids its tasks updated. */
   private final class StageLog extends SparkListener {
-    private val rows = ArrayBuffer.empty[StageRow]
+    private val rows = ArrayBuffer.empty[(StageRow, Set[Long])]
     override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
       val si = e.stageInfo
       val m = si.taskMetrics
@@ -55,11 +56,23 @@ object Profile extends AdaptiveSparkPlanHelper {
         m.shuffleWriteMetrics.recordsWritten,
         m.shuffleWriteMetrics.bytesWritten, m.memoryBytesSpilled,
         m.shuffleWriteMetrics.writeTime / 1000000)
-      rows.synchronized(rows += row)
+      rows.synchronized(rows += (row -> si.accumulables.keySet.toSet))
     }
-    def drain(): Seq[StageRow] =
+    def drain(): Seq[(StageRow, Set[Long])] =
       rows.synchronized { val out = rows.toVector; rows.clear(); out }
   }
+
+  /** SQL metric id → (pre-order position, node) over `plan`, its query
+    * stages and subqueries. A stage is named by the topmost operator it
+    * updated (AQE submits stages from a thread pool, whose call site
+    * names the pool); one that updated none keeps its call site. */
+  private def metricOwners(plan: SparkPlan): Map[Long, (Int, String)] =
+    collectWithSubqueries(plan) {
+      case p if !p.isInstanceOf[WholeStageCodegenExec] &&
+        !p.isInstanceOf[InputAdapter] => p
+    }.zipWithIndex.flatMap { case (p, i) =>
+      p.metrics.values.map(_.id -> (i, p.simpleString(8).take(60)))
+    }.groupMapReduce(_._1)(_._2)((a, b) => if (a._1 <= b._1) a else b)
 
   private val header =
     f"${"stage"}%5s ${"wall_s"}%7s ${"task_s"}%8s ${"cpu_s"}%8s " +
@@ -113,7 +126,12 @@ object Profile extends AdaptiveSparkPlanHelper {
         val rows = Bench.consume(df)
         val sec = (System.nanoTime() - t0) / 1e9
         val mb = (meter.settled("") - before) / 1e6
-        val r = Run(rows, sec, mb, stages.drain().sortBy(-_.taskMs))
+        val owners = metricOwners(df.queryExecution.executedPlan)
+        val named = stages.drain().map { case (row, ids) =>
+          ids.flatMap(owners.get).minByOption(_._1)
+            .fold(row)(o => row.copy(name = o._2))
+        }
+        val r = Run(rows, sec, mb, named.sortBy(-_.taskMs))
         out(f"[profile] $tag $name rows=$rows wall=$sec%.2f s " +
           f"shuffle_mb=$mb%.6f stages=${r.stages.size}")
         out(header)

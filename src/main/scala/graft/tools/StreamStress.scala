@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.{RelStress, Tables}
+import graft.{GraftConf, RelStress, Tables}
 
 /** Scale-cliff probe for the STREAMING layer — the last family without
   * one (rel_ has [[graft.RelStress]], td_ [[graft.StressSmoke]], the
@@ -60,11 +60,10 @@ object StreamStress {
     val spark =
       Tables.pinDialect(Tables.localSession("graft-streamstress", cpus))
     if (args.length > 3 && args(3).nonEmpty)
-      spark.conf.set("spark.graft.stream.statePartitions", args(3))
-    val mode = if (args.length > 4) args(4) else ""
-    require(Set("", "noop", "digest", "connector").contains(mode),
-      s"unknown sink mode '$mode' (expected noop|digest|connector)")
-    if (mode.nonEmpty) spark.conf.set("spark.graft.stream.sink", mode)
+      spark.conf.set(GraftConf.StreamStatePartitions.name, args(3))
+    val mode = GraftConf.StreamSink.read(
+      if (args.length > 4 && args(4).nonEmpty) args(4) else "memory")
+    spark.conf.set(GraftConf.StreamSink.name, mode)
     // optional 6th arg: registry-name prefix restricting the sweep
     // (e.g. `st_sink_` for the connector-mode column, which only
     // differs from noop on the two DSv2 sink queries — a full-family

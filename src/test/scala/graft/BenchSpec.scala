@@ -47,6 +47,19 @@ class BenchSpec extends AnyFunSuite with SparkTestSession {
     assert(n.get("warm_shuffle_mb").get("q_ok_fast").asDouble() === 2.25)
   }
 
+  test("the full line stamps the non-default graft confs; the compact line does not") {
+    assert(mapper.readTree(full).get("confs").size == 0)
+    val sink = GraftConf.StreamSink.name
+    spark.conf.set(sink, "noop")
+    val (f, c) =
+      try Bench.renderLines(results, "/tmp/sf",
+        confs = GraftConf.nonDefaults(spark))
+      finally spark.conf.unset(sink)
+    val confs = mapper.readTree(f).get("confs")
+    assert(confs.size == 1 && confs.get(sink).asText == "noop", f)
+    assert(!mapper.readTree(c).has("confs"))
+  }
+
   test("warm_shuffle_mb keeps six decimals, so a 1% change at fixture scale shows") {
     // two decimals printed 0.38 or 0.37 for a query whose warm shuffle
     // is 0.374739 MB on every run

@@ -66,11 +66,12 @@ class RegistrySpec extends AnyFunSuite with SparkTestSession {
   // registry query has been built and executed in THIS session
   // (ScalaTest runs a suite's tests in registration order): proves no
   // build sets a bench-only conf as a side effect — the "correctness
-  // gate never sets it" contract (graft.BenchConfs, VERDICT r14 #5)
+  // gate never sets it" contract (graft.GraftConf, VERDICT r14 #5)
   // would silently break if a query self-tuned one of these and the
   // next query's oracle hash absorbed it.
   test("gate session leaves every bench-only conf unset") {
-    val set = BenchConfs.all.filter(k => spark.conf.getOption(k).isDefined)
+    val set = GraftConf.benchOnly.map(_.name)
+      .filter(k => spark.conf.getOption(k).isDefined)
     assert(set.isEmpty,
       s"bench-only confs set under the correctness gate: $set")
   }

@@ -45,7 +45,7 @@ class SweepSpec extends AnyFunSuite with SparkTestSession {
   test("the stress record carries every key of the per-harness line it replaced") {
     val (results, canaries) = swept
     val line = Bench.renderLines(results, dir, canaries,
-      "relstress_total", Some(1))._1
+      "relstress_total", Some(1), Seq(GraftConf.StreamSink.name -> "noop"))._1
     val n = new ObjectMapper().readTree(line)
     val keys = n.fieldNames().asScala.toSet
     val stressKeys = Set("metric", "value", "unit", "warm_total", "scale",
@@ -55,6 +55,7 @@ class SweepSpec extends AnyFunSuite with SparkTestSession {
     assert(n.get("metric").asText == "relstress_total")
     assert(n.get("scale").asInt == 1 && n.get("n_errors").asInt == 1)
     assert(n.get("canary").size == 4)
+    assert(n.get("confs").get(GraftConf.StreamSink.name).asText == "noop")
     assert(!n.get("anchor_eligible").asBoolean) // one query failed
     // the bench record itself stays unstamped
     val bench = new ObjectMapper().readTree(

@@ -32,7 +32,7 @@ class ButterflySpec extends AnyFunSuite with SparkTestSession {
   /** Same computation through the dense-regime windowed shape (probe
     * disabled), so every correctness fixture can pin BOTH regimes. */
   private def countsWindowed(edges: Seq[(Long, Long)]): Map[Long, Long] =
-    withConf(Butterfly.ProbePairBoundConf, "0") { counts(edges) }
+    withConf(graft.GraftConf.ButterflyProbePairBound.name, "0") { counts(edges) }
 
   /** Naive oracle: for every same-side pair, C(|common neighbours|, 2)
     * butterflies attributed to both pair members. */
@@ -166,7 +166,7 @@ class ButterflySpec extends AnyFunSuite with SparkTestSession {
       // executedPlan forced INSIDE withConf: the deferred build reads
       // plan-shaping confs when the plan is first demanded, not when
       // the frame is composed
-      val p = withConf(Butterfly.ProbePairBoundConf, "0") {
+      val p = withConf(graft.GraftConf.ButterflyProbePairBound.name, "0") {
         Butterfly.perVertexCounts(edges).queryExecution.executedPlan.toString
       }
       val wedgeExchanges = p.linesIterator.count(l =>
@@ -246,7 +246,7 @@ class ButterflySpec extends AnyFunSuite with SparkTestSession {
     import spark.implicits._
     val edges = (for { a <- 1L to 18L; b <- 101L to 113L
       if (a * 3 + b) % 4 != 0 } yield (a, b)).toDF("a", "b")
-    try withConf(Butterfly.BroadcastPairLimitConf, "0") {
+    try withConf(graft.GraftConf.ButterflyBroadcastPairLimit.name, "0") {
       val expected = naive(for { a <- 1L to 18L; b <- 101L to 113L
         if (a * 3 + b) % 4 != 0 } yield (a, b))
       val got = Butterfly.perVertexCounts(edges).collect()
@@ -316,7 +316,7 @@ class ButterflySpec extends AnyFunSuite with SparkTestSession {
     assert(second.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       == Map(61L -> 1L, 62L -> 1L, 931L -> 1L, 932L -> 1L))
     // a changed decision conf must re-decide (fresh memo key) ...
-    val windowed = withConf(Butterfly.ProbePairBoundConf, "0") {
+    val windowed = withConf(graft.GraftConf.ButterflyProbePairBound.name, "0") {
       Butterfly.perVertexCounts(edges).collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
     }

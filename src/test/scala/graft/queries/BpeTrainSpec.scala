@@ -95,7 +95,7 @@ class BpeTrainSpec extends AnyFunSuite with SparkTestSession {
     assert(got == expected)
     // the DISTRIBUTED loop (forced by disabling the driver-side path)
     // must produce the identical table — the two paths may never drift
-    val gotDistributed = withConf(TextQueries.LocalVocabLimitConf, "0") {
+    val gotDistributed = withConf(graft.GraftConf.BpeLocalVocabLimit.name, "0") {
       TextQueries.bpeTrain(docs(lines: _*), 60)
         .orderBy("step").collect()
         .map(r => (r.getInt(0), r.getString(1), r.getLong(2))).toSeq
@@ -127,7 +127,7 @@ class BpeTrainSpec extends AnyFunSuite with SparkTestSession {
     // pairs: "a�" -> 1, "a"+supp -> 1 — a genuine tie
     val local = TextQueries.bpeTrain(corpus, 1).collect()
       .map(r => (r.getInt(0), r.getString(1), r.getLong(2))).toSeq
-    val dist = withConf(TextQueries.LocalVocabLimitConf, "0") {
+    val dist = withConf(graft.GraftConf.BpeLocalVocabLimit.name, "0") {
       TextQueries.bpeTrain(corpus, 1).collect()
         .map(r => (r.getInt(0), r.getString(1), r.getLong(2))).toSeq
     }

@@ -422,15 +422,15 @@ class IncrementalDedupSpec extends AnyFunSuite with SparkTestSession {
   }
 
   test("spark.graft.dedup.bucketChunkBytes must be an integer >= 1, named on failure") {
-    val key = graft.plans.BucketAdmitJoinApi.ChunkBytesConf
+    val chunkBytes = graft.GraftConf.DedupBucketChunkBytes
+    val key = chunkBytes.name
     val conf = new org.apache.spark.sql.internal.SQLConf
-    assert(graft.plans.BucketAdmitJoinApi.chunkBytes(conf) == 8388608L)
+    assert(chunkBytes(conf) == 8388608L)
     conf.setConfString(key, "1")
-    assert(graft.plans.BucketAdmitJoinApi.chunkBytes(conf) == 1L)
+    assert(chunkBytes(conf) == 1L)
     for (bad <- Seq("abc", "0", "-5", "1.5", "")) {
       conf.setConfString(key, bad)
-      val e = intercept[IllegalArgumentException](
-        graft.plans.BucketAdmitJoinApi.chunkBytes(conf))
+      val e = intercept[IllegalArgumentException](chunkBytes(conf))
       assert(e.getMessage.contains(key) && e.getMessage.contains(s"'$bad'"))
     }
     // a query on the shuffled walk surfaces that message

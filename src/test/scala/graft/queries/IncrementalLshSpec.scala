@@ -77,11 +77,11 @@ class IncrementalLshSpec extends AnyFunSuite with SparkTestSession {
     // neighbors vs the 16-cell default. Row-count based, cannot
     // coincide unless the blocking is identical.
     val base = run("td_incremental_ann").count()
-    spark.conf.set(graft.BenchConfs.IvfCells, "256")
+    spark.conf.set(graft.GraftConf.AnnIvfCells.name, "256")
     try {
       val fine = run("td_incremental_ann").count()
       assert(fine < base,
         s"256-cell blocking must thin the 3-NN rows ($fine vs $base)")
-    } finally spark.conf.unset(graft.BenchConfs.IvfCells)
+    } finally spark.conf.unset(graft.GraftConf.AnnIvfCells.name)
   }
 }

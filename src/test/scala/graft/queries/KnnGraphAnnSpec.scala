@@ -44,9 +44,9 @@ class KnnGraphAnnSpec extends AnyFunSuite with SparkTestSession {
       .filter(org.apache.spark.sql.functions.col("rn") === 1)
       .select("cell").distinct().count()
     assert(homeCells() == 16L)
-    spark.conf.set(graft.BenchConfs.IvfCells, "64")
+    spark.conf.set(graft.GraftConf.AnnIvfCells.name, "64")
     try assert(homeCells() == 64L, "cells knob did not reach the blocking")
-    finally spark.conf.unset(graft.BenchConfs.IvfCells)
+    finally spark.conf.unset(graft.GraftConf.AnnIvfCells.name)
   }
 
   test("ann.probes widens the probe frame (bench-only knob)") {
@@ -58,16 +58,16 @@ class KnnGraphAnnSpec extends AnyFunSuite with SparkTestSession {
     def probeRows(): Long =
       SimilarityQueries.annProbeFrame(spark, nodes).count()
     assert(probeRows() == 2 * n)
-    spark.conf.set(graft.BenchConfs.Probes, "4")
+    spark.conf.set(graft.GraftConf.AnnProbes.name, "4")
     try assert(probeRows() == 4 * n, "probes knob did not reach the build")
-    finally spark.conf.unset(graft.BenchConfs.Probes)
+    finally spark.conf.unset(graft.GraftConf.AnnProbes.name)
   }
 
   test("ann.ivf.train refines the seeded quantizer (bench-only knob)") {
     import org.apache.spark.sql.functions._
     val seeded = SimilarityQueries.ivfCentroids(spark, nodes, 16)
       .collect().map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
-    spark.conf.set(graft.BenchConfs.IvfTrain, "2")
+    spark.conf.set(graft.GraftConf.AnnIvfTrain.name, "2")
     try {
       val trained = SimilarityQueries.ivfCentroids(spark, nodes, 16)
         .collect().map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
@@ -83,7 +83,7 @@ class KnnGraphAnnSpec extends AnyFunSuite with SparkTestSession {
         val nrm = math.sqrt(ca.map(x => x * x).sum)
         assert(math.abs(nrm - 1.0) < 1e-9, s"non-unit centroid norm $nrm")
       }
-    } finally spark.conf.unset(graft.BenchConfs.IvfTrain)
+    } finally spark.conf.unset(graft.GraftConf.AnnIvfTrain.name)
   }
 
   test("trained PQ codebook keeps the dense 40-slot grid and slice layout") {
@@ -111,10 +111,10 @@ class KnnGraphAnnSpec extends AnyFunSuite with SparkTestSession {
     // centroids means of label cells — coincidence would need the two
     // partitions to agree exactly on every subspace
     val conf = spark.conf
-    assert(conf.getOption(graft.BenchConfs.PqTrain).isEmpty)
+    assert(conf.getOption(graft.GraftConf.AnnPqTrain.name).isEmpty)
     val labelCb = SparkEntry.registry("td_ann_pq").build(spark, sfDir)
       .collect()
-    conf.set(graft.BenchConfs.PqTrain, "2")
+    conf.set(graft.GraftConf.AnnPqTrain.name, "2")
     try {
       val trainedOut = SparkEntry.registry("td_ann_pq").build(spark, sfDir)
         .collect()
@@ -126,7 +126,7 @@ class KnnGraphAnnSpec extends AnyFunSuite with SparkTestSession {
         assert(r.getAs[Long]("q_id") != r.getAs[Long]("n_id"), r)
       }
       assert(labelCb.nonEmpty)
-    } finally conf.unset(graft.BenchConfs.PqTrain)
+    } finally conf.unset(graft.GraftConf.AnnPqTrain.name)
   }
 
   test("recall is bounded and honors the bench-only nodeBound") {

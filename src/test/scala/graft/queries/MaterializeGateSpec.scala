@@ -8,6 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class MaterializeGateSpec extends AnyFunSuite with graft.SparkTestSession {
 
   private val sfDir = "/root/testdata/sf0.001"
+  private val perCore = graft.GraftConf.DedupMaterializePerCoreBytes.name
 
   private def withConf(k: String, v: String)(body: => Unit): Unit = {
     val prev = spark.conf.getOption(k)
@@ -23,20 +24,22 @@ class MaterializeGateSpec extends AnyFunSuite with graft.SparkTestSession {
     // sf0.001 documents are a few KB: far below any sane per-core gate
     assert(!DedupQueries.materializeContraction(spark, sfDir))
     // a 1-byte-per-core threshold flips it on for the same corpus
-    withConf("spark.graft.dedup.materializePerCoreBytes", "1") {
+    withConf(perCore, "1") {
       assert(DedupQueries.materializeContraction(spark, sfDir))
     }
-    // explicit overrides win over the byte gate in both directions
-    withConf("spark.graft.dedup.materialize", "on") {
+    // the ends of the bound force either side: 0 on, Long.MaxValue off
+    // (perCore × parallelism would overflow to a negative gate)
+    withConf(perCore, "0") {
       assert(DedupQueries.materializeContraction(spark, sfDir))
     }
-    withConf("spark.graft.dedup.materialize", "off") {
-      withConf("spark.graft.dedup.materializePerCoreBytes", "1") {
-        assert(!DedupQueries.materializeContraction(spark, sfDir))
-      }
+    withConf(perCore, Long.MaxValue.toString) {
+      assert(!DedupQueries.materializeContraction(spark, sfDir))
     }
     // an unreadable path fails CLOSED (pathBytes -1 under any gate)
     assert(!DedupQueries.materializeContraction(spark, "/nonexistent-dir"))
+    withConf(perCore, "0") {
+      assert(!DedupQueries.materializeContraction(spark, "/nonexistent-dir"))
+    }
   }
 
   test("gate-on results are row-identical to gate-off for every contraction consumer") {
@@ -49,7 +52,7 @@ class MaterializeGateSpec extends AnyFunSuite with graft.SparkTestSession {
         "td_dedup_simhash")) {
       val off = graft.SparkEntry.registry(name).build(spark, sfDir)
         .collect().map(_.toString).sorted
-      withConf("spark.graft.dedup.materialize", "on") {
+      withConf(perCore, "0") {
         val on = graft.SparkEntry.registry(name).build(spark, sfDir)
           .collect().map(_.toString).sorted
         assert(on.toSeq == off.toSeq, s"$name rows differ across the gate")
@@ -62,7 +65,7 @@ class MaterializeGateSpec extends AnyFunSuite with graft.SparkTestSession {
     // checkpointed contraction as ExistingRDD; zero parquet scan nodes
     // remain in the consumer plan (the corpus passes run once, inside
     // the checkpoint materialization). Gate-off keeps the parquet scans.
-    withConf("spark.graft.dedup.materialize", "on") {
+    withConf(perCore, "0") {
       val p = graft.SparkEntry.registry("td_dedup_ngram_jaccard")
         .build(spark, sfDir).queryExecution.executedPlan.toString
       assert(p.contains("ExistingRDD"), p.take(3000))
@@ -71,5 +74,28 @@ class MaterializeGateSpec extends AnyFunSuite with graft.SparkTestSession {
     val pOff = graft.SparkEntry.registry("td_dedup_ngram_jaccard")
       .build(spark, sfDir).queryExecution.executedPlan.toString
     assert(pOff.contains("Scan parquet"), pOff.take(3000))
+  }
+
+  test("releaseMemos frees the pair table a build below the gate persisted") {
+    // the gate reads differently at release (perCore flipped to 0): the
+    // release must still free what the build recorded, not re-decide
+    val dir = java.nio.file.Files.createTempDirectory("graft-gate-release-")
+      .toString
+    spark.read.parquet(s"$sfDir/documents.parquet")
+      .write.parquet(s"$dir/documents.parquet")
+    assert(graft.SparkEntry.queries("td_dedup_clusters")(spark, dir)
+      .collect().nonEmpty)
+    // the pair plan a build below the gate persists (mat = true only
+    // skips the persist, so this reads the cache without adding to it)
+    val pairs = DedupQueries.minhashVerifiedRepPairs(spark, dir,
+      DedupQueries.shingleGroups(spark, dir, mat = false)._1, mat = true)
+    val none = org.apache.spark.storage.StorageLevel.NONE
+    assert(pairs.storageLevel != none, "the build persisted no pair table")
+    withConf(perCore, "0") {
+      assert(DedupQueries.materializeContraction(spark, dir))
+      DedupQueries.releaseMemos(spark, dir)
+    }
+    assert(pairs.storageLevel == none,
+      "a persisted pair table outlived releaseMemos")
   }
 }

@@ -67,6 +67,6 @@ class DriftAutoRetrainSpec extends AnyFunSuite with SparkTestSession {
     }
 
     // the loop left no bench conf behind (gate-session discipline)
-    assert(spark.conf.getOption(graft.BenchConfs.IvfTrain).isEmpty)
+    assert(spark.conf.getOption(graft.GraftConf.AnnIvfTrain.name).isEmpty)
   }
 }

@@ -22,6 +22,13 @@ class ProfileSpec extends AnyFunSuite with graft.SparkTestSession {
     assert(expected > 0)
     assert(report.cold.rows == expected && report.warm.rows == expected)
     assert(report.cold.stages.nonEmpty && report.warm.stages.nonEmpty)
+    // AQE submits stages from a thread pool; rows are named by the plan
+    // node they computed, never by the pool's call site
+    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
+    val names = (report.cold.stages ++ report.warm.stages).map(_.name)
+    assert(!names.exists(_.contains("CompletableFuture")), names)
+    assert(names.exists(n => n.startsWith("Exchange") ||
+      n.startsWith("HashAggregate")), names)
     assert(lines.exists(_.startsWith(s"[profile] cold $name rows=$expected")))
     assert(lines.exists(_.startsWith(s"[profile] warm $name rows=$expected")))
     assert(lines.contains(report.exchanges))

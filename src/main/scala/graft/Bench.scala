@@ -413,7 +413,7 @@ object Bench {
     * is not the external contention the canary exists to detect; the
     * min-of-3 after GC is the box's capacity at that moment, and
     * cross-process load still inflates all three. Read through
-    * [[Canary]], and by tools.CanaryRamp, which measures its ramp. */
+    * [[Canary]]. */
   private[graft] def canaryProbe(spark: SparkSession): Double = {
     // Pure-CPU, all-core probe: fixed xorshift iterations on one thread
     // per core, joined. Earlier rounds probed with a small Spark job

@@ -82,8 +82,6 @@ object GraftConf {
     "PQ codes per subspace (> 10 needs ann.pq.train > 0)", benchOnly = true)
 
   // ---- engine
-  val SinkConcurrency = num("spark.graft.sink.concurrency", 3, 1,
-    "prepare-calls CSV sinks written at once (BeaconCli)")
   val BroadcastNodeLimit = num("spark.graft.pagerank.broadcastNodeLimit",
     5000000L, 0L, "broadcast vertex tables up to this many vertices " +
       "(PageRank, KCore, LabelPropagation, Butterfly)")
@@ -93,8 +91,6 @@ object GraftConf {
   val ButterflyBroadcastPairLimit = num(
     "spark.graft.butterfly.broadcastPairLimit", 4000000L, 0L,
     "broadcast the butterfly pair table up to this many rows")
-  val DeferredTiming = bool("spark.graft.deferred.timing", false,
-    "print DeferredBuild's driver-phase timings to stderr")
   val CcSaltBuckets = num("spark.graft.cc.saltBuckets", 8, 0,
     "salt buckets of ConnectedComponents' per-node min (0 = unsalted)")
   val CcCheckpointDir = key("spark.graft.cc.checkpointDir",

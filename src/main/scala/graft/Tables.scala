@@ -540,46 +540,53 @@ object Tables {
     }
   }
 
-  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    pinDialect(spark)
-    val path = s"$dir/$name.parquet"
-    normalizeTs(spark.read.parquet(path), source = path)
-  }
-
-  /** Streaming read of the same table: the file source needs an explicit
-    * schema, taken from the parquet footer (one driver-side metadata
-    * read), with the identical nanos→µs dialect as [[load]] so streaming
-    * and batch plans see the same rows. At scale the path is a growing
-    * directory of part files; here it is the driver's single file.
-    */
-  /** (fingerprint, footer-derived schema) per `<path>` — every
-    * `loadStream` call otherwise pays a fresh driver-side footer read
-    * just to hand the file source its required schema (~50-100 ms × one
-    * per streaming query per run). Same fingerprint-in-value
-    * invalidation/eviction discipline as [[tsStatsCache]]. */
+  /** (fingerprint, footer-derived schema) per `<path>`: inferring a
+    * parquet schema is a Spark job (~0.5 s per build on the sf0.01
+    * dedup tables, warm builds included), and the file source of a
+    * stream needs one up front. Same fingerprint-in-value
+    * invalidation/eviction discipline as [[tsStatsCache]]: a rewrite of
+    * the path re-infers. */
   private val schemaCache = new java.util.concurrent.ConcurrentHashMap[
     String, (String, org.apache.spark.sql.types.StructType)]()
 
+  /** `path`'s parquet schema through [[schemaCache]]: no inference job
+    * runs while the files are unchanged. */
+  private def parquetSchema(spark: SparkSession, path: String)
+      : org.apache.spark.sql.types.StructType =
+    Memo.memoized(schemaCache, path, pathFingerprint(spark, path))(
+      spark.read.parquet(path).schema)()
+
+  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
+    pinDialect(spark)
+    val path = s"$dir/$name.parquet"
+    normalizeTs(spark.read.schema(parquetSchema(spark, path)).parquet(path),
+      source = path)
+  }
+
+  /** Streaming read of the same table: the file source needs an explicit
+    * schema, resolved as in [[load]], with the identical nanos→µs
+    * dialect so streaming and batch plans see the same rows. At scale
+    * the path is a growing directory of part files; here it is the
+    * driver's single file. */
   def loadStream(spark: SparkSession, dir: String, name: String): DataFrame = {
     pinDialect(spark)
     val path = s"$dir/$name.parquet"
+    val schema = parquetSchema(spark, path)
     // The driver testdata is one FILE per table. FileStreamSource injects
     // `basePath = <path>` for any NON-glob path (overriding an explicit
     // basePath option), and PartitioningAwareFileIndex rejects a file as
     // basePath — so stream a true glob, which skips the injection. A
     // directory of part files (the scale layout) also works through the
     // same glob.
-    lazy val batch = spark.read.parquet(path)
-    val schema =
-      Memo.memoized(schemaCache, path, pathFingerprint(spark, path))(batch.schema)()
     val df = spark.readStream
       .schema(schema)
       .parquet(s"$dir/{$name.parquet}")
     // unit sniffing (if an int64 ts column exists) runs on the batch
     // side of the same files — one cached driver-side aggregate; the
-    // batch frame is only materialized on a tsStatsCache miss (lazy),
-    // so a warm loadStream is two cache lookups and zero footer reads
-    normalizeTs(df, statsSide = Some(() => batch), source = path)
+    // batch frame is only built on a tsStatsCache miss, so a warm
+    // loadStream is two cache lookups and zero footer reads
+    normalizeTs(df, statsSide = Some(() => spark.read.schema(schema).parquet(path)),
+      source = path)
   }
 
   /** Local session factory for tests / CLI. local[*] with shuffle

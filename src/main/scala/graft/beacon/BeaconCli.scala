@@ -1,7 +1,12 @@
 package graft.beacon
 
-import graft.{GraftConf, Tables}
-import org.apache.spark.sql.SparkSession
+import java.util.concurrent.Executors
+
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.Duration
+
+import graft.Tables
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Argument-compatible CLI for the two reference commands
   * (beacon/cli.py:7-12; option names from prepare_calls.py:20-29,
@@ -72,30 +77,33 @@ object BeaconCli {
     spark.stop()
   }
 
-  /** The prepare-calls work, session-agnostic (reused by tests). The
-    * seven sinks run as concurrent Spark jobs — they share the cached
-    * base scan, and each single-file CSV write is itself one task, so
-    * concurrency is what keeps the cluster busy. */
+  /** The prepare-calls work, session-agnostic (reused by tests and the
+    * benchmark): the seven reference CSVs through [[writeSinks]]. */
   def run(spark: SparkSession, callsPath: String, outputDir: String,
-      users: PrepareCalls.Users): Unit = {
-    import java.util.concurrent.Executors
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    // each sink is a distributed sort+write job; every concurrent job
-    // multiplies peak execution memory (sort buffers across all its
-    // tasks). Measured: 3-at-a-time completes 5M rows on the default
-    // heap where 7-at-a-time OOMs — and is no slower at any size (the
-    // jobs pipeline through the pool). Override via conf if needed;
-    // read first, so a bad value fails before any work.
-    val concurrency = GraftConf.SinkConcurrency(spark)
-    val outputs = PrepareCalls(PrepareCalls.fromCsv(spark, callsPath), users)
-    outputs.base.count() // materialize the shared cache once, up front
-    val pool = Executors.newFixedThreadPool(concurrency)
+      users: PrepareCalls.Users): Unit =
+    writeSinks(PrepareCalls(PrepareCalls.fromCsv(spark, callsPath), users)) {
+      (name, df) => CsvIO.writeCsv(df, s"$outputDir/$name.csv")
+    }
+
+  /** Sinks written at once. Each is a distributed sort+write job, and
+    * every concurrent job multiplies peak execution memory (sort
+    * buffers across all its tasks). Measured: 3-at-a-time completes 5M
+    * rows on the default heap where 7-at-a-time OOMs — and is no slower
+    * at any size (the jobs pipeline through the pool). */
+  private[beacon] val SinkConcurrency = 3
+
+  /** Materialize `outputs`' shared base once, up front, then `write`
+    * every sink as concurrent Spark jobs, [[SinkConcurrency]] at a
+    * time: they share the cached base scan, and each single-file CSV
+    * write is itself one task, so concurrency is what keeps the
+    * cluster busy. */
+  def writeSinks(outputs: PrepareCalls.Outputs)(
+      write: (String, DataFrame) => Unit): Unit = {
+    outputs.base.count()
+    val pool = Executors.newFixedThreadPool(SinkConcurrency)
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
     try {
-      val writes = outputs.all.map { case (name, df) =>
-        Future(CsvIO.writeCsv(df, s"$outputDir/$name.csv"))
-      }
+      val writes = outputs.all.map { case (name, df) => Future(write(name, df)) }
       Await.result(Future.sequence(writes), Duration.Inf)
     } finally pool.shutdown()
   }

@@ -83,16 +83,10 @@ object PerfSmoke {
     val users = PrepareCalls.Users(101L, 102L, 103L, 104L)
     val out = dir.resolve("out").toString
     try {
-      def writeAllParquet(outputs: PrepareCalls.Outputs): Unit = {
-        outputs.base.count() // materialize the shared cache once, up front
-        import scala.concurrent.{Await, ExecutionContext, Future}
-        import scala.concurrent.duration.Duration
-        implicit val ec: ExecutionContext = ExecutionContext.global
-        val writes = outputs.all.map { case (name, df) =>
-          Future(df.drop("_ord").write.mode("overwrite").parquet(s"$out/$name"))
+      def writeAllParquet(outputs: PrepareCalls.Outputs): Unit =
+        BeaconCli.writeSinks(outputs) { (name, df) =>
+          df.drop("_ord").write.mode("overwrite").parquet(s"$out/$name")
         }
-        Await.result(Future.sequence(writes.toSeq), Duration.Inf)
-      }
       val t0 = System.nanoTime()
       sink match {
         case "parquet" =>

@@ -138,7 +138,8 @@ object Butterfly {
     * for the same graph twice) re-paid the full sizing ladder (the
     * adjacency aggregate, the dominated-edge bound, the pair-count
     * probe: 2.3-3.2 s of driver actions at sf0.1 even with every
-    * byte cached — ButterflyProbe's `[deferred] mk=` line). The plan
+    * byte cached, round 12; tools.Profile shows the ladder inside its
+    * optimization phase, where the deferred leaf builds). The plan
     * those actions produce is a pure function of (operator, edge set,
     * decision confs) for FIXED underlying data, so it is memoized
     * here, keyed by the same canonical undirected plan as the cache
@@ -221,13 +222,9 @@ object Butterfly {
         .toSeq,
       label,
       () => {
-        val trace = GraftConf.DeferredTiming(spark)
-        val t0 = System.nanoTime()
-        val inner = innerDf // mk: the sizing actions (memoized per closure)
-        if (trace) System.err.println(
-          f"[deferred] $label mk=${(System.nanoTime() - t0) / 1e9}%.3f")
+        // innerDf runs mk, the sizing actions (memoized per closure)
         val p = DeferredBuild.memoizedOptimize(spark,
-          inner.queryExecution.logical)
+          innerDf.queryExecution.logical)
         lastBuilt.set(Some(p))
         p
       },

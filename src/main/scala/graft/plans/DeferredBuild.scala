@@ -134,42 +134,20 @@ object DeferredBuild {
     *
     * Benign race: two concurrent first actions may both optimize; last
     * put wins, both plans are correct for the epoch. */
-  /** Test/probe hooks: cumulative hit/miss counts, and a timing trace
-    * under `spark.graft.deferred.timing=true` (stderr, driver-side
-    * phases only — ButterflyProbe's attribution lines read it). */
-  private[graft] val memoHits = new java.util.concurrent.atomic.AtomicLong
-  private[graft] val memoMisses = new java.util.concurrent.atomic.AtomicLong
-
   def memoizedOptimize(spark: SparkSession, logical: LogicalPlan)
       : LogicalPlan = {
-    val trace = graft.GraftConf.DeferredTiming(spark)
-    val t0 = System.nanoTime()
     val df = PlanShim.ofRows(spark, logical)
-    val t1 = System.nanoTime()
     val substituted = PlanShim.withCachedData(df)
-    val t2 = System.nanoTime()
     val key = new EpochKey(substituted.canonicalized,
       PlanShim.cacheBuilders(substituted), substituted.output.map(_.name))
-    val t3 = System.nanoTime()
     val hit = optimizedMemo.get(key)
-    val out =
-      if (hit != null) { memoHits.incrementAndGet(); hit }
-      else {
-        memoMisses.incrementAndGet()
-        val p = PlanShim.optimizedPlan(df)
-        if (optimizedMemo.size >= MaxMemoEntries) optimizedMemo.clear()
-        optimizedMemo.put(key, p)
-        p
-      }
-    if (trace) {
-      val t4 = System.nanoTime()
-      System.err.println(
-        f"[deferred] analyze=${(t1 - t0) / 1e9}%.3f " +
-          f"substitute=${(t2 - t1) / 1e9}%.3f canon=${(t3 - t2) / 1e9}%.3f " +
-          (if (hit != null) "memo=hit"
-           else f"optimize=${(t4 - t3) / 1e9}%.3f"))
+    if (hit != null) hit
+    else {
+      val p = PlanShim.optimizedPlan(df)
+      if (optimizedMemo.size >= MaxMemoEntries) optimizedMemo.clear()
+      optimizedMemo.put(key, p)
+      p
     }
-    out
   }
 }
 

@@ -1,22 +1,37 @@
 package graft.tools
 
 import scala.collection.mutable.ArrayBuffer
+import scala.jdk.CollectionConverters._
 
 import graft.{Bench, GroupedShuffleListener, Json, SparkEntry}
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.execution.{FormattedMode, InputAdapter, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
+import org.apache.spark.sql.streaming.StreamingQueryListener
 
 /** Single-query profiler: runs one registry query cold, then warm,
   * through [[graft.Bench.consume]] on the bench session and prints, per
-  * run, the row count, wall, settled shuffle-write MB and one line per
-  * completed stage (wall, task and CPU time, input/shuffle records,
-  * shuffle-write and spill MB, shuffle-write time, stage name). Then
-  * the final adaptive plan in formatted form, one exchange line
-  * (shuffle exchanges, their canonical forms, ReusedExchange nodes) and
-  * a one-line JSON record.
+  * run, the row count, wall, settled shuffle-write MB, the driver
+  * phases (registry build, then analysis / optimization / planning from
+  * the query's `QueryPlanningTracker`, then execution), the
+  * generated-class compiles and their compile ms, one line per
+  * streaming micro-batch the build ran (its `durationMs` map) and one
+  * line per completed stage (wall, task and CPU time, input/shuffle
+  * records, shuffle-write and spill MB, shuffle-write time, stage
+  * name). Then the final adaptive plan in formatted form, one exchange
+  * line (shuffle exchanges, their canonical forms, ReusedExchange
+  * nodes) and a one-line JSON record.
+  *
+  * The build phase is the registry closure alone; analysis runs inside
+  * it (a DataFrame analyzes eagerly), so the analysis ms is part of the
+  * build wall. Optimization includes whatever a
+  * [[graft.plans.DeferredBuild]] leaf runs when the optimizer builds it
+  * (Butterfly's sizing ladder). Planning is forced before execution, so
+  * `exec` is the execution alone.
   *
   * Args: `<query> [dir] [key=value ...]`. The second argument is the
   * table dir unless it holds a `=`; every `key=value` is set as a
@@ -34,7 +49,15 @@ object Profile extends AdaptiveSparkPlanHelper {
       shReadRec: Long, shWriteRec: Long, shWriteBytes: Long,
       spillBytes: Long, shWriteMs: Long)
 
+  /** One streaming micro-batch's progress. */
+  final case class Batch(query: String, id: Long, rows: Long,
+      durationMs: Map[String, Long])
+
+  /** `sec` = build + plan + exec; `phasesMs` = the tracker's analysis,
+    * optimization and planning durations. */
   final case class Run(rows: Long, sec: Double, shuffleMb: Double,
+      buildSec: Double, phasesMs: Map[String, Long], execSec: Double,
+      codegenClasses: Long, codegenMs: Long, batches: Seq[Batch],
       stages: Seq[StageRow])
 
   final case class Report(cold: Run, warm: Run, exchanges: String,
@@ -61,6 +84,43 @@ object Profile extends AdaptiveSparkPlanHelper {
     def drain(): Seq[(StageRow, Set[Long])] =
       rows.synchronized { val out = rows.toVector; rows.clear(); out }
   }
+
+  /** Micro-batch progress of every streaming query started in the
+    * session. Start events reach listeners synchronously, progress and
+    * termination through the async bus, in order per query. */
+  private final class BatchLog extends StreamingQueryListener {
+    private val live = collection.mutable.Set.empty[java.util.UUID]
+    private val batches = ArrayBuffer.empty[Batch]
+    override def onQueryStarted(
+        e: StreamingQueryListener.QueryStartedEvent): Unit =
+      synchronized(live += e.runId)
+    override def onQueryProgress(
+        e: StreamingQueryListener.QueryProgressEvent): Unit = synchronized {
+      val p = e.progress
+      batches += Batch(Option(p.name).getOrElse(p.runId.toString), p.batchId,
+        p.numInputRows, p.durationMs.asScala.map { case (k, v) =>
+          k -> v.longValue }.toMap)
+    }
+    override def onQueryTerminated(
+        e: StreamingQueryListener.QueryTerminatedEvent): Unit =
+      synchronized { live -= e.runId; notifyAll() }
+    /** The batches since the last drain, once every started query has
+      * reported terminated (its last progress event came before). */
+    def drain(): Seq[Batch] = synchronized {
+      val deadline = System.currentTimeMillis() + 120000
+      while (live.nonEmpty && System.currentTimeMillis() < deadline)
+        wait(math.max(1, deadline - System.currentTimeMillis()))
+      if (live.nonEmpty) throw new IllegalStateException(
+        s"${live.size} streaming queries never reported terminated")
+      val out = batches.toVector; batches.clear(); out
+    }
+  }
+
+  private def codegen(): (Long, Long) =
+    (CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
+      CodeGenerator.compileTime / 1000000)
+
+  private val phaseNames = Seq("analysis", "optimization", "planning")
 
   /** SQL metric id → (pre-order position, node) over `plan`, its query
     * stages and subqueries. A stage is named by the topmost operator it
@@ -115,25 +175,43 @@ object Profile extends AdaptiveSparkPlanHelper {
         SparkEntry.queries.keys.toSeq.sorted.mkString(", ")))
     val meter = new GroupedShuffleListener
     val stages = new StageLog
+    val streams = new BatchLog
     spark.sparkContext.addSparkListener(meter)
     spark.sparkContext.addSparkListener(stages)
+    spark.streams.addListener(streams)
     try {
       def once(tag: String) = {
         val before = meter.settled("")
         stages.drain()
+        val (c0, ms0) = codegen()
         val t0 = System.nanoTime()
         val df = fn(spark, dir)
+        val t1 = System.nanoTime()
+        df.queryExecution.executedPlan
+        val t2 = System.nanoTime()
         val rows = Bench.consume(df)
-        val sec = (System.nanoTime() - t0) / 1e9
+        val t3 = System.nanoTime()
+        val (c1, ms1) = codegen()
         val mb = (meter.settled("") - before) / 1e6
+        val phases = df.queryExecution.tracker.phases
+          .collect { case (p, s) if phaseNames.contains(p) => p -> s.durationMs }
         val owners = metricOwners(df.queryExecution.executedPlan)
         val named = stages.drain().map { case (row, ids) =>
           ids.flatMap(owners.get).minByOption(_._1)
             .fold(row)(o => row.copy(name = o._2))
         }
-        val r = Run(rows, sec, mb, named.sortBy(-_.taskMs))
-        out(f"[profile] $tag $name rows=$rows wall=$sec%.2f s " +
-          f"shuffle_mb=$mb%.6f stages=${r.stages.size}")
+        val r = Run(rows, (t3 - t0) / 1e9, mb, (t1 - t0) / 1e9, phases,
+          (t3 - t2) / 1e9, c1 - c0, ms1 - ms0, streams.drain(),
+          named.sortBy(-_.taskMs))
+        out(f"[profile] $tag $name rows=$rows wall=${r.sec}%.2f s " +
+          f"shuffle_mb=$mb%.6f stages=${r.stages.size} " +
+          f"build=${r.buildSec}%.2f s " +
+          phaseNames.map(p => s"$p=${phases.getOrElse(p, 0L)}").mkString(" ") +
+          f" ms exec=${r.execSec}%.2f s codegen=${r.codegenClasses} " +
+          s"classes/${r.codegenMs} ms batches=${r.batches.size}")
+        r.batches.foreach(b => out(s"[profile] $tag batch ${b.query} " +
+          s"#${b.id} rows=${b.rows} " + b.durationMs.toSeq.sorted
+            .map { case (k, v) => s"$k=$v" }.mkString("durationMs={", ", ", "}")))
         out(header)
         r.stages.foreach(s => out(line(s)))
         (r, df)
@@ -154,6 +232,7 @@ object Profile extends AdaptiveSparkPlanHelper {
         s""""sf":${Json.str(dir)}}"""
       Report(cold, warm, exchanges, json)
     } finally {
+      spark.streams.removeListener(streams)
       spark.sparkContext.removeSparkListener(stages)
       spark.sparkContext.removeSparkListener(meter)
     }

@@ -24,11 +24,9 @@ class GraftConfSpec extends AnyFunSuite with SparkTestSession {
     AnnProbes -> Seq("", "0"),
     AnnPqTrain -> Seq("2x", "-3"),
     AnnPqCodes -> Seq("ten", "0"),
-    SinkConcurrency -> Seq("abc", "0"),
     BroadcastNodeLimit -> Seq("5M", "-1"),
     ButterflyProbePairBound -> Seq("1.6e7", "-1"),
     ButterflyBroadcastPairLimit -> Seq("none", "-5"),
-    DeferredTiming -> Seq("yes"),
     CcSaltBuckets -> Seq("abc", "-1"),
     CcCheckpointDir -> Seq(" "),
     CcCheckpointInterval -> Seq("five", "0"),
@@ -40,8 +38,8 @@ class GraftConfSpec extends AnyFunSuite with SparkTestSession {
     StreamStatePartitions -> Seq("four", "0"),
     BpeLocalVocabLimit -> Seq("1e6", "-1"))
 
-  test("23 keys, each declared once under spark.graft., 8 of them bench-only") {
-    assert(all.size == 23)
+  test("21 keys, each declared once under spark.graft., 8 of them bench-only") {
+    assert(all.size == 21)
     assert(all.map(_.name).distinct.size == all.size)
     assert(all.forall(_.name.startsWith("spark.graft.")))
     assert(benchOnly.map(_.name).toSet == Set("ann.queryIdBound",

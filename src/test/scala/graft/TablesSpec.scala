@@ -208,6 +208,46 @@ class TablesSpec extends AnyFunSuite with SparkTestSession {
     assert(second.length == 2)
   }
 
+  test("a repeat load of an unchanged table runs no job; a rewrite re-reads its schema") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("schema-memo-").toString
+    Seq((1L, "a")).toDF("id", "name").write.parquet(s"$dir/t.parquet")
+    // job groups of started jobs; a one-job fence group marks the end
+    // of a measured body (listener events arrive in posting order)
+    val started = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        started.put(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .getOrElse(""))
+    }
+    val (measured, fence) = ("tables-spec-load", "tables-spec-fence")
+    def inGroup(g: String)(body: => Any): Unit = {
+      spark.sparkContext.setJobGroup(g, g)
+      try body finally spark.sparkContext.clearJobGroup()
+    }
+    def jobsOf(body: => Any): Int = {
+      inGroup(measured)(body)
+      inGroup(fence)(spark.sparkContext.parallelize(Seq(1), 1).count())
+      Iterator.continually(Option(started.poll(60,
+        java.util.concurrent.TimeUnit.SECONDS)).getOrElse(fail("no fence")))
+        .takeWhile(_ != fence).count(_ == measured)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      jobsOf(()) // drain events posted before the listener was added
+      assert(jobsOf(Tables.load(spark, dir, "t")) > 0) // first: inference
+      assert(jobsOf(Tables.load(spark, dir, "t")) == 0)
+      Seq((2L, "b", 3.5)).toDF("id", "name", "score")
+        .write.mode("overwrite").parquet(s"$dir/t.parquet")
+      val rewritten = Tables.load(spark, dir, "t")
+      assert(rewritten.columns.toSeq == Seq("id", "name", "score"))
+      assert(rewritten.as[(Long, String, Double)].collect().toSeq ==
+        Seq((2L, "b", 3.5)))
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   test("normalization is not gated on the table NAME, and streams too") {
     import spark.implicits._
     // round 7's drift hit `events` — the one table the old name gate

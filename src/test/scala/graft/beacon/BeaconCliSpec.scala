@@ -51,21 +51,21 @@ class BeaconCliSpec extends AnyFunSuite with SparkTestSession {
       .exists(_.contains("How many people in household: 3 (1 baby)"))))
   }
 
-  test("spark.graft.sink.concurrency must be an integer >= 1, named on failure") {
+  test("the seven sinks are written at most SinkConcurrency at a time") {
     val inDir = Files.createTempDirectory("cli-in-")
-    val outDir = Files.createTempDirectory("cli-out-")
     val calls = CallsFixture.writeCallsCsv(inDir)
-    val key = "spark.graft.sink.concurrency"
-    for (bad <- Seq("abc", "0", "-2", "1.5")) {
-      spark.conf.set(key, bad)
-      try {
-        val e = intercept[IllegalArgumentException] {
-          BeaconCli.run(spark, calls.toString, outDir.toString,
-            PrepareCalls.Users(101L, 102L, 103L, 104L))
-        }
-        assert(e.getMessage.contains(key) && e.getMessage.contains(s"'$bad'"))
-      } finally spark.conf.unset(key)
+    val outputs = PrepareCalls(PrepareCalls.fromCsv(spark, calls.toString),
+      PrepareCalls.Users(101L, 102L, 103L, 104L))
+    val running = new java.util.concurrent.atomic.AtomicInteger
+    val peak = new java.util.concurrent.atomic.AtomicInteger
+    val written = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    BeaconCli.writeSinks(outputs) { (name, _) =>
+      peak.accumulateAndGet(running.incrementAndGet(), math.max)
+      try Thread.sleep(100) finally running.decrementAndGet()
+      written.add(name)
     }
-    assert(Files.list(outDir).count() == 0) // failed before any sink ran
+    assert(written.asScala == outputs.all.keySet)
+    assert(BeaconCli.SinkConcurrency == 3)
+    assert(peak.get == BeaconCli.SinkConcurrency)
   }
 }

@@ -29,7 +29,17 @@ class ProfileSpec extends AnyFunSuite with graft.SparkTestSession {
     assert(!names.exists(_.contains("CompletableFuture")), names)
     assert(names.exists(n => n.startsWith("Exchange") ||
       n.startsWith("HashAggregate")), names)
-    assert(lines.exists(_.startsWith(s"[profile] cold $name rows=$expected")))
+    for (r <- Seq(report.cold, report.warm)) {
+      assert(r.buildSec >= 0 && r.execSec >= 0 &&
+        r.sec + 1e-6 >= r.buildSec + r.execSec)
+      assert(r.phasesMs.keySet == Set("analysis", "optimization", "planning"))
+      assert(r.phasesMs.values.forall(_ >= 0))
+      assert(r.codegenClasses >= 0 && r.codegenMs >= 0)
+      assert(r.batches.isEmpty) // a batch query starts no stream
+    }
+    assert(lines.exists(_.matches(s"\\[profile\\] cold $name rows=$expected .* " +
+      "build=\\d+\\.\\d+ s analysis=\\d+ optimization=\\d+ planning=\\d+ ms " +
+      "exec=\\d+\\.\\d+ s codegen=\\d+ classes/\\d+ ms batches=0")), lines)
     assert(lines.exists(_.startsWith(s"[profile] warm $name rows=$expected")))
     assert(lines.contains(report.exchanges))
     assert(report.exchanges.matches(
@@ -40,6 +50,20 @@ class ProfileSpec extends AnyFunSuite with graft.SparkTestSession {
       "cold_shuffle_mb", "warm_sec", "warm_shuffle_mb", "sf"))
     assert(json.get("query").asText == name && json.get("sf").asText == sfDir)
     assert(json.get("cold_sec").asDouble > 0 && json.get("warm_sec").asDouble > 0)
+  }
+
+  test("a streaming query prints each micro-batch's durationMs") {
+    val st = "st_state_v2_dedup"
+    val lines = ArrayBuffer.empty[String]
+    val report = Profile.run(spark, st, sfDir, lines += _)
+    for ((tag, r) <- Seq("cold" -> report.cold, "warm" -> report.warm)) {
+      assert(r.batches.nonEmpty, tag)
+      assert(r.batches.forall(_.durationMs.contains("triggerExecution")), tag)
+      assert(lines.exists(l => l.startsWith(s"[profile] $tag batch ") &&
+        l.contains("triggerExecution=")), lines)
+      assert(lines.exists(_.startsWith(
+        s"[profile] $tag $st rows=${r.rows} ")) && r.rows > 0)
+    }
   }
 
   test("an unknown query fails naming it") {

@@ -1,93 +1,7 @@
 package graft
-import java.util.concurrent.ConcurrentHashMap
-import java.util.concurrent.atomic.LongAdder
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-
-/** Shuffle-write bytes attributed to the JOB GROUP owning each task's
-  * stage, so per-query deltas stop bleeding across neighbors: listener
-  * events arrive asynchronously, and with one global counter a heavy
-  * query's late task events landed in the NEXT query's delta (VERDICT
-  * r9 #2: rel_graph_butterfly read 128 MB in-sweep vs 85 MB
-  * single-query). Job start events map stage ids to the group the
-  * driver thread set via `setJobGroup`; task-end events then bill their
-  * stage's group — late events still bill the RIGHT query, whenever
-  * they arrive. Tasks outside any group (warm-up, canary) bill "".
-  * Pinned in GroupedShuffleSpec. */
-private[graft] class GroupedShuffleListener extends SparkListener {
-  private val stageGroup = new ConcurrentHashMap[Int, String]()
-  private val bytes = new ConcurrentHashMap[String, LongAdder]()
-
-  /** Streaming fallback: a streaming query's micro-batch jobs run on
-    * the StreamExecution thread, which REPLACES the driver thread's
-    * "bench:…" job group with its own runId — so group-only attribution
-    * zeroed every st_ query's shuffle. Jobs whose group is not a bench
-    * group bill the CURRENTLY ACTIVE query instead (set/cleared by the
-    * driver loop around each query; "" outside any query). The
-    * fallback is resolved at JOB START and frozen into the stage map,
-    * so late task-end events still bill the query whose run started
-    * the job. */
-  @volatile private var activeFallback = ""
-  def setActiveFallback(g: String): Unit = activeFallback = g
-
-  override def onJobStart(e: SparkListenerJobStart): Unit = {
-    val g = Option(e.properties)
-      .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-      .filter(_.startsWith("bench:"))
-      .getOrElse(activeFallback)
-    e.stageIds.foreach(sid => stageGroup.put(sid, g))
-  }
-
-  override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
-    val m = e.taskMetrics
-    if (m != null)
-      bytes.computeIfAbsent(stageGroup.getOrDefault(e.stageId, ""),
-        _ => new LongAdder).add(m.shuffleWriteMetrics.bytesWritten)
-  }
-
-  def bytesFor(group: String): Long =
-    Option(bytes.get(group)).map(_.sum()).getOrElse(0L)
-
-  /** [[bytesFor]] once the group's counter is quiescent: listener events
-    * are async, so poll every 25 ms until two reads agree (at most 40
-    * polls). Late events for OTHER groups can keep arriving — they do
-    * not matter to this group's number. A caller that never sets a
-    * "bench:" job group reads group "", which then bills every task. */
-  def settled(group: String): Long = {
-    var prev = -1L; var cur = bytesFor(group); var spins = 0
-    while (cur != prev && spins < 40) {
-      Thread.sleep(25); prev = cur; cur = bytesFor(group); spins += 1
-    }
-    cur
-  }
-
-  /** (result, seconds, shuffle-write MB) for one run of `f`, read
-    * through group "" (every task) — the graph ladders' and probes'
-    * meter. Explicit GC first: at multi-GB shuffle volumes accumulated
-    * heap debt dominates run-to-run variance (52.6 vs 98 s observed
-    * for an identical plan; the bench canary's min-after-GC
-    * discipline). */
-  def timed[A](f: => A): (A, Double, Double) = {
-    System.gc()
-    val b = settled(""); val t0 = System.nanoTime()
-    val r = f
-    val sec = (System.nanoTime() - t0) / 1e9
-    (r, sec, (settled("") - b) / 1e6)
-  }
-}
-
-private[graft] object GroupedShuffleListener {
-  /** A listener registered on `spark` until the caller removes it (a
-    * sweep, in `finally`) or the session stops (a one-rung JVM). */
-  def attach(spark: SparkSession): GroupedShuffleListener = {
-    val l = new GroupedShuffleListener
-    spark.sparkContext.addSparkListener(l)
-    l
-  }
-}
 
 /** Driver-run benchmark: times every registry query at the given SF and
   * prints one JSON line. Queries run in sorted name order after a session
@@ -96,10 +10,6 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-    // ad-hoc A/B knob for the streaming state-partition sizing (see
-    // StreamingQueries.runToMemory); unset = the queries' default
-    sys.env.get("SPARK_GRAFT_STATE_PARTS")
-      .foreach(spark.conf.set(GraftConf.StreamStatePartitions.name, _))
     // JIT/session warmup: exercise codegen, shuffle, and the parquet
     // reader once so the first timed query isn't billed for startup
     spark.range(1000000).selectExpr("sum(id)").collect()
@@ -178,7 +88,7 @@ object Bench {
     // the line's n_queries says so.
     val prefixes = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-    val confs = GraftConf.nonDefaults(spark) // a malformed key fails here
+    val confs = GraftConf.nonDefaults(spark) // a bad or undeclared key fails here
     val (results, canaries) = sweep(spark, sfDir,
       registry(n => prefixes.forall(_.exists(n.startsWith))))
     val (full, compact) = renderLines(results, sfDir, canaries, confs = confs)
@@ -263,15 +173,16 @@ object Bench {
     * Shuffle: per-job-group write bytes of the first warm run — the
     * number that grows 1000× at 100 TB, quantified instead of guessed
     * from plans. Every action of a query runs under its own
-    * `bench:<name>` job group, so late task-end events still bill the
-    * right query. The listener is per call and detached in the
+    * `bench:<name>` job group, and each window is read after a bus
+    * drain, so it holds every task of that query's run and no
+    * neighbor's. The listener is per call and detached in the
     * `finally` below (ADVICE r11): a second sweep on the same session
     * (the two-family harnesses, or an engine-vs-harness A/B pair) must
     * not leave the first one's listener double-counting. */
   private[graft] def sweep(spark: SparkSession, dir: String,
       queries: Seq[(String, (SparkSession, String) => DataFrame)])
       : (Seq[Res], Seq[Double]) = {
-    val meter = GroupedShuffleListener.attach(spark)
+    val meter = QueryListener.attach(spark)
     def timed(fn: (SparkSession, String) => DataFrame): Either[String, Double] = {
       val t0 = System.nanoTime()
       try {
@@ -291,12 +202,13 @@ object Bench {
         meter.setActiveFallback(group)
         try {
           val cold = timed(fn)
-          val before = meter.settled(group)
+          meter.drain(); meter.take(group)
           val warm0 = if (cold.isRight) timed(fn) else cold
           // the window closes around the FIRST warm run only: the
           // settle re-run below would otherwise bill this query's warm
           // shuffle twice
-          val mb = (meter.settled(group) - before) / 1e6
+          meter.drain()
+          val mb = meter.take(group).shuffleBytes / 1e6
           // per-query warm gets the canary's GC discipline (VERDICT r8
           // #3): see settledWarm. At stress scales the cold run's
           // collected sink rows become garbage exactly when the warm
@@ -313,7 +225,7 @@ object Bench {
       }
       canary.checkpoint()
       (results, canary.readings)
-    } finally spark.sparkContext.removeSparkListener(meter)
+    } finally meter.detach()
   }
 
   /** Contention canary for one sweep or ladder: a fixed all-core CPU

@@ -123,8 +123,16 @@ object GraftConf {
   val benchOnly: Seq[Key[_]] = all.filter(_.benchOnly)
 
   /** (key, value as set) for every key whose effective value differs
-    * from its default; a malformed value fails as at its read site. */
-  def nonDefaults(s: SparkSession): Seq[(String, String)] =
+    * from its default; a malformed value fails as at its read site, and
+    * a set `spark.graft.*` key that is not declared here (a typo, a
+    * deleted knob) fails naming it. */
+  def nonDefaults(s: SparkSession): Seq[(String, String)] = {
+    val names = all.map(_.name).toSet
+    val undeclared = s.conf.getAll.keys
+      .filter(k => k.startsWith("spark.graft.") && !names(k)).toSeq.sorted
+    if (undeclared.nonEmpty) throw new IllegalArgumentException(
+      s"undeclared graft conf: ${undeclared.mkString(", ")}")
     all.flatMap(k => s.conf.getOption(k.name)
       .filter(k.read(_) != k.default).map(v => k.name -> v.trim))
+  }
 }

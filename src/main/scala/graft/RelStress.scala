@@ -161,7 +161,7 @@ object RelStress {
     * named `metric` and stamped with the replica factor `scale`. */
   def sweep(spark: SparkSession, dir: String,
       prefix: String, metric: String, scale: Int): Unit = {
-    val confs = GraftConf.nonDefaults(spark) // a malformed key fails here
+    val confs = GraftConf.nonDefaults(spark) // a bad or undeclared key fails here
     val (results, canaries) =
       Bench.sweep(spark, dir, Bench.registry(_.startsWith(prefix)))
     println(Bench.renderLines(results, dir, canaries, metric, Some(scale),

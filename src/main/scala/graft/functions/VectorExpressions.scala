@@ -190,8 +190,8 @@ case class SubspaceL2(first: Expression, second: Expression,
       // leading "||" into invalid Java. The whole PQ/ADC kernel then
       // silently fell back to INTERPRETED execution for every
       // candidate row ("Failed to compile ... ')' expected instead of
-      // 'base_0'" in the sweep logs, r8-r12); CodegenProbe pins the
-      // clean compile now.
+      // 'base_0'" in the sweep logs, r8-r12); PlanSpec pins the clean
+      // compile by running td_ann_pq with the codegen fallback off.
       s"""
          |long $base = (long) $s * $subDim;
          |if ($base < 0 || $base + $subDim > $a.numElements() ||

@@ -1,8 +1,7 @@
 package graft.tools
 
-import graft.Tables
+import graft.{QueryListener, Tables}
 import graft.queries.TextQueries
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 /** Cost-law probe for the distributed BPE trainer (sibling of
   * [[FuzzyStress]]/[[GraphStress]]): trains at increasing merge counts
@@ -31,11 +30,7 @@ object BpeStress {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = Tables.localSession("graft-bpestress", cpus)
 
-    val jobs = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(s: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    })
+    val meter = QueryListener.attach(spark)
     val docs = Tables.load(spark, src, "documents").cache()
     docs.count() // warm the input so per-count timings measure the loop
     // JIT/codegen warmup — without it the first measured count absorbs
@@ -43,11 +38,12 @@ object BpeStress {
     TextQueries.bpeTrain(docs, 5).count()
 
     val lines = counts.map { k =>
-      val j0 = jobs.get()
+      meter.drain(); meter.take("")
       val t0 = System.nanoTime()
       val nRules = TextQueries.bpeTrain(docs, k).count()
       val sec = (System.nanoTime() - t0) / 1e9
-      val nJobs = jobs.get() - j0
+      meter.drain()
+      val nJobs = meter.take("").jobs
       println(f"[bpestress] merges=$k rules=$nRules sec=$sec%.1f " +
         f"sec_per_merge=${sec / k}%.3f jobs=$nJobs " +
         f"jobs_per_merge=${nJobs.toDouble / k}%.2f")

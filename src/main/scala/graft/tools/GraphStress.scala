@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.{Bench, GraftConf, GroupedShuffleListener, Tables}
+import graft.{Bench, GraftConf, QueryListener, Tables}
 import graft.operators.{Butterfly, LabelPropagation, PageRank}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -82,7 +82,7 @@ object GraphStress {
     // shuffle-write bytes per stage-block (VERDICT r8 #6): the stress
     // table must show vp SHUFFLE growing ~linearly with edges, not just
     // wedge counts — shuffle is the number that grows 1000x at 100 TB
-    val meter = GroupedShuffleListener.attach(spark)
+    val meter = QueryListener.attach(spark)
 
     // the registry sweeps' canary (VERDICT r12 #7): started before the
     // ladder, read again after it, so cross-round octave comparisons
@@ -169,7 +169,7 @@ object GraphStress {
       .cache()
     val nEdges = e.count()
 
-    val meter = GroupedShuffleListener.attach(spark)
+    val meter = QueryListener.attach(spark)
     spark.range(1000000).selectExpr("sum(id)").collect()
 
     // adaptive default: tier-1 bound must already pick windowed here
@@ -247,7 +247,7 @@ object GraphStress {
       intra.unionAll(hubs).unionAll(hubhub)
     }
 
-    val meter = GroupedShuffleListener.attach(spark)
+    val meter = QueryListener.attach(spark)
     val canary = new Bench.Canary(spark)
     val lines = scales.map { k =>
       val b = blocksBase * k

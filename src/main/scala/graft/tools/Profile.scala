@@ -1,21 +1,17 @@
 package graft.tools
 
-import scala.collection.mutable.ArrayBuffer
-import scala.jdk.CollectionConverters._
-
-import graft.{Bench, GroupedShuffleListener, Json, SparkEntry}
+import graft.{Bench, GraftConf, Json, QueryListener, SparkEntry}
+import graft.QueryListener.{Batch, StageRow}
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.execution.{FormattedMode, InputAdapter, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
-import org.apache.spark.sql.streaming.StreamingQueryListener
 
 /** Single-query profiler: runs one registry query cold, then warm,
   * through [[graft.Bench.consume]] on the bench session and prints, per
-  * run, the row count, wall, settled shuffle-write MB, the driver
+  * run, the row count, wall, shuffle-write MB, the driver
   * phases (registry build, then analysis / optimization / planning from
   * the query's `QueryPlanningTracker`, then execution), the
   * generated-class compiles and their compile ms, one line per
@@ -43,16 +39,6 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   */
 object Profile extends AdaptiveSparkPlanHelper {
 
-  /** One completed stage attempt, from its aggregated task metrics. */
-  final case class StageRow(id: Int, name: String, tasks: Int,
-      wallMs: Long, taskMs: Long, cpuMs: Long, inRec: Long,
-      shReadRec: Long, shWriteRec: Long, shWriteBytes: Long,
-      spillBytes: Long, shWriteMs: Long)
-
-  /** One streaming micro-batch's progress. */
-  final case class Batch(query: String, id: Long, rows: Long,
-      durationMs: Map[String, Long])
-
   /** `sec` = build + plan + exec; `phasesMs` = the tracker's analysis,
     * optimization and planning durations. */
   final case class Run(rows: Long, sec: Double, shuffleMb: Double,
@@ -62,59 +48,6 @@ object Profile extends AdaptiveSparkPlanHelper {
 
   final case class Report(cold: Run, warm: Run, exchanges: String,
       json: String)
-
-  /** Each stage row with the accumulator ids its tasks updated. */
-  private final class StageLog extends SparkListener {
-    private val rows = ArrayBuffer.empty[(StageRow, Set[Long])]
-    override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
-      val si = e.stageInfo
-      val m = si.taskMetrics
-      val wall = (for {
-        a <- si.completionTime; b <- si.submissionTime
-      } yield a - b).getOrElse(-1L)
-      val row = StageRow(si.stageId, si.name.takeWhile(_ != '\n').take(60),
-        si.numTasks, wall, m.executorRunTime,
-        m.executorCpuTime / 1000000, m.inputMetrics.recordsRead,
-        m.shuffleReadMetrics.recordsRead,
-        m.shuffleWriteMetrics.recordsWritten,
-        m.shuffleWriteMetrics.bytesWritten, m.memoryBytesSpilled,
-        m.shuffleWriteMetrics.writeTime / 1000000)
-      rows.synchronized(rows += (row -> si.accumulables.keySet.toSet))
-    }
-    def drain(): Seq[(StageRow, Set[Long])] =
-      rows.synchronized { val out = rows.toVector; rows.clear(); out }
-  }
-
-  /** Micro-batch progress of every streaming query started in the
-    * session. Start events reach listeners synchronously, progress and
-    * termination through the async bus, in order per query. */
-  private final class BatchLog extends StreamingQueryListener {
-    private val live = collection.mutable.Set.empty[java.util.UUID]
-    private val batches = ArrayBuffer.empty[Batch]
-    override def onQueryStarted(
-        e: StreamingQueryListener.QueryStartedEvent): Unit =
-      synchronized(live += e.runId)
-    override def onQueryProgress(
-        e: StreamingQueryListener.QueryProgressEvent): Unit = synchronized {
-      val p = e.progress
-      batches += Batch(Option(p.name).getOrElse(p.runId.toString), p.batchId,
-        p.numInputRows, p.durationMs.asScala.map { case (k, v) =>
-          k -> v.longValue }.toMap)
-    }
-    override def onQueryTerminated(
-        e: StreamingQueryListener.QueryTerminatedEvent): Unit =
-      synchronized { live -= e.runId; notifyAll() }
-    /** The batches since the last drain, once every started query has
-      * reported terminated (its last progress event came before). */
-    def drain(): Seq[Batch] = synchronized {
-      val deadline = System.currentTimeMillis() + 120000
-      while (live.nonEmpty && System.currentTimeMillis() < deadline)
-        wait(math.max(1, deadline - System.currentTimeMillis()))
-      if (live.nonEmpty) throw new IllegalStateException(
-        s"${live.size} streaming queries never reported terminated")
-      val out = batches.toVector; batches.clear(); out
-    }
-  }
 
   private def codegen(): (Long, Long) =
     (CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
@@ -165,24 +98,21 @@ object Profile extends AdaptiveSparkPlanHelper {
   }
 
   /** Profile registry query `name` on `dir` in `spark`, writing the
-    * report lines to `out`. Shuffle bytes are read from group "" of a
-    * [[GroupedShuffleListener]], i.e. every task while the run is
-    * live. */
+    * report lines to `out`. Each run is read from group "" of a
+    * [[QueryListener]] (every job, stage and micro-batch while the run
+    * is live) after a bus drain. A streaming query the run started
+    * must have reported terminated by then: a stream posts that event
+    * before `awaitTermination` or `stop` returns, and the registry
+    * waits on one of them, so a stream still live fails the run. */
   def run(spark: SparkSession, name: String, dir: String,
       out: String => Unit = println): Report = {
     val fn = SparkEntry.queries.getOrElse(name,
       throw new IllegalArgumentException(s"unknown query $name; known: " +
         SparkEntry.queries.keys.toSeq.sorted.mkString(", ")))
-    val meter = new GroupedShuffleListener
-    val stages = new StageLog
-    val streams = new BatchLog
-    spark.sparkContext.addSparkListener(meter)
-    spark.sparkContext.addSparkListener(stages)
-    spark.streams.addListener(streams)
+    val meter = QueryListener.attach(spark)
     try {
       def once(tag: String) = {
-        val before = meter.settled("")
-        stages.drain()
+        meter.drain(); meter.take("")
         val (c0, ms0) = codegen()
         val t0 = System.nanoTime()
         val df = fn(spark, dir)
@@ -192,16 +122,20 @@ object Profile extends AdaptiveSparkPlanHelper {
         val rows = Bench.consume(df)
         val t3 = System.nanoTime()
         val (c1, ms1) = codegen()
-        val mb = (meter.settled("") - before) / 1e6
+        meter.drain()
+        if (meter.liveStreams > 0) throw new IllegalStateException(
+          s"${meter.liveStreams} streaming queries never reported terminated")
+        val got = meter.take("")
+        val mb = got.shuffleBytes / 1e6
         val phases = df.queryExecution.tracker.phases
           .collect { case (p, s) if phaseNames.contains(p) => p -> s.durationMs }
         val owners = metricOwners(df.queryExecution.executedPlan)
-        val named = stages.drain().map { case (row, ids) =>
-          ids.flatMap(owners.get).minByOption(_._1)
+        val named = got.stages.map { row =>
+          row.accums.flatMap(owners.get).minByOption(_._1)
             .fold(row)(o => row.copy(name = o._2))
         }
         val r = Run(rows, (t3 - t0) / 1e9, mb, (t1 - t0) / 1e9, phases,
-          (t3 - t2) / 1e9, c1 - c0, ms1 - ms0, streams.drain(),
+          (t3 - t2) / 1e9, c1 - c0, ms1 - ms0, got.batches,
           named.sortBy(-_.taskMs))
         out(f"[profile] $tag $name rows=$rows wall=${r.sec}%.2f s " +
           f"shuffle_mb=$mb%.6f stages=${r.stages.size} " +
@@ -231,11 +165,7 @@ object Profile extends AdaptiveSparkPlanHelper {
         f""""warm_sec":${warm.sec}%.3f,"warm_shuffle_mb":${warm.shuffleMb}%.1f,""" +
         s""""sf":${Json.str(dir)}}"""
       Report(cold, warm, exchanges, json)
-    } finally {
-      spark.streams.removeListener(streams)
-      spark.sparkContext.removeSparkListener(stages)
-      spark.sparkContext.removeSparkListener(meter)
-    }
+    } finally meter.detach()
   }
 
   def main(args: Array[String]): Unit = {
@@ -246,6 +176,7 @@ object Profile extends AdaptiveSparkPlanHelper {
         println(s"[profile] conf $k=$v")
         spark.conf.set(k, v)
       }
+      GraftConf.nonDefaults(spark) // a bad or undeclared key fails here
       spark.range(1000000).selectExpr("sum(id)").collect() // session warm-up
       run(spark, name, dir)
     } finally spark.stop()

@@ -6,7 +6,7 @@ import graft.{GraftConf, RelStress, Tables}
   * one (rel_ has [[graft.RelStress]], td_ [[graft.StressSmoke]], the
   * graph operators [[GraphStress]]): replays every `st_*` registry
   * query against a factor-scaled copy of the fixture directory and
-  * reports cold/warm wall time plus settled shuffle-write per query.
+  * reports cold/warm wall time plus fenced shuffle-write per query.
   *
   * The scaled copy comes from [[graft.RelStress.scaleTo]] — the SAME
   * user-universe growth model the relational sweep uses (each replica

@@ -84,6 +84,19 @@ class GraftConfSpec extends AnyFunSuite with SparkTestSession {
       .foreach(k => spark.conf.unset(k.name))
   }
 
+  test("an undeclared spark.graft. key fails naming it") {
+    // a deleted knob and a typo of cc.saltBuckets
+    for ((k, v) <- Seq("spark.graft.base.partitions" -> "4",
+        "spark.graft.cc.saltBucket" -> "2")) {
+      spark.conf.set(k, v)
+      try {
+        val e = intercept[IllegalArgumentException](nonDefaults(spark))
+        assert(e.getMessage == s"undeclared graft conf: $k")
+      } finally spark.conf.unset(k)
+    }
+    assert(nonDefaults(spark).isEmpty)
+  }
+
   test("bad values fail the operators that read them, naming key and value") {
     def failsNaming(key: String, v: String)(body: => Any): Unit = {
       spark.conf.set(key, v)

@@ -62,6 +62,17 @@ class PlanSpec extends AnyFunSuite with SparkTestSession {
     assert(p.contains("graft_subspace_l2"), p.take(4000))
   }
 
+  test("td_ann_pq's whole-stage code compiles, with no interpreted fallback") {
+    // with the fallback off, a whole-stage compile failure throws
+    // instead of silently running the stage interpreted — as the PQ
+    // kernel did in r8-r12, when a generated line started with "||"
+    // and the enclosing template's stripMargin ate it
+    spark.conf.set("spark.sql.codegen.fallback", "false")
+    try assert(Bench.consume(
+      SparkEntry.registry("td_ann_pq").build(spark, sfDir)) > 0)
+    finally spark.conf.unset("spark.sql.codegen.fallback")
+  }
+
   test("rel_filter_project prunes the scan to referenced columns only") {
     val p = plan("rel_filter_project")
     val readSchema = p.linesIterator.find(_.contains("ReadSchema")).get

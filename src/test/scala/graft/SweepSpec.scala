@@ -6,7 +6,7 @@ import com.fasterxml.jackson.databind.ObjectMapper
 import org.scalatest.funsuite.AnyFunSuite
 
 /** [[Bench.sweep]], the one registry sweep behind Bench and the stress
-  * harnesses: cold and warm per query, a settled warm shuffle reading,
+  * harnesses: cold and warm per query, a fenced warm shuffle reading,
   * NonFatal errors recorded per query, and the canary read at start
   * (twice), middle and end. */
 class SweepSpec extends AnyFunSuite with SparkTestSession {

@@ -106,19 +106,19 @@ final class QueryListener private (sc: SparkContext) extends SparkListener {
   /** Streaming queries seen starting and not yet seen terminating. */
   def liveStreams: Int = runGroup.size
 
-  /** (result, seconds, shuffle-write MB) for one run of `f`, read
-    * through group "" (every task) — the graph ladders' meter.
+  /** (result, seconds, reading) for one run of `f`, the reading taken
+    * through group "" (every job and task) — the tools' one meter.
     * Explicit GC first: at multi-GB shuffle volumes accumulated heap
     * debt dominates run-to-run variance (52.6 vs 98 s observed for an
     * identical plan; the bench canary's min-after-GC discipline). */
-  def timed[A](f: => A): (A, Double, Double) = {
+  def timed[A](f: => A): (A, Double, Reading) = {
     System.gc()
     drain(); take("")
     val t0 = System.nanoTime()
     val r = f
     val sec = (System.nanoTime() - t0) / 1e9
     drain()
-    (r, sec, take("").shuffleBytes / 1e6)
+    (r, sec, take(""))
   }
 
   def detach(): Unit = sc.removeSparkListener(this)

@@ -71,9 +71,13 @@ object StressSmoke {
     val nVecs = emb.count()
 
     // completion sentinel: RelStress.copyDone, under this harness's own
-    // prefix so a dir never satisfies the relational growth model
-    val sentinel = "_graft_tdscaled_"
-    if (!RelStress.copyDone(spark, src, out, scale, sentinel)) {
+    // prefix so a dir never satisfies the relational growth model; td_*
+    // queries that touch other tables (events for the distinct sketch)
+    // read them unscaled from the copied ones
+    val copy = RelStress.Copy(RelStress.TdSentinel, s"${scale}x",
+      Seq("documents", "embeddings"), Seq("region", "nation", "customer",
+        "supplier", "part", "orders", "lineitem", "events"))
+    RelStress.ensureCopy(spark, src, out, copy) {
       val reps = spark.range(scale).toDF("rep")
       docs.crossJoin(broadcast(reps))
         .select(
@@ -97,12 +101,6 @@ object StressSmoke {
             .cast("int").as("label"))
         .repartition(cpus.toInt)
         .write.mode("overwrite").parquet(s"$out/embeddings.parquet")
-
-      // td_* queries that touch other tables (events for the distinct
-      // sketch) read them unscaled from the source dir
-      RelStress.sealCopy(spark, src, out, scale, sentinel, Seq("region",
-        "nation", "customer", "supplier", "part", "orders", "lineitem",
-        "events"))
     }
 
     // fixture sizes on their own line (RelStress.sweep's JSON carries

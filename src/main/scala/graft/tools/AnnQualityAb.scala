@@ -1,6 +1,7 @@
 package graft.tools
 
-import graft.{GraftConf, SparkEntry, Tables}
+import graft.{GraftConf, QueryListener, RelStress, SparkEntry, Tables}
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** ANN quality A/B on a CLUSTERED embedding fixture (VERDICT r14 #1/#2).
@@ -42,12 +43,48 @@ import org.apache.spark.sql.functions._
 object AnnQualityAb {
 
   /** Integer-mix pseudo-noise in [-0.5, 0.5): Knuth/FNV-style odd
-    * multipliers, exact in long arithmetic at any realistic id
-    * (shared with [[DriftRetrain]]'s two-epoch fixture). */
-  private[tools] def mix(a: org.apache.spark.sql.Column,
-      b: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+    * multipliers, exact in long arithmetic at any realistic id. */
+  private def mix(a: Column, b: Column): Column =
     (pmod(a * lit(2654435761L) + b * lit(40503L) + lit(2166136261L),
       lit(1000003L)).cast("double") / lit(1000003.0)) - lit(0.5)
+
+  /** Write (once per source vintage, scale, noise and shift — a
+    * [[graft.RelStress.Copy]]) the clustered embeddings at
+    * `$out/embeddings.parquet`: the 1× ids replicated `scale` times,
+    * each vector unit(mu_label) + noise·eps. With `shift`, arrivals
+    * (vec_id % 5 = 4) take their label direction from a second epoch
+    * (mix offset 104729, the 10000th prime, instead of 7919) —
+    * near-orthogonal in 64-d, the distribution shift [[DriftAutoRetrain]]
+    * detects; the noise is unchanged, so the direction is the ONLY
+    * difference. Returns (1× vectors, dimension). */
+  private[tools] def clusteredEmbeddings(spark: SparkSession, src: String,
+      out: String, scale: Int, noise: Double, shift: Boolean,
+      cpus: Int): (Long, Int) = {
+    val emb = Tables.load(spark, src, "embeddings")
+    val nBase = emb.count()
+    val dim = emb.select(size(col("embedding"))).head().getInt(0)
+    val copy = RelStress.Copy(RelStress.ClusteredSentinel,
+      s"${scale}x_s${noise}_shift$shift", Seq("embeddings"))
+    RelStress.ensureCopy(spark, src, out, copy) {
+      val js = sequence(lit(0), lit(dim - 1))
+      // per-label direction mu (label offset by a prime so label-0
+      // isn't the all-equal row), per-REPLICATED-vector noise eps
+      val mu = (j: Column) => mix(col("label") + col("epoch"), j)
+      emb.crossJoin(broadcast(spark.range(scale).toDF("rep")))
+        .select((col("vec_id") + col("rep") * lit(nBase)).as("vec_id"),
+          col("label"))
+        .withColumn("epoch", when(col("vec_id") % 5 === 4 && lit(shift),
+          lit(104729L)).otherwise(lit(7919L)))
+        .withColumn("munorm", sqrt(aggregate(transform(js, mu), lit(0.0),
+          (acc, x) => acc + x * x)))
+        .select(col("vec_id"), transform(js, j => (mu(j) / col("munorm") +
+            lit(noise) * mix(col("vec_id"), j)).cast("float")).as("embedding"),
+          col("label"))
+        .repartition(cpus)
+        .write.mode("overwrite").parquet(s"$out/embeddings.parquet")
+    }
+    (nBase, dim)
+  }
 
   def main(args: Array[String]): Unit = {
     val scale = args.headOption.map(_.toInt).getOrElse(10)
@@ -57,42 +94,11 @@ object AnnQualityAb {
     val noise = if (args.length > 3) args(3).toDouble else 1.2
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = Tables.pinDialect(Tables.localSession("graft-ann-ab", cpus))
-    import spark.implicits._
+    val meter = QueryListener.attach(spark)
 
-    val emb = Tables.load(spark, src, "embeddings")
-    val nVecs = emb.count()
-    val dim = emb.select(size(col("embedding"))).head().getInt(0)
+    val (nVecs, dim) =
+      clusteredEmbeddings(spark, src, out, scale, noise, shift = false, cpus.toInt)
     val total = nVecs * scale
-
-    val marker = java.nio.file.Paths.get(
-      s"$out/_graft_clustered_${scale}x_${nVecs}_s$noise")
-    if (!java.nio.file.Files.exists(marker)) {
-      val reps = spark.range(scale).toDF("rep")
-      val js = sequence(lit(0), lit(dim - 1))
-      // per-label direction mu (label offset by a prime so label-0
-      // isn't the all-equal row), per-REPLICATED-vector noise eps
-      val withId = emb.crossJoin(broadcast(reps))
-        .select((col("vec_id") + col("rep") * lit(nVecs)).as("vec_id"),
-          col("label"))
-      val mu = transform(js, j => mix(col("label") + lit(7919L), j))
-      val clustered = withId
-        .withColumn("munorm",
-          sqrt(aggregate(mu, lit(0.0), (acc, x) => acc + x * x)))
-        .select(col("vec_id"), col("label"),
-          transform(js, j =>
-            (mix(col("label") + lit(7919L), j) / col("munorm") +
-              lit(noise) * mix(col("vec_id"), j)).cast("float"))
-            .as("embedding"))
-        .select(col("vec_id"), col("embedding"), col("label"))
-      clustered.repartition(cpus.toInt)
-        .write.mode("overwrite").parquet(s"$out/embeddings.parquet")
-      val listing = java.nio.file.Files.list(java.nio.file.Paths.get(out))
-      try listing.filter(p =>
-          p.getFileName.toString.startsWith("_graft_clustered_"))
-        .forEach(java.nio.file.Files.delete(_))
-      finally listing.close()
-      java.nio.file.Files.createFile(marker)
-    }
 
     // index sizing: the √n exact-assignment optimum for the scaled
     // corpus (same law as StressSmoke); the brute recall denominator
@@ -119,12 +125,10 @@ object AnnQualityAb {
       if (train) spark.conf.set(GraftConf.AnnIvfTrain.name, "2")
       else spark.conf.unset(GraftConf.AnnIvfTrain.name)
       spark.conf.set(GraftConf.AnnProbes.name, probes.toString)
-      val t0 = System.nanoTime()
-      val recall = mean("td_knn_ann_recall", "recall_at_3")
-      val tRecall = (System.nanoTime() - t0) / 1e9
-      val t1 = System.nanoTime()
-      val purity = mean("td_knn_purity_ann", "knn_purity")
-      val tPurity = (System.nanoTime() - t1) / 1e9
+      val (recall, tRecall, _) =
+        meter.timed(mean("td_knn_ann_recall", "recall_at_3"))
+      val (purity, tPurity, _) =
+        meter.timed(mean("td_knn_purity_ann", "knn_purity"))
       println(f"""{"metric":"ann_ab","train":$train,"probes":$probes,""" +
         f""""recall_at_3":$recall%.6f,"purity_ann":$purity%.6f,""" +
         f""""sec_recall":$tRecall%.2f,"sec_purity":$tPurity%.2f}""")
@@ -148,9 +152,7 @@ object AnnQualityAb {
       if (pqTrain) spark.conf.set(GraftConf.AnnPqTrain.name, "2")
       else spark.conf.unset(GraftConf.AnnPqTrain.name)
       spark.conf.set(GraftConf.AnnPqCodes.name, codes.toString)
-      val t0 = System.nanoTime()
-      val recall = mean("td_ann_pq_recall", "recall_at_3")
-      val sec = (System.nanoTime() - t0) / 1e9
+      val (recall, sec, _) = meter.timed(mean("td_ann_pq_recall", "recall_at_3"))
       println(f"""{"metric":"pq_ab","train":$pqTrain,"codes":$codes,""" +
         f""""recall_at_3":$recall%.6f,"sec":$sec%.2f}""")
     }

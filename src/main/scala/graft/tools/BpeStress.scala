@@ -38,12 +38,8 @@ object BpeStress {
     TextQueries.bpeTrain(docs, 5).count()
 
     val lines = counts.map { k =>
-      meter.drain(); meter.take("")
-      val t0 = System.nanoTime()
-      val nRules = TextQueries.bpeTrain(docs, k).count()
-      val sec = (System.nanoTime() - t0) / 1e9
-      meter.drain()
-      val nJobs = meter.take("").jobs
+      val (nRules, sec, got) = meter.timed(TextQueries.bpeTrain(docs, k).count())
+      val nJobs = got.jobs
       println(f"[bpestress] merges=$k rules=$nRules sec=$sec%.1f " +
         f"sec_per_merge=${sec / k}%.3f jobs=$nJobs " +
         f"jobs_per_merge=${nJobs.toDouble / k}%.2f")

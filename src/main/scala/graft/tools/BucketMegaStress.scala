@@ -50,10 +50,8 @@ object BucketMegaStress {
       struct(lit(-1L).as("nid")).as("dig"), setOf(lit(missBase)).as("hsb"))
     val newSide = (matching :+ miss).reduce(_ unionByName _)
 
-    val t0 = System.nanoTime()
-    val admitted = graft.plans.BucketAdmitJoinApi
-      .admitJoin(newSide, existing).collect()
-    val sec = (System.nanoTime() - t0) / 1e9
+    val (admitted, sec, _) = graft.QueryListener.attach(spark)
+      .timed(graft.plans.BucketAdmitJoinApi.admitJoin(newSide, existing).collect())
     val ids = admitted.map(_.getStruct(0).getLong(0)).sorted.toSeq
     println(f"""{"metric":"megabucket","n_existing":$nExisting,""" +
       f""""chunk_bytes":"$chunk","admitted":${ids.length},""" +

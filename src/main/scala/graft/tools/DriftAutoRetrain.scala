@@ -2,16 +2,19 @@ package graft.tools
 
 import java.util.concurrent.atomic.AtomicReference
 
-import graft.{GraftConf, Tables}
+import graft.{GraftConf, QueryListener, Tables}
+import graft.functions.GraftFunctions.dot
 import graft.operators.IvfIndex
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.{Dataset, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
-/** The STREAMING-NATIVE drift→retrain handoff (VERDICT r16 #8):
-  * [[DriftRetrain]] proves each leg of the loop as a manually-sequenced
-  * A/B; this tool closes it INSIDE one streaming query — no operator
-  * between the signal and the republish:
+/** The drift→retrain loop (VERDICT r15 #5, r16 #8), closed INSIDE one
+  * streaming query — no operator between the signal and the republish
+  * — then measured as a stale/fresh serving A/B. It is the
+  * quantizer-staleness problem of continuously adaptive similarity
+  * search: arriving vectors stop matching the corpus the IVF quantizer
+  * was trained on.
   *
   *   - the arrival stream runs st_embedding_drift's exact scoring
   *     aggregation (same [[graft.queries.StreamingQueries.driftScoreAgg]]
@@ -21,7 +24,7 @@ import org.apache.spark.sql.streaming.Trigger
   *   - the sink is a foreachBatch that joins each epoch's state against
   *     the static pre-drift baseline and evaluates the calibrated
   *     trigger (mean drift < −0.05 — three orders of magnitude below
-  *     the measured ±0.002 same-epoch control band, DriftRetrain r16);
+  *     the measured ±0.002 same-epoch control band, BASELINE r16);
   *   - the FIRST epoch that fires runs the handoff in-sink: Lloyd-2
   *     retrain on the grown corpus (the bench-only ivf.train lever),
   *     `IvfIndex.ensureSaved` republish under a NEW content-derived
@@ -29,15 +32,25 @@ import org.apache.spark.sql.streaming.Trigger
   *     server either still reads the old vintage or the complete new
   *     one, never a torn index — and records the new vintage's dir;
   *   - after the stream drains, the arrival batch is served from BOTH
-  *     vintages through the production `servePruned` read path, and
-  *     the before/after serving-cost deltas (candidates per query,
-  *     worst-cell skew — the metrics DriftRetrain proved the retrain
-  *     improves) are printed alongside which epoch fired.
+  *     vintages through the production `servePruned` read path
+  *     (candidates per query, worst-cell skew, serve wall), and both
+  *     vintages' centroids are scored on the GROWN corpus against exact
+  *     brute-force top-3 (self-excluded): recall@3 at probes=1 — a
+  *     shifted cluster sits near the BOUNDARY of the old cells it
+  *     straddles, so single-probe serving splits it — and at the
+  *     default probes=2, which HIDES moderate drift at twice the
+  *     candidate cost (why monitors watch the drift signal and the
+  *     candidate volume, not recall alone).
   *
-  * Fixture: the same two-epoch distribution shift as [[DriftRetrain]]
-  * (shared `ensureFixture`), so the trigger calibration carries over.
+  * Fixture: [[AnnQualityAb.clusteredEmbeddings]] with the epoch shift
+  * (arrivals, vec_id % 5 = 4, cluster around near-orthogonal label
+  * directions). Noise default 0.6: tight enough that clusters have
+  * real cell structure, loose enough that brute purity is not
+  * saturated. A 5th arg `control` writes the unshifted fixture — the
+  * no-drift baseline that calibrates the threshold: the trigger must
+  * never fire there, and the run fails if it does.
   *
-  * {{{ tools/runmain.sh graft.tools.DriftAutoRetrain 10 /root/testdata/sf0.1 }}}
+  * {{{ tools/runmain.sh graft.tools.DriftAutoRetrain 10 <sf dir> [out] [noise] [control] }}}
   */
 object DriftAutoRetrain {
 
@@ -54,8 +67,8 @@ object DriftAutoRetrain {
     * dirs, the firing epoch, and how many times the in-sink publish
     * branch actually ran (the exactly-once guarantee under a trigger
     * condition that stays true for every post-shift epoch). */
-  private[graft] case class HandoffReport(nBase: Long, total: Long,
-    cells: Int, staleDir: String, freshDir: Option[String],
+  private[graft] case class HandoffReport(nBase: Long, cells: Int,
+    staleDir: String, freshDir: Option[String],
     firedEpoch: Option[Long], firedMean: Double, handoffRuns: Int,
     epochs: Seq[EpochRec])
 
@@ -65,19 +78,21 @@ object DriftAutoRetrain {
     val out = if (args.length > 2) args(2)
       else s"${System.getProperty("java.io.tmpdir")}/graft-adrift-x$scale"
     val noise = if (args.length > 3) args(3).toDouble else 0.6
+    val control = args.length > 4 && args(4) == "control"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = Tables.pinDialect(Tables.localSession("graft-adrift", cpus))
-    import graft.queries.DedupQueries
 
-    val report = runHandoff(spark, src, out, scale, noise, cpus.toInt)
-    require(report.firedEpoch.isDefined,
-      "the drift trigger never fired on the shifted fixture — " +
-        "monitor or threshold regression")
-    val (nBase, cells) = (report.nBase, report.cells)
-    val (staleDir, freshDir) = (report.staleDir, report.freshDir.get)
-    val (fireEpoch, fireMean) = (report.firedEpoch.get, report.firedMean)
-    val n = DedupQueries.normalizedEmbeddings(spark, out)
-    serveAb(spark, n, nBase, cells, staleDir, freshDir, fireEpoch, fireMean)
+    val report = runHandoff(spark, src, out, scale, noise, cpus.toInt,
+      shift = !control)
+    if (control) require(report.firedEpoch.isEmpty,
+      "the drift trigger fired on the control fixture at epoch " +
+        s"${report.firedEpoch.get} — threshold inside the no-drift band")
+    else {
+      require(report.firedEpoch.isDefined,
+        "the drift trigger never fired on the shifted fixture — " +
+          "monitor or threshold regression")
+      serveAb(spark, out, report)
+    }
     spark.stop()
   }
 
@@ -89,12 +104,12 @@ object DriftAutoRetrain {
     * epoch retrain + republish in-sink. Leaves no bench conf set. */
   private[graft] def runHandoff(spark: org.apache.spark.sql.SparkSession,
       src: String, out: String, scale: Int, noise: Double,
-      cpus: Int): HandoffReport = {
+      cpus: Int, shift: Boolean = true): HandoffReport = {
     import graft.queries.{DedupQueries, SimilarityQueries, StreamingQueries}
 
-    val (nBase, total) = DriftRetrain.ensureFixture(
-      spark, src, out, scale, noise, control = false, cpus)
-    val cells = math.max(16, math.round(math.sqrt(total / 2.0))).toInt
+    val (nBase, _) =
+      AnnQualityAb.clusteredEmbeddings(spark, src, out, scale, noise, shift, cpus)
+    val cells = math.max(16, math.round(math.sqrt(nBase * scale / 2.0))).toInt
     val tmp = System.getProperty("java.io.tmpdir")
     val embPath = s"$out/embeddings.parquet"
 
@@ -105,8 +120,8 @@ object DriftAutoRetrain {
 
     // ---- the CURRENTLY-SERVING vintage, published before any arrival
     // (Lloyd-2 on the pre-drift corpus; seed bound widened 5/4 so both
-    // quantizers train exactly `cells` centroids — the DriftRetrain
-    // discipline)
+    // quantizers train exactly `cells` centroids: ivfCentroids seeds
+    // vec_id < bound, and the pre-drift corpus holds 4 of every 5 ids)
     spark.conf.set(GraftConf.AnnIvfTrain.name, "2")
     val staleDir = IvfIndex.ensureSaved(
       s"$tmp/${Tables.artifactKey(spark, "graft-ardx-stale", embPath)}") {
@@ -135,8 +150,7 @@ object DriftAutoRetrain {
       .filter(col("vec_id") % 5 === 4)
       .select(col("label"),
         col("embedding").cast("array<double>").as("vd"))
-      .withColumn("nrm",
-        sqrt(graft.functions.GraftFunctions.dot(col("vd"), col("vd"))))
+      .withColumn("nrm", sqrt(dot(col("vd"), col("vd"))))
       .select(col("label"),
         transform(col("vd"), x => x / col("nrm")).as("an"))
     val scored = StreamingQueries.driftScoreAgg(arrivals, cu, "n_new", "nsum")
@@ -161,6 +175,8 @@ object DriftAutoRetrain {
         val trigger = d.nonEmpty && mean < -0.05
         println(f"""{"metric":"adrift_epoch","epoch":$epoch,""" +
           f""""labels":${d.length},"mean_drift":$mean%.4f,""" +
+          f""""min_drift":${d.minOption.getOrElse(0.0)}%.4f,""" +
+          f""""max_drift":${d.maxOption.getOrElse(0.0)}%.4f,""" +
           f""""retrain_triggered":$trigger}""")
         if (trigger && fired.get() == null) {
           // THE HANDOFF: retrain on the grown corpus, publish the new
@@ -194,30 +210,42 @@ object DriftAutoRetrain {
     spark.conf.unset(GraftConf.AnnIvfTrain.name)
 
     import scala.jdk.CollectionConverters._
-    HandoffReport(nBase, total, cells, staleDir,
+    HandoffReport(nBase, cells, staleDir,
       Option(fired.get()).map(_._3), Option(fired.get()).map(_._1),
       Option(fired.get()).map(_._2).getOrElse(0.0), handoffRuns.get(),
       epochs.iterator().asScala.toSeq.sortBy(_.epoch))
   }
 
-  /** The after-drain A/B: the arrival batch served from BOTH persisted
-    * vintages through the production `servePruned` read path, printing
-    * the before/after serving-cost deltas (candidates per query,
-    * worst-cell skew) alongside which epoch fired. */
+  /** The after-drain A/B over the arrival batch (vec_id % 5 = 4, ids
+    * below 2× the 1× count — misses are a percent-scale effect, so the
+    * sample needs a few thousand truth edges), per vintage: the
+    * production `servePruned` read of its persisted index, candidates
+    * per query and worst-cell skew of that index, and recall@3 at
+    * probes 1 and 2 of its centroids over the grown corpus. */
   private def serveAb(spark: org.apache.spark.sql.SparkSession,
-      n: DataFrame, nBase: Long, cells: Int, staleDir: String,
-      freshDir: String, fireEpoch: Long, fireMean: Double): Unit = {
-    val queries = n.filter(col("vec_id") % 5 === 4 &&
-        col("vec_id") < nBase * 2)
+      out: String, r: HandoffReport): Unit = {
+    val grown = graft.queries.DedupQueries.normalizedEmbeddings(spark, out)
+    val queries = grown.filter(col("vec_id") % 5 === 4 &&
+        col("vec_id") < r.nBase * 2)
       .select(col("vec_id").as("q_id"), col("an").as("qa"))
       .localCheckpoint(false)
     val nQueries = queries.count()
-    val stats = for ((tag, dir) <- Seq("stale" -> staleDir,
-        "fresh" -> freshDir)) yield {
+    val truth = graft.plans.TopK.topKPerKey(
+        grown.crossJoin(broadcast(queries))
+          .filter(col("vec_id") =!= col("q_id"))
+          .select(col("q_id"), col("vec_id").as("n_id"),
+            dot(col("qa"), col("an")).as("cosine")),
+        keys = Seq(col("q_id")),
+        order = Seq(col("cosine").desc, col("n_id").asc), k = 3)
+      .select(col("q_id"), col("n_id"))
+      .localCheckpoint(false)
+    val nTrue = truth.count()
+    val meter = QueryListener.attach(spark)
+    val legs = for ((tag, dir) <- Seq("stale" -> r.staleDir,
+        "fresh" -> r.freshDir.get)) yield {
       val (lc, lp) = IvfIndex.load(spark, dir)
-      val t0 = System.nanoTime()
-      val served = IvfIndex.servePruned(queries, lc, lp).count()
-      val sec = (System.nanoTime() - t0) / 1e9
+      val (served, sec, _) =
+        meter.timed(IvfIndex.servePruned(queries, lc, lp).count())
       val cands = IvfIndex.probeFrame(queries, lc, "q_id", "qa", 1)
         .select(col("q_id"), col("cell"))
         .join(lp.select(col("cell")), Seq("cell")).count()
@@ -229,20 +257,24 @@ object DriftAutoRetrain {
       // exactly the stale/fresh comparison this tool exists to print.
       val occRow = lp.groupBy(col("cell")).count()
         .agg(max(col("count")), count(lit(1)), sum(col("count"))).head()
-      val (occ, liveCells, indexed) =
-        (occRow.getLong(0), occRow.getLong(1), occRow.getLong(2))
-      val skew = occ.toDouble * liveCells / indexed
-      (tag, cands.toDouble / nQueries, skew, served, sec)
+      val skew = occRow.getLong(0).toDouble * occRow.getLong(1) /
+        occRow.getLong(2)
+      // recall of this vintage's centroids over the GROWN corpus
+      val postings = IvfIndex.build(grown, r.cells, Some(lc))._2
+        .localCheckpoint(false)
+      val Seq(rec1, rec2) = Seq(1, 2).map(p => truth.join(
+        IvfIndex.serve(queries, lc, postings, probes = p)
+          .select(col("q_id"), col("n_id")), Seq("q_id", "n_id"))
+        .count().toDouble / nTrue)
+      Seq("cands_per_query" -> f"${cands.toDouble / nQueries}%.1f",
+        "cell_skew" -> f"$skew%.2f", "recall_p1" -> f"$rec1%.4f",
+        "recall_p2" -> f"$rec2%.4f", "serve_rows" -> served.toString,
+        "serve_s" -> f"$sec%.2f")
+        .map { case (k, v) => s""""${tag}_$k":$v""" }.mkString(",")
     }
-    val Seq(stale, fresh) = stats
-    println(f"""{"metric":"adrift_serving","fired_epoch":$fireEpoch,""" +
-      f""""fired_mean_drift":$fireMean%.4f,"cells":$cells,""" +
-      f""""batch":$nQueries,""" +
-      f""""stale_cands_per_query":${stale._2}%.1f,""" +
-      f""""fresh_cands_per_query":${fresh._2}%.1f,""" +
-      f""""stale_cell_skew":${stale._3}%.2f,""" +
-      f""""fresh_cell_skew":${fresh._3}%.2f,""" +
-      f""""stale_serve_rows":${stale._4},"fresh_serve_rows":${fresh._4},""" +
-      f""""stale_serve_s":${stale._5}%.2f,"fresh_serve_s":${fresh._5}%.2f}""")
+    meter.detach()
+    println(f"""{"metric":"adrift_serving","fired_epoch":${r.firedEpoch.get},""" +
+      f""""fired_mean_drift":${r.firedMean}%.4f,"cells":${r.cells},""" +
+      s""""batch":$nQueries,"true_edges":$nTrue,${legs.mkString(",")}}""")
   }
 }

@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.{Json, Tables}
+import graft.{QueryListener, Tables}
 import graft.queries.RelationalQueries
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -58,6 +58,7 @@ object FuzzyStress {
     def pairVolume(blocks: DataFrame): Long =
       blocks.agg(sum(col("m") * (col("m") - 1))).head().getLong(0) / 2
 
+    val meter = QueryListener.attach(spark)
     val lines = scales.map { s =>
       val c = scaled(s).cache()
       val n = c.count()
@@ -72,9 +73,8 @@ object FuzzyStress {
       val symPairs = pairVolume(RelationalQueries.symDelSignatures(names)
         .groupBy("variant").agg(count(lit(1)).as("m")))
       // and the exact join end to end
-      val t0 = System.nanoTime()
-      val out = RelationalQueries.fuzzyJoinSymDel(names).count()
-      val sec = (System.nanoTime() - t0) / 1e9
+      val (out, sec, _) =
+        meter.timed(RelationalQueries.fuzzyJoinSymDel(names).count())
       c.unpersist()
       println(f"[fuzzystress] scale=$s n=$n nation_pairs=$nationPairs " +
         f"sig_pairs=$sigPairs symdel_pairs=$symPairs " +

@@ -100,8 +100,9 @@ object GraphStress {
         (col("s") * 2 + 1).as("dst"))
       val (vpWedges, wedgeSec, _) =
         meter.timed(Butterfly.wedges(enc, "src", "dst").count())
-      val (nVerts, vpSec, vpShuffleMb) =
+      val (nVerts, vpSec, vp) =
         meter.timed(Butterfly.perVertexCounts(enc, "src", "dst").count())
+      val vpShuffleMb = vp.shuffleBytes / 1e6
       val und = enc.union(enc.select(col("dst").as("src"),
         col("src").as("dst")))
       val (_, prSec, _) = meter.timed(PageRank.run(und, 3).count())
@@ -173,20 +174,21 @@ object GraphStress {
     spark.range(1000000).selectExpr("sum(id)").collect()
 
     // adaptive default: tier-1 bound must already pick windowed here
-    val (nAdaptive, adSec, adMb) =
+    val (nAdaptive, adSec, ad) =
       meter.timed(Butterfly.perVertexCounts(e, "src", "dst").count())
-    val (_, adWarmSec, adWarmMb) =
+    val (_, adWarmSec, adWarm) =
       meter.timed(Butterfly.perVertexCounts(e, "src", "dst").count())
     // forced broadcast: lift both tiers so the probe materializes and
     // broadcasts the wedge-sized pair table — the measured collapse
     spark.conf.set(GraftConf.ButterflyProbePairBound.name, "1000000000000")
     spark.conf.set(GraftConf.ButterflyBroadcastPairLimit.name, "1000000000000")
-    val (nForced, bcSec, bcMb) =
+    val (nForced, bcSec, bc) =
       try meter.timed(Butterfly.perVertexCounts(e, "src", "dst").count())
       finally {
         spark.conf.unset(GraftConf.ButterflyProbePairBound.name)
         spark.conf.unset(GraftConf.ButterflyBroadcastPairLimit.name)
       }
+    val Seq(adMb, adWarmMb, bcMb) = Seq(ad, adWarm, bc).map(_.shuffleBytes / 1e6)
     require(nForced == nAdaptive,
       s"regime results diverged: $nAdaptive adaptive vs $nForced forced")
     // every vertex is in C(8,2)·C(8,2)… butterflies: blocks*16 vertices
@@ -259,10 +261,11 @@ object GraphStress {
         .agg(sum(expr("deg * (deg - 1) div 2"))).head().getLong(0)
       val orientedWedges =
         Triangles.orientedWedgeCount(e).head().getLong(0)
-      val (nTri, coldSec, coldMb) = meter.timed(
+      val (nTri, coldSec, cold) = meter.timed(
         Triangles.globalFromCanonical(e).head().getLong(0))
-      val (_, warmSec, warmMb) = meter.timed(
+      val (_, warmSec, warm) = meter.timed(
         Triangles.globalFromCanonical(e).head().getLong(0))
+      val (coldMb, warmMb) = (cold.shuffleBytes / 1e6, warm.shuffleBytes / 1e6)
       val expected = 696L * b + 120
       require(nTri == expected,
         s"scale $k: expected $expected triangles, got $nTri")

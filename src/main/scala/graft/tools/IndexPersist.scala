@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.Tables
+import graft.{QueryListener, RelStress, Tables}
 import graft.operators.IvfIndex
 import org.apache.spark.sql.functions._
 
@@ -38,12 +38,6 @@ import org.apache.spark.sql.functions._
   */
 object IndexPersist {
 
-  private def timed[A](f: => A): (A, Double) = {
-    val t0 = System.nanoTime()
-    val a = f
-    (a, (System.nanoTime() - t0) / 1e9)
-  }
-
   def main(args: Array[String]): Unit = {
     val scale = args.headOption.map(_.toInt).getOrElse(10)
     val src = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
@@ -51,6 +45,7 @@ object IndexPersist {
       else s"${System.getProperty("java.io.tmpdir")}/graft-ivfidx-x$scale"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = Tables.pinDialect(Tables.localSession("graft-ivf-index", cpus))
+    val meter = QueryListener.attach(spark)
 
     val emb = Tables.load(spark, src, "embeddings")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("vd"))
@@ -68,18 +63,13 @@ object IndexPersist {
     val idxDir = s"$work/index"
 
     // ---- untimed fixture prep: materialize the scaled corpus once
-    // (sentinel-guarded against half-writes, keyed on the source
-    // vintage so a refreshed base fixture regenerates)
+    // (RelStress.ensureCopy: sentinel-guarded against half-writes, keyed
+    // on the embeddings table's vintage so a refreshed base fixture
+    // regenerates)
     val corpusDir = s"$work/corpus.parquet"
-    // fingerprint the TABLE actually read, not the dataset root — the
-    // root listing only stamps immediate children (the artifactKey
-    // call-site contract; review r17)
-    val sentinel = java.nio.file.Paths.get(
-      s"$work/_graft_ivfcorpus_${scale}x_" +
-        Tables.pathFingerprint(spark, s"$src/embeddings.parquet")
-          .replaceAll("[^0-9a-zA-Z-]", "_"))
-    val (_, fixtureS) = timed {
-      if (!java.nio.file.Files.exists(sentinel)) {
+    val (_, fixtureS, _) = meter.timed {
+      RelStress.ensureCopy(spark, src, work, RelStress.Copy(
+          RelStress.IvfCorpusSentinel, s"${scale}x", Seq("embeddings"))) {
         val reps = spark.range(scale).toDF("rep")
         val noise = (r: org.apache.spark.sql.Column,
             v: org.apache.spark.sql.Column, j: org.apache.spark.sql.Column) =>
@@ -97,12 +87,6 @@ object IndexPersist {
             .as("an"))
           .repartition(cpus.toInt)
           .write.mode("overwrite").parquet(corpusDir)
-        val listing = java.nio.file.Files.list(java.nio.file.Paths.get(work))
-        try listing.filter(p =>
-            p.getFileName.toString.startsWith("_graft_ivfcorpus_"))
-          .forEach(java.nio.file.Files.delete(_))
-        finally listing.close()
-        java.nio.file.Files.createFile(sentinel)
       }
     }
 
@@ -130,23 +114,18 @@ object IndexPersist {
 
     // fixed 1x query batch (the production serving regime: batch size
     // does not grow with the corpus)
-    val queries = emb.filter(col("vec_id") % 5 === 4)
-      .withColumn("nrm", sqrt(aggregate(col("vd"), lit(0.0),
-        (acc, x) => acc + x * x)))
-      .select(col("vec_id").as("q_id"),
-        transform(col("vd"), x => x / col("nrm")).as("qa"))
+    val queries = graft.queries.DedupQueries.normalizedEmbeddings(spark, src)
+      .filter(col("vec_id") % 5 === 4)
+      .select(col("vec_id").as("q_id"), col("an").as("qa"))
     val nQueries = queries.count()
 
     val (lc, lp) = IvfIndex.load(spark, idxDir)
     // the production read path: probed cells collected (O(√n) bound),
     // pushed as a static partition filter on the postings scan
-    val serveS = (1 to 3).map { i =>
-      val (_, s) = timed {
-        IvfIndex.servePruned(queries, lc, lp)
-          .write.mode("overwrite").parquet(s"$work/answers_$i")
-      }
-      s
-    }
+    val serveS = (1 to 3).map(i => meter.timed {
+      IvfIndex.servePruned(queries, lc, lp)
+        .write.mode("overwrite").parquet(s"$work/answers_$i")
+    }._2)
 
     // partition-pruning proof at scale (VERDICT r15 #3): re-run the
     // served frame once through collect (tiny: batch × k rows) and

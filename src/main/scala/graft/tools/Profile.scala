@@ -161,8 +161,8 @@ object Profile extends AdaptiveSparkPlanHelper {
         s"$reused ReusedExchange nodes"
       out(exchanges)
       val json = s"""{"query":${Json.str(name)},""" +
-        f""""cold_sec":${cold.sec}%.3f,"cold_shuffle_mb":${cold.shuffleMb}%.1f,""" +
-        f""""warm_sec":${warm.sec}%.3f,"warm_shuffle_mb":${warm.shuffleMb}%.1f,""" +
+        f""""cold_sec":${cold.sec}%.3f,"cold_shuffle_mb":${cold.shuffleMb}%.6f,""" +
+        f""""warm_sec":${warm.sec}%.3f,"warm_shuffle_mb":${warm.shuffleMb}%.6f,""" +
         s""""sf":${Json.str(dir)}}"""
       Report(cold, warm, exchanges, json)
     } finally meter.detach()

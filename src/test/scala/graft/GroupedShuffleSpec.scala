@@ -104,4 +104,16 @@ class GroupedShuffleSpec extends AnyFunSuite with SparkTestSession {
         "a take opens a fresh window")
     } finally listener.detach()
   }
+
+  test("timed reports the window's reading: a two-job action counts two jobs") {
+    val listener = QueryListener.attach(spark)
+    try {
+      assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
+      val (_, sec, r) = listener.timed(aggregate(1000))
+      assert(sec > 0)
+      assert(r.jobs === 2, r)
+      assert(r.shuffleBytes > 0L)
+      assert(r.stages.map(_.shWriteBytes).sum === r.shuffleBytes, r.stages)
+    } finally listener.detach()
+  }
 }

@@ -129,6 +129,27 @@ class ScaleToSpec extends AnyFunSuite with SparkTestSession {
     Tables.deleteRecursively(dir)
   }
 
+  test("writing one harness's copy invalidates every other harness's sentinel in the dir") {
+    // StressSmoke's copy into a RelStress dir rewrites orders, lineitem
+    // and events UNSCALED; the relational sentinel must not survive
+    // that, or scaleToIfAbsent would reuse unscaled facts as the 2× copy
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft-scaleto-cross-").toString
+    RelStress.scaleToIfAbsent(spark, src, dir, scale = 2, cpus = 4)
+    val td = RelStress.Copy(RelStress.TdSentinel, "2x", Nil,
+      Seq("orders", "lineitem", "events"))
+    RelStress.ensureCopy(spark, src, dir, td) {}
+    val n0 = Tables.load(spark, src, "orders").count()
+    assert(Tables.load(spark, dir, "orders").count() == n0)
+    assert(RelStress.copyDone(spark, src, dir, td))
+    assert(!RelStress.copyDone(spark, src, dir, RelStress.relCopy(2)),
+      "the relational sentinel survived a copy that overwrote its tables")
+    RelStress.scaleToIfAbsent(spark, src, dir, scale = 2, cpus = 4)
+    assert(Tables.load(spark, dir, "orders").count() == 2 * n0)
+    assert(!RelStress.copyDone(spark, src, dir, td))
+    Tables.deleteRecursively(dir)
+  }
+
   test("a directory-form dimension table passes through whole, also over a previous copy") {
     // Spark writes tables as directories of part files (a scaled copy's
     // own orders.parquet is one): copying only the top-level entry left

@@ -50,6 +50,15 @@ class ProfileSpec extends AnyFunSuite with graft.SparkTestSession {
       "cold_shuffle_mb", "warm_sec", "warm_shuffle_mb", "sf"))
     assert(json.get("query").asText == name && json.get("sf").asText == sfDir)
     assert(json.get("cold_sec").asDouble > 0 && json.get("warm_sec").asDouble > 0)
+    // the record carries each run's shuffle MB as its [profile] line does
+    for (tag <- Seq("cold", "warm")) {
+      val mb = lines.collectFirst {
+        case l if l.startsWith(s"[profile] $tag $name ") =>
+          "shuffle_mb=(\\S+)".r.findFirstMatchIn(l).get.group(1)
+      }.get
+      assert(json.get(s"${tag}_shuffle_mb").asDouble == mb.toDouble, report.json)
+    }
+    assert(report.cold.shuffleMb > 0, "rel_agg_group shuffles")
   }
 
   test("a streaming query prints each micro-batch's durationMs") {

@@ -70,11 +70,9 @@ final class QueryListener private (sc: SparkContext) extends SparkListener {
   override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
     val si = e.stageInfo
     val m = si.taskMetrics
-    val wall = (for {
-      a <- si.completionTime; b <- si.submissionTime
-    } yield a - b).getOrElse(-1L)
     val row = StageRow(si.stageId, si.name.takeWhile(_ != '\n').take(60),
-      si.numTasks, wall, m.executorRunTime,
+      si.numTasks, si.submissionTime.getOrElse(-1L),
+      si.completionTime.getOrElse(-1L), m.executorRunTime,
       m.executorCpuTime / 1000000, m.inputMetrics.recordsRead,
       m.shuffleReadMetrics.recordsRead,
       m.shuffleWriteMetrics.recordsWritten,
@@ -127,11 +125,15 @@ final class QueryListener private (sc: SparkContext) extends SparkListener {
 object QueryListener {
 
   /** One completed stage attempt, from its aggregated task metrics,
-    * with the accumulator ids its tasks updated. */
+    * with its submission and completion instants (epoch ms, -1 if
+    * unknown) and the accumulator ids its tasks updated. */
   final case class StageRow(id: Int, name: String, tasks: Int,
-      wallMs: Long, taskMs: Long, cpuMs: Long, inRec: Long,
-      shReadRec: Long, shWriteRec: Long, shWriteBytes: Long,
-      spillBytes: Long, shWriteMs: Long, accums: Set[Long])
+      submitMs: Long, completeMs: Long, taskMs: Long, cpuMs: Long,
+      inRec: Long, shReadRec: Long, shWriteRec: Long, shWriteBytes: Long,
+      spillBytes: Long, shWriteMs: Long, accums: Set[Long]) {
+    def wallMs: Long =
+      if (submitMs < 0 || completeMs < 0) -1L else completeMs - submitMs
+  }
 
   /** One streaming micro-batch's progress. */
   final case class Batch(query: String, id: Long, rows: Long,

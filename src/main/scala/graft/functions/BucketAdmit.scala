@@ -7,13 +7,14 @@ import org.apache.spark.sql.catalyst.InternalRow
 /** Per-band-bucket EXISTS(near-dup) with PREFIX FILTERING — the
   * round-18 kernel behind [[graft.plans.BucketAdmitJoin]], replacing
   * td_incremental_dedup's pairwise LEFT SEMI scan whose in-bucket
-  * verify work was measured GENUINELY QUADRATIC by the deterministic
-  * work probe ([[graft.tools.VerifyWorkProbe]]): pair evaluations
+  * verify work was measured GENUINELY QUADRATIC (r18): pair evaluations
   * ×3.99 per corpus octave at 800×/1600×/3200× (149.6M → 596.6M →
   * 2382.6M, with accepts only 0.03% of them — the early exit cannot
   * save probes that match NOTHING in a wide bucket, and LSH buckets
   * keyed by common shingles grow linearly with the corpus, so reject
-  * scans grow as rows × width = n²).
+  * scans grow as rows × width = n²). The kernel counts its own work
+  * into a [[BucketAdmit.Work]]; both execs publish it as SQL metrics,
+  * which `graft.tools.Profile` prints as an `op` line.
   *
   * The fix is the AllPairs/PPJoin prefix-filter principle (Bayardo
   * WWW'07; Xiao VLDB'08 — the same machinery td_dedup_lsh_recall's
@@ -47,13 +48,37 @@ object BucketAdmit {
     * token vs ~20 kernel steps per evaluated pair). */
   val DirectPairCap = 32L
 
+  /** One task's work in a BucketAdmit exec. The kernel bumps `pairs`
+    * (pairs passed to [[DeltaVarint.geHalf]]), `indexEntries`
+    * (prefix-index entries built) and `direct`/`indexed` (kernel runs
+    * that scanned directly / built the prefix index) beside work it
+    * already does; the execs count the rest and publish every field as
+    * a SQL metric once per task. */
+  final class Work {
+    var buckets, chunks, newRows, existingRows, indexEntries, pairs,
+      direct, indexed, admitted = 0L
+
+    /** Every field by its metric name. */
+    def counts: Seq[(String, Long)] = Seq("buckets" -> buckets,
+      "chunks" -> chunks, "newRows" -> newRows,
+      "existingRows" -> existingRows, "indexEntries" -> indexEntries,
+      "pairs" -> pairs, "direct" -> direct, "indexed" -> indexed,
+      "admitted" -> admitted)
+
+    /** [[DeltaVarint.geHalf]], counted. */
+    def geHalf(a: Array[Byte], b: Array[Byte]): Boolean = {
+      pairs += 1
+      DeltaVarint.geHalf(a, b)
+    }
+  }
+
   /** The bucket's two sides: `digs(i)`/`nHsb(i)` = the new classes'
     * digest rows and delta-varint shingle sets, `eHsb` = the existing
     * classes' sets. Returns the digs with at least one J ≥ 1/2
     * partner in `eHsb` (each at most once, input order). */
   def admitCore(digs: Array[InternalRow], nHsb: Array[Array[Byte]],
-      eHsb: Array[Array[Byte]]): ArrayBuffer[InternalRow] =
-    admitIndices(nHsb, eHsb).map(digs(_))
+      eHsb: Array[Array[Byte]], work: Work): ArrayBuffer[InternalRow] =
+    admitIndices(nHsb, eHsb, work).map(digs(_))
 
   /** Index-returning core of [[admitCore]] (round 19): the chunked
     * merge walk in BucketAdmitJoinExec needs the admitted NEW-side
@@ -61,18 +86,19 @@ object BucketAdmit {
     * admitted by an earlier existing-side chunk. Semantics otherwise
     * identical. */
   def admitIndices(nHsb: Array[Array[Byte]],
-      eHsb: Array[Array[Byte]]): ArrayBuffer[Int] = {
+      eHsb: Array[Array[Byte]], work: Work): ArrayBuffer[Int] = {
     val nN = nHsb.length
     val nE = eHsb.length
     val out = new ArrayBuffer[Int](2)
     if (nN == 0 || nE == 0) return out
 
     if (nN.toLong * nE <= DirectPairCap) {
+      work.direct += 1
       var j = 0
       while (j < nN) {
         var k = 0; var hit = false
         while (k < nE && !hit) {
-          hit = DeltaVarint.geHalf(nHsb(j), eHsb(k))
+          hit = work.geHalf(nHsb(j), eHsb(k))
           k += 1
         }
         if (hit) out += j
@@ -81,6 +107,7 @@ object BucketAdmit {
       return out
     }
 
+    work.indexed += 1
     val eDec = eHsb.map(DeltaVarint.decode)
     val nDec = nHsb.map(DeltaVarint.decode)
 
@@ -121,6 +148,7 @@ object BucketAdmit {
     var i = 0
     while (i < nE) {
       val pf = prefix(eDec(i))
+      work.indexEntries += pf.length
       var t = 0
       while (t < pf.length) {
         index.computeIfAbsent(pf(t),
@@ -137,7 +165,7 @@ object BucketAdmit {
       if (pf.isEmpty) {
         var k = 0
         while (k < nE && !hit) {
-          hit = DeltaVarint.geHalf(nHsb(j), eHsb(k)); k += 1
+          hit = work.geHalf(nHsb(j), eHsb(k)); k += 1
         }
       } else {
         val seen = new java.util.BitSet(nE)
@@ -150,7 +178,7 @@ object BucketAdmit {
               val ei = lst.get(li).intValue()
               if (!seen.get(ei)) {
                 seen.set(ei)
-                hit = DeltaVarint.geHalf(nHsb(j), eHsb(ei))
+                hit = work.geHalf(nHsb(j), eHsb(ei))
               }
               li += 1
             }
@@ -174,8 +202,9 @@ object BucketAdmit {
     * computable for a streamed existing row too (absent tokens rank
     * df 0, i.e. first, and simply miss the index). Same theorem, roles
     * swapped; each new class is emitted at most once per instance, and
-    * once all are accepted further probes are O(1). */
-  final class ProbeBucket {
+    * once all are accepted further probes are O(1). Its first probe
+    * counts the bucket in `work` as direct or indexed. */
+  final class ProbeBucket(work: Work) {
     import scala.collection.mutable.ArrayBuffer
 
     private val digs = new ArrayBuffer[InternalRow](2)
@@ -209,6 +238,7 @@ object BucketAdmit {
       i = 0
       while (i < digs.length) {
         val pf = prefixOf(dec(i))
+        work.indexEntries += pf.length
         var t = 0
         while (t < pf.length) {
           index.computeIfAbsent(pf(t),
@@ -236,16 +266,21 @@ object BucketAdmit {
     /** The dig rows newly admitted by this existing set (empty once
       * every new class in the bucket has been accepted). */
     def probeExisting(ehsb: Array[Byte]): ArrayBuffer[InternalRow] = {
+      work.existingRows += 1
       if (accepted == null) {
         accepted = new java.util.BitSet(digs.length)
         remaining = digs.length
+        work.buckets += 1
+        work.newRows += digs.length
+        if (digs.length <= DirectSideCap) work.direct += 1
+        else work.indexed += 1
       }
       val out = new ArrayBuffer[InternalRow](1)
       if (remaining == 0) return out
       if (digs.length <= DirectSideCap) {
         var i = 0
         while (i < digs.length) {
-          if (!accepted.get(i) && DeltaVarint.geHalf(hsbs(i), ehsb)) {
+          if (!accepted.get(i) && work.geHalf(hsbs(i), ehsb)) {
             accepted.set(i); remaining -= 1; out += digs(i)
           }
           i += 1
@@ -259,7 +294,7 @@ object BucketAdmit {
         // index tokens; scan them directly (rare by construction)
         var i = 0
         while (i < digs.length) {
-          if (!accepted.get(i) && DeltaVarint.geHalf(hsbs(i), ehsb)) {
+          if (!accepted.get(i) && work.geHalf(hsbs(i), ehsb)) {
             accepted.set(i); remaining -= 1; out += digs(i)
           }
           i += 1
@@ -274,7 +309,7 @@ object BucketAdmit {
           var li = 0
           while (li < lst.size() && remaining > 0) {
             val i = lst.get(li).intValue()
-            if (!accepted.get(i) && DeltaVarint.geHalf(hsbs(i), ehsb)) {
+            if (!accepted.get(i) && work.geHalf(hsbs(i), ehsb)) {
               accepted.set(i); remaining -= 1; out += digs(i)
             }
             li += 1

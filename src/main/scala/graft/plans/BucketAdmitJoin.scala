@@ -1,5 +1,6 @@
 package graft.plans
 
+import org.apache.spark.SparkContext
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
@@ -7,6 +8,7 @@ import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, Attribut
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
 import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution}
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
+import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
 import org.apache.spark.sql.graft.PlanShim
 import org.apache.spark.sql.types.StructType
 
@@ -18,8 +20,8 @@ import graft.functions.BucketAdmit
   *
   * WHY an operator and not a join: the LEFT SEMI band join this
   * replaces evaluated the jaccard kernel pairwise inside each bucket,
-  * and the deterministic work probe (graft.tools.VerifyWorkProbe)
-  * measured that GENUINELY QUADRATIC across corpus octaves (pair
+  * and a deterministic pair-counting probe measured that GENUINELY
+  * QUADRATIC across corpus octaves in r18 (pair
   * evaluations ×3.99 at 800×/1600×/3200× — LSH buckets keyed by
   * common shingles grow linearly with the corpus, and the probes that
   * match nothing scan their whole bucket to reject, which no
@@ -37,12 +39,17 @@ import graft.functions.BucketAdmit
   * declared requirements, so the operator composes with AQE like any
   * built-in) — and swaps only the per-bucket evaluation: a streaming
   * merge walk aligns the two sorted legs' key groups, and each
-  * aligned bucket runs [[BucketAdmit.admitCore]] (local-df
+  * aligned bucket runs [[BucketAdmit.admitIndices]] (local-df
   * prefix-filter index, exact kernel on candidates, first-accept
   * early exit; direct scan for sub-cap buckets). Exchange bytes are
   * byte-identical to the join it replaces; verify CPU becomes linear
   * in bucket volume plus true matches (measured: evaluated pairs ==
   * accepted pairs exactly on the stress ladder).
+  *
+  * Both execs count that work per task ([[BucketAdmit.Work]]) and
+  * publish it as SQL metrics ([[AdmitMetrics]]), so a plan's metrics
+  * say how many pairs the kernel evaluated for how many admitted rows
+  * (`graft.tools.Profile` prints them as an `op` line).
   *
   * Contract (by position): left = (bkey: long, dig: struct, hsb:
   * binary) — the all-new band frames; right = (bkey: long, hsb:
@@ -92,6 +99,9 @@ case class BucketAdmitJoinExec(left: SparkPlan, right: SparkPlan)
 
   override def output: Seq[Attribute] = Seq(left.output(1))
 
+  override lazy val metrics: Map[String, SQLMetric] =
+    AdmitMetrics.declare(sparkContext)
+
   override def requiredChildDistribution: Seq[Distribution] =
     ClusteredDistribution(Seq(left.output.head)) ::
       ClusteredDistribution(Seq(right.output.head)) :: Nil
@@ -124,14 +134,16 @@ case class BucketAdmitJoinExec(left: SparkPlan, right: SparkPlan)
     // (BucketMegaStress, OPTIMIZATION_r19.md).
     val chunkBytes = graft.GraftConf.DedupBucketChunkBytes(
       org.apache.spark.sql.internal.SQLConf.get)
+    val m = metrics
     left.execute().zipPartitions(right.execute()) { (li, ri) =>
       val lit = li.buffered
       val rit = ri.buffered
       val proj = UnsafeProjection.create(Array(digType.asInstanceOf[
         org.apache.spark.sql.types.DataType]))
       val holder = new GenericInternalRow(1)
+      val work = new BucketAdmit.Work
 
-      new Iterator[InternalRow] {
+      AdmitMetrics.publishing(work, m, new Iterator[InternalRow] {
         private var out: Iterator[InternalRow] = Iterator.empty
 
         // both inputs arrive sorted by bkey; align key groups like a
@@ -154,6 +166,8 @@ case class BucketAdmitJoinExec(left: SparkPlan, right: SparkPlan)
               }
               val digs = digsB.result()
               val nHsb = nHsbB.result()
+              work.buckets += 1
+              work.newRows += digs.length
               val admitted = new java.util.BitSet(digs.length)
               var remaining = digs.length
               val acc = new scala.collection.mutable.ArrayBuffer[
@@ -169,7 +183,9 @@ case class BucketAdmitJoinExec(left: SparkPlan, right: SparkPlan)
                   val e = rit.next().getBinary(1)
                   eHsb += e
                   b += e.length
+                  work.existingRows += 1
                 }
+                work.chunks += 1
                 // kernel over the classes no earlier chunk admitted
                 val liveIdx = new Array[Int](remaining)
                 val liveHsb = new Array[Array[Byte]](remaining)
@@ -180,7 +196,8 @@ case class BucketAdmitJoinExec(left: SparkPlan, right: SparkPlan)
                   }
                   i += 1
                 }
-                val hits = BucketAdmit.admitIndices(liveHsb, eHsb.result())
+                val hits =
+                  BucketAdmit.admitIndices(liveHsb, eHsb.result(), work)
                 var h = 0
                 while (h < hits.length) {
                   val idx = liveIdx(hits(h))
@@ -192,6 +209,7 @@ case class BucketAdmitJoinExec(left: SparkPlan, right: SparkPlan)
               // every class admitted (or existing side exhausted):
               // drain the bucket's remaining existing rows
               while (rit.hasNext && rit.head.getLong(0) == lk) rit.next()
+              work.admitted += acc.length
               if (acc.nonEmpty) out = acc.iterator.map { d =>
                 holder.update(0, d)
                 proj(holder)
@@ -208,7 +226,7 @@ case class BucketAdmitJoinExec(left: SparkPlan, right: SparkPlan)
           if (!hasNext) throw new NoSuchElementException
           out.next()
         }
-      }
+      })
     }
   }
 
@@ -235,6 +253,10 @@ case class BucketAdmitBroadcastExec(left: SparkPlan, right: SparkPlan)
 
   override def output: Seq[Attribute] = Seq(left.output(1))
 
+  // no chunks: the existing side streams row by row
+  override lazy val metrics: Map[String, SQLMetric] =
+    AdmitMetrics.declare(sparkContext, "chunks")
+
   override def requiredChildDistribution: Seq[Distribution] =
     org.apache.spark.sql.catalyst.plans.physical.BroadcastDistribution(
       org.apache.spark.sql.catalyst.plans.physical.IdentityBroadcastMode) ::
@@ -245,32 +267,77 @@ case class BucketAdmitBroadcastExec(left: SparkPlan, right: SparkPlan)
     val digType = left.output(1).dataType.asInstanceOf[StructType]
     val digFields = digType.fields.length
     val bcast = left.executeBroadcast[Array[InternalRow]]()
+    val m = metrics
     right.execute().mapPartitions { rit =>
       val proj = UnsafeProjection.create(Array(digType.asInstanceOf[
         org.apache.spark.sql.types.DataType]))
       val holder = new GenericInternalRow(1)
+      val work = new BucketAdmit.Work
       // bucket map over the broadcast probe side, indexes built lazily
       val buckets = new java.util.HashMap[java.lang.Long,
         BucketAdmit.ProbeBucket]()
       bcast.value.foreach { row =>
         buckets.computeIfAbsent(row.getLong(0),
-          _ => new BucketAdmit.ProbeBucket())
+          _ => new BucketAdmit.ProbeBucket(work))
           .add(row.getStruct(1, digFields).copy(), row.getBinary(2))
       }
-      rit.flatMap { row =>
+      AdmitMetrics.publishing(work, m, rit.flatMap { row =>
         val b = buckets.get(row.getLong(0))
         if (b == null) Iterator.empty
-        else b.probeExisting(row.getBinary(1)).iterator.map { d =>
-          holder.update(0, d)
-          proj(holder)
+        else {
+          val hits = b.probeExisting(row.getBinary(1))
+          work.admitted += hits.length
+          hits.iterator.map { d =>
+            holder.update(0, d)
+            proj(holder)
+          }
         }
-      }
+      })
     }
   }
 
   override protected def withNewChildrenInternal(
       newLeft: SparkPlan, newRight: SparkPlan): BucketAdmitBroadcastExec =
     copy(left = newLeft, right = newRight)
+}
+
+/** The SQL metrics of both execs, one per [[BucketAdmit.Work]] field.
+  * A task adds its counts once, when its output iterator is exhausted;
+  * a consumer that stops early (a limit) leaves that task uncounted. */
+private[plans] object AdmitMetrics {
+
+  private val descriptions = Seq(
+    "buckets" -> "aligned buckets",
+    "chunks" -> "existing-side chunks",
+    "newRows" -> "new-side rows",
+    "existingRows" -> "existing-side rows",
+    "indexEntries" -> "prefix-index entries",
+    "pairs" -> "pairs evaluated",
+    "direct" -> "direct-scan kernel runs",
+    "indexed" -> "indexed kernel runs",
+    "admitted" -> "admitted rows")
+
+  /** Every metric but those named in `skip`. */
+  def declare(sc: SparkContext, skip: String*): Map[String, SQLMetric] =
+    descriptions.collect { case (k, d) if !skip.contains(k) =>
+      k -> SQLMetrics.createMetric(sc, d)
+    }.toMap
+
+  /** `rows`, adding `work` to `metrics` once, when `rows` runs out. */
+  def publishing(work: BucketAdmit.Work, metrics: Map[String, SQLMetric],
+      rows: Iterator[InternalRow]): Iterator[InternalRow] =
+    new Iterator[InternalRow] {
+      private var published = false
+      override def hasNext: Boolean = {
+        val more = rows.hasNext
+        if (!more && !published) {
+          published = true
+          work.counts.foreach { case (k, v) => metrics.get(k).foreach(_.add(v)) }
+        }
+        more
+      }
+      override def next(): InternalRow = rows.next()
+    }
 }
 
 /** DataFrame-side constructor (same bridge as [[TopK.topKPerKey]]). */

@@ -431,7 +431,7 @@ object DedupQueries {
     // Round 18 (the verify-CPU law, settled for real): the LEFT SEMI
     // band join that stood here evaluated the jaccard kernel on every
     // (new, existing) in-bucket pair until a probe's first accept —
-    // and the deterministic work probe (tools/VerifyWorkProbe) showed
+    // and a deterministic pair-counting probe (measured r18) showed
     // that to be GENUINELY QUADRATIC across octaves (pair evals ×3.99
     // at 800×/1600×/3200×): LSH buckets keyed by common shingles grow
     // linearly with the corpus, accepts are 0.03% of evaluations, so
@@ -443,14 +443,18 @@ object DedupQueries {
     // flat band-frame exchanges and sorts (byte-identical physical
     // economics, Catalyst-inserted via the operator's distribution/
     // ordering requirements), with each aligned bucket evaluated by
-    // BucketAdmit.admitCore — the AllPairs/PPJoin prefix-filter index
+    // BucketAdmit.admitIndices — the AllPairs/PPJoin prefix-filter index
     // (local-df token order, floor(n/2)+1 prefixes, exact
     // DeltaVarint.geHalf on candidates, first-accept early exit;
     // direct scan under DirectPairCap pairs so the p50-width-1
     // buckets skip the index build). Candidates ⊇ all true matches is
     // the prefix theorem (BucketAdmit's scaladoc); measured work is
     // LINEAR: evaluated pairs == accepted pairs exactly on the stress
-    // ladder, 596.6M → 176k evaluations at 1600×. Survivor identity
+    // ladder, 596.6M → 176k evaluations at 1600× (r18). The operator
+    // now counts both itself: its "pairs evaluated" and "admitted
+    // rows" SQL metrics, printed by tools.Profile's `op` line; direct-
+    // scan buckets verify without the prefix filter, so there pairs
+    // can exceed admits. Survivor identity
     // vs the literal pair-materializing plan stays pinned by
     // IncrementalDedupSpec (incl. the J = 0.5 boundary and the
     // size/overlap grid), and only verified digests leave the stage —

@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.{QueryListener, Tables}
+import graft.{GraftConf, QueryListener, Tables}
 import graft.queries.TextQueries
 
 /** Cost-law probe for the distributed BPE trainer (sibling of
@@ -8,16 +8,21 @@ import graft.queries.TextQueries
   * on the real documents table and records, per count, wall-time,
   * sec/merge, and Spark jobs/merge.
   *
-  * What it certifies: each merge is ONE distributed pair-count job over
-  * the cached O(vocab) representation plus a 1-row argmax collect
-  * (inherent to BPE — merge k+1 depends on merge k), and the
-  * every-[[TextQueries.CheckpointEvery]]-rounds localCheckpoint keeps
-  * lineage (and therefore per-job work) flat — so wall-time is LINEAR
-  * in merge count and jobs/merge is a small constant (~2: the argmax
-  * job + the interleaved checkpoint materialization). Without the
+  * What it certifies: each merge is one distributed pair-count
+  * aggregation over the cached O(vocab) representation plus a 1-row
+  * argmax collect (inherent to BPE — merge k+1 depends on merge k),
+  * and the every-[[TextQueries.CheckpointEvery]]-rounds localCheckpoint
+  * keeps lineage (and therefore per-job work) flat — so wall-time is
+  * LINEAR in merge count and jobs/merge is the constant 2 (the
+  * aggregation's shuffle-map job and the argmax result job; the lazy
+  * checkpoint materializes inside them). Measured on sf0.001 at 4
+  * cores: jobs = 2·merges + 4 at 5, 10 and 25 merges. Without the
   * checkpoints, job k replays k chained replace() projections and the
   * curve bends quadratic; that regression is exactly what this harness
-  * exists to catch (BASELINE.md records the table).
+  * exists to catch (BASELINE.md records the table). The harness sets
+  * `GraftConf.BpeLocalVocabLimit` to 0: under the default limit any
+  * vocabulary below 1M words trains on the driver, and the loop above
+  * never runs. The record prints the limit it ran with.
   *
   * {{{ SPARK_GRAFT_CPUS=32 sbt "runMain graft.tools.BpeStress 10,25,50,100" }}}
   */
@@ -29,6 +34,8 @@ object BpeStress {
     val src = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = Tables.localSession("graft-bpestress", cpus)
+    spark.conf.set(GraftConf.BpeLocalVocabLimit.name, "0")
+    val localLimit = GraftConf.BpeLocalVocabLimit(spark)
 
     val meter = QueryListener.attach(spark)
     val docs = Tables.load(spark, src, "documents").cache()
@@ -46,7 +53,8 @@ object BpeStress {
       f"""{"merges":$k,"rules":$nRules,"sec":$sec%.1f,""" +
         f""""sec_per_merge":${sec / k}%.3f,"jobs":$nJobs}"""
     }
-    println(s"""{"metric":"bpestress","counts":[${lines.mkString(",")}]}""")
+    println(s"""{"metric":"bpestress","local_vocab_limit":$localLimit,""" +
+      s""""counts":[${lines.mkString(",")}]}""")
     spark.stop()
   }
 }

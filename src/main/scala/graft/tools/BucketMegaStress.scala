@@ -1,6 +1,9 @@
 package graft.tools
 
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
+
+import graft.plans.{BucketAdmitJoinApi, BucketAdmitJoinExec}
 
 /** Adversarial mega-bucket rung for the chunked BucketAdmitJoin walk
   * (round 19, VERDICT r18 #5): ONE band bucket whose existing side is
@@ -12,12 +15,15 @@ import org.apache.spark.sql.functions._
   * chunkBytes or the literal `unsplit` (Long.MaxValue — the pre-split
   * behavior). The probe side is 4 sets: 3 exact copies of existing
   * sets (J=1 admits) spread across the bucket plus 1 disjoint set —
-  * expected admitted = 3, printed and asserted.
+  * expected admitted = 3, printed and asserted. The exec's `chunks`
+  * metric is printed too, and must read 1 for `unsplit` and more than
+  * 1 for a budget below the bucket's payload bytes, so a run that
+  * completes without the chunked walk fails.
   *
   * {{{ SPARK_DRIVER_MEM=1g tools/runmain.sh graft.tools.BucketMegaStress 600000 unsplit }}}
   * {{{ SPARK_DRIVER_MEM=1g tools/runmain.sh graft.tools.BucketMegaStress 600000 67108864 }}}
   */
-object BucketMegaStress {
+object BucketMegaStress extends AdaptiveSparkPlanHelper {
   def main(args: Array[String]): Unit = {
     val nExisting = args.headOption.map(_.toLong).getOrElse(600000L)
     // the miss set starts past the largest existing token
@@ -49,15 +55,25 @@ object BucketMegaStress {
     val miss = spark.range(1).select(lit(42L).as("bkey"),
       struct(lit(-1L).as("nid")).as("dig"), setOf(lit(missBase)).as("hsb"))
     val newSide = (matching :+ miss).reduce(_ unionByName _)
+    val payload = existing.agg(sum(length(col("hsb")))).head().getLong(0)
 
-    val (admitted, sec, _) = graft.QueryListener.attach(spark)
-      .timed(graft.plans.BucketAdmitJoinApi.admitJoin(newSide, existing).collect())
+    val df = BucketAdmitJoinApi.admitJoin(newSide, existing)
+    val (admitted, sec, _) = graft.QueryListener.attach(spark).timed(df.collect())
     val ids = admitted.map(_.getStruct(0).getLong(0)).sorted.toSeq
+    val chunks = collect(df.queryExecution.executedPlan) {
+      case e: BucketAdmitJoinExec => e.metrics("chunks").value
+    }.sum
     println(f"""{"metric":"megabucket","n_existing":$nExisting,""" +
-      f""""chunk_bytes":"$chunk","admitted":${ids.length},""" +
+      f""""chunk_bytes":"$chunk","payload_bytes":$payload,""" +
+      f""""chunks":$chunks,"admitted":${ids.length},""" +
       f""""ids":${ids.mkString("[", ",", "]")},"sec":$sec%.1f}""")
     require(ids == probes.sorted,
       s"survivor identity broken: $ids vs expected ${probes.sorted}")
+    if (chunk.toLong >= payload) require(chunks == 1,
+      s"a $chunk-byte budget over a $payload-byte bucket read $chunks chunks, not 1")
+    else require(chunks > 1,
+      s"a $chunk-byte budget under a $payload-byte bucket read $chunks chunks; " +
+        "the chunked walk did not run")
     spark.stop()
   }
 }

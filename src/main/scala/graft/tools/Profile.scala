@@ -16,11 +16,17 @@ import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExcha
   * the query's `QueryPlanningTracker`, then execution), the
   * generated-class compiles and their compile ms, one line per
   * streaming micro-batch the build ran (its `durationMs` map) and one
-  * line per completed stage (wall, task and CPU time, input/shuffle
+  * line per `graft.plans` operator that declares SQL metrics (`op
+  * <node> k=v ...`, e.g. BucketAdmitJoin's pairs evaluated and admitted
+  * rows) and one line per completed stage (submission instant `start_s`
+  * relative to the run's start, wall, task and CPU time, input/shuffle
   * records, shuffle-write and spill MB, shuffle-write time, stage
-  * name). Then the final adaptive plan in formatted form, one exchange
-  * line (shuffle exchanges, their canonical forms, ReusedExchange
-  * nodes) and a one-line JSON record.
+  * name). A stage's `start_s + wall_s` is the run's time up to that
+  * stage's end, driver time between stages included — the floor of an
+  * iterative operator, whose rounds run inside the registry build.
+  * Then the final adaptive plan in formatted form, one exchange line
+  * (shuffle exchanges, their canonical forms, ReusedExchange nodes)
+  * and a one-line JSON record.
   *
   * The build phase is the registry closure alone; analysis runs inside
   * it (a DataFrame analyzes eagerly), so the analysis ms is part of the
@@ -40,11 +46,13 @@ import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExcha
 object Profile extends AdaptiveSparkPlanHelper {
 
   /** `sec` = build + plan + exec; `phasesMs` = the tracker's analysis,
-    * optimization and planning durations. */
+    * optimization and planning durations; `startMs` = the epoch ms the
+    * run began; `ops` = each `graft.plans` operator's metrics. */
   final case class Run(rows: Long, sec: Double, shuffleMb: Double,
       buildSec: Double, phasesMs: Map[String, Long], execSec: Double,
       codegenClasses: Long, codegenMs: Long, batches: Seq[Batch],
-      stages: Seq[StageRow])
+      stages: Seq[StageRow], startMs: Long,
+      ops: Seq[(String, Map[String, Long])])
 
   final case class Report(cold: Run, warm: Run, exchanges: String,
       json: String)
@@ -68,14 +76,14 @@ object Profile extends AdaptiveSparkPlanHelper {
     }.groupMapReduce(_._1)(_._2)((a, b) => if (a._1 <= b._1) a else b)
 
   private val header =
-    f"${"stage"}%5s ${"wall_s"}%7s ${"task_s"}%8s ${"cpu_s"}%8s " +
-      f"${"tasks"}%6s ${"in_rec"}%11s ${"sh_read"}%11s ${"sh_write"}%11s " +
-      f"${"sw_MB"}%8s ${"spill_MB"}%9s ${"swrite_s"}%9s  name"
+    f"${"stage"}%5s ${"start_s"}%7s ${"wall_s"}%7s ${"task_s"}%8s " +
+      f"${"cpu_s"}%8s ${"tasks"}%6s ${"in_rec"}%11s ${"sh_read"}%11s " +
+      f"${"sh_write"}%11s ${"sw_MB"}%8s ${"spill_MB"}%9s ${"swrite_s"}%9s  name"
 
-  private def line(s: StageRow): String =
-    f"${s.id}%5d ${s.wallMs / 1e3}%7.1f ${s.taskMs / 1e3}%8.1f " +
-      f"${s.cpuMs / 1e3}%8.1f ${s.tasks}%6d ${s.inRec}%11d " +
-      f"${s.shReadRec}%11d ${s.shWriteRec}%11d " +
+  private def line(s: StageRow, startMs: Long): String =
+    f"${s.id}%5d ${(s.submitMs - startMs) / 1e3}%7.2f " +
+      f"${s.wallMs / 1e3}%7.2f ${s.taskMs / 1e3}%8.1f ${s.cpuMs / 1e3}%8.1f " +
+      f"${s.tasks}%6d ${s.inRec}%11d ${s.shReadRec}%11d ${s.shWriteRec}%11d " +
       f"${s.shWriteBytes / 1e6}%8.3f ${s.spillBytes / 1e6}%9.1f " +
       f"${s.shWriteMs / 1e3}%9.1f  ${s.name}"
 
@@ -115,9 +123,10 @@ object Profile extends AdaptiveSparkPlanHelper {
         meter.drain(); meter.take("")
         val (c0, ms0) = codegen()
         val t0 = System.nanoTime()
+        val e0 = System.currentTimeMillis()
         val df = fn(spark, dir)
         val t1 = System.nanoTime()
-        df.queryExecution.executedPlan
+        val plan = df.queryExecution.executedPlan
         val t2 = System.nanoTime()
         val rows = Bench.consume(df)
         val t3 = System.nanoTime()
@@ -129,14 +138,19 @@ object Profile extends AdaptiveSparkPlanHelper {
         val mb = got.shuffleBytes / 1e6
         val phases = df.queryExecution.tracker.phases
           .collect { case (p, s) if phaseNames.contains(p) => p -> s.durationMs }
-        val owners = metricOwners(df.queryExecution.executedPlan)
+        val owners = metricOwners(plan)
         val named = got.stages.map { row =>
           row.accums.flatMap(owners.get).minByOption(_._1)
             .fold(row)(o => row.copy(name = o._2))
         }
+        val ops = collectWithSubqueries(plan) {
+          case p if p.getClass.getName.startsWith("graft.plans.") &&
+            p.metrics.nonEmpty =>
+            p.nodeName -> p.metrics.map { case (k, m) => k -> m.value }
+        }
         val r = Run(rows, (t3 - t0) / 1e9, mb, (t1 - t0) / 1e9, phases,
           (t3 - t2) / 1e9, c1 - c0, ms1 - ms0, got.batches,
-          named.sortBy(-_.taskMs))
+          named.sortBy(-_.taskMs), e0, ops)
         out(f"[profile] $tag $name rows=$rows wall=${r.sec}%.2f s " +
           f"shuffle_mb=$mb%.6f stages=${r.stages.size} " +
           f"build=${r.buildSec}%.2f s " +
@@ -146,8 +160,10 @@ object Profile extends AdaptiveSparkPlanHelper {
         r.batches.foreach(b => out(s"[profile] $tag batch ${b.query} " +
           s"#${b.id} rows=${b.rows} " + b.durationMs.toSeq.sorted
             .map { case (k, v) => s"$k=$v" }.mkString("durationMs={", ", ", "}")))
+        ops.foreach { case (node, ms) => out(s"[profile] $tag op $node " +
+          ms.toSeq.sorted.map { case (k, v) => s"$k=$v" }.mkString(" ")) }
         out(header)
-        r.stages.foreach(s => out(line(s)))
+        r.stages.foreach(s => out(line(s, e0)))
         (r, df)
       }
       val (cold, _) = once("cold")

@@ -59,6 +59,26 @@ class CopyStagingSpec extends AnyFunSuite with SparkTestSession {
     assert(v("completed_on: date") == 1) // "x" is not a date
   }
 
+  test("a calls row with every labelled field blank stages a NULL body") {
+    // compose_body over no non-blank labelled field gives "", and
+    // \COPY reads an empty unquoted CSV cell as NULL, so the reference
+    // rejects such a row at import exactly as this check does; the
+    // shape is a dated row carrying only nhs_number, date and time
+    val dir = Files.createTempDirectory("beacon-blank-row-")
+    val calls = dir.resolve("calls.csv")
+    val row = Map("nhs_number" -> "321", "latest_attempt_date" -> "23/05/2020",
+      "latest_attempt_time" -> "14:34")
+    Files.write(calls, CallsFixture.toCsv(Seq(
+      CallsHeaderMap.fields.map(_.original),
+      CallsHeaderMap.canonicalOrder.map(c => row.getOrElse(c, ""))))
+      .getBytes(java.nio.charset.Charset.forName("windows-1252")))
+    val notes = PrepareCalls(PrepareCalls.fromCsv(spark, calls.toString), users)
+      .originalTriageNotes
+    assert(notes.select("body").collect().map(_.getString(0)).toSeq == Seq(""))
+    assert(CopyStaging.violations(notes, "tmp_original_triage_notes") ==
+      Map("body: NOT NULL" -> 1L))
+  }
+
   test("a frame missing a NOT NULL column is rejected outright") {
     val df = Seq(("a", "b")).toDF("nhs_number", "category")
     val e = intercept[IllegalArgumentException] {

@@ -15,7 +15,9 @@ import org.scalacheck.Prop.forAll
   * lossless for every size/overlap/df layout drawn, including empty
   * sets on either side (empty matches only empty). Same generator
   * bias as DeltaVarintProps: dense band so intersections actually
-  * occur, full production domain, boundary values.
+  * occur, full production domain, boundary values. The kernel's own
+  * work count (what the execs publish as "pairs evaluated") stays
+  * within the bucket's pair bound.
   */
 object BucketAdmitProps extends Properties("graft.bucketadmit") {
 
@@ -48,7 +50,7 @@ object BucketAdmitProps extends Properties("graft.bucketadmit") {
     val digs: Array[InternalRow] = ns.indices.map(i =>
       new GenericInternalRow(Array[Any](i.toLong)): InternalRow).toArray
     val admitted = BucketAdmit.admitCore(digs,
-      ns.map(enc).toArray, es.map(enc).toArray)
+      ns.map(enc).toArray, es.map(enc).toArray, new BucketAdmit.Work)
     admitted.map(_.getLong(0)).toSeq
   }
 
@@ -68,5 +70,18 @@ object BucketAdmitProps extends Properties("graft.bucketadmit") {
     forAll(bucket) { case (ns, es) =>
       val ids = run(ns, es)
       ids.distinct == ids && ids.sorted == ids
+    }
+
+  property("counted pairs <= nN*nE, and 0 when either side is empty") =
+    forAll(bucket) { case (ns, es) =>
+      val work = new BucketAdmit.Work
+      val hits = BucketAdmit.admitIndices(ns.map(enc).toArray,
+        es.map(enc).toArray, work)
+      val bound = ns.length.toLong * es.length
+      // every admitted set cost at least its accepting pair; a non-empty
+      // bucket runs exactly one strategy
+      hits.length <= work.pairs && work.pairs <= bound &&
+        (bound > 0 || work.pairs == 0) &&
+        work.direct + work.indexed == (if (bound > 0) 1 else 0)
     }
 }

@@ -75,6 +75,24 @@ class ProfileSpec extends AnyFunSuite with graft.SparkTestSession {
     }
   }
 
+  test("td_incremental_dedup prints its admit operator's metrics on both runs") {
+    val q = "td_incremental_dedup"
+    val lines = ArrayBuffer.empty[String]
+    val report = Profile.run(spark, q, sfDir, lines += _)
+    for ((tag, r) <- Seq("cold" -> report.cold, "warm" -> report.warm)) {
+      val admits = r.ops.filter(_._1.startsWith("BucketAdmit"))
+      assert(admits.size == 1, r.ops)
+      val (node, m) = admits.head
+      assert(m("admitted") > 0 && m("pairs") >= m("admitted"), m)
+      assert(lines.contains(s"[profile] $tag op $node " +
+        m.toSeq.sorted.map { case (k, v) => s"$k=$v" }.mkString(" ")), lines)
+      // every stage starts and ends inside its run
+      val endMs = r.startMs + (r.sec * 1000).toLong + 50
+      assert(r.stages.forall(s => s.submitMs >= r.startMs &&
+        s.completeMs >= s.submitMs && s.completeMs <= endMs), r.stages)
+    }
+  }
+
   test("an unknown query fails naming it") {
     val e = intercept[IllegalArgumentException](
       Profile.run(spark, "no_such_query", sfDir, _ => ()))

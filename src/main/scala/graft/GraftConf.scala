@@ -93,12 +93,10 @@ object GraftConf {
     "broadcast the butterfly pair table up to this many rows")
   val CcSaltBuckets = num("spark.graft.cc.saltBuckets", 8, 0,
     "salt buckets of ConnectedComponents' per-node min (0 = unsalted)")
-  val CcCheckpointDir = key("spark.graft.cc.checkpointDir",
+  val CheckpointDir = key("spark.graft.checkpointDir",
     Option.empty[String], "a non-empty path",
-    "reliable checkpoint dir for ConnectedComponents (unset = local)")(
+    "reliable checkpoint dir of every Lineage.truncate (unset = local)")(
     p => Some(Some(p)).filter(_ => p.nonEmpty))
-  val CcCheckpointInterval = num("spark.graft.cc.checkpointInterval", 5, 1,
-    "ConnectedComponents rounds between reliable checkpoints")
   val DedupBucketChunkBytes = num("spark.graft.dedup.bucketChunkBytes",
     8388608L, 1L, "BucketAdmitJoin's existing-side chunk, encoded bytes")
   val DedupMaterializePerCoreBytes = num(

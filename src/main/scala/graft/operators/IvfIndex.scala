@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Lineage
+
 /** Persisted IVF index: the BUILD-ONCE / SERVE-MANY contract of a
   * production vector store (FAISS on disk, Milvus/Vespa segment files).
   * The index is two parquet tables:
@@ -258,9 +260,9 @@ object IvfIndex {
     * to prune. */
   def servePruned(queries: DataFrame, cents: DataFrame, postings: DataFrame,
       k: Int = 3, probes: Int = 2): DataFrame = {
-    val probed = probeFrame(queries, cents, "q_id", "qa", probes)
-      .select(col("q_id"), col("qa"), col("cell"))
-      .localCheckpoint(false)
+    val probed = Lineage.truncate(
+      probeFrame(queries, cents, "q_id", "qa", probes)
+        .select(col("q_id"), col("qa"), col("cell")))
     val cellIds = probed.select(col("cell")).distinct()
       .collect().map(_.getLong(0)).toIndexedSeq.sorted
     servePairs(probed, postings.filter(col("cell").isin(cellIds: _*)), k)

@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
+import graft.Lineage
+
 /** Synchronous k-core peeling (Seidman 1983's coreness decomposition,
   * run as the Matula–Beck peel in synchronous rounds): each round drops
   * every vertex whose degree in the SURVIVING induced subgraph is < k.
@@ -27,7 +29,8 @@ import org.apache.spark.storage.StorageLevel
   *  - the survivor set is broadcast into the dst semi-join below
   *    [[graft.GraftConf.BroadcastNodeLimit]] vertices, an ordinary
   *    hash join above (LPA's adaptive posture);
-  *  - survivors are `localCheckpoint`ed EVERY round: referenced twice
+  *  - survivors are truncated through `Lineage.truncate` EVERY round
+  *    (lazily; the final degree table eagerly): referenced twice
   *    per round (the semi-join and the count join), so unbounded
   *    lineage would double per round (LabelPropagation's argument
   *    verbatim), and the snapshot is only O(vertices).
@@ -71,13 +74,12 @@ object KCore {
 
     var alive = nodes
     for (_ <- 1 to rounds) {
-      alive = aliveDeg(alive).filter(col("deg") >= k)
-        .select(col("id"))
-        .localCheckpoint(eager = false)
+      alive = Lineage.truncate(
+        aliveDeg(alive).filter(col("deg") >= k).select(col("id")))
     }
     // induced degree of the FINAL survivor set (one more pass over the
     // cached edges, so the reported deg matches the returned vertices)
-    val out = aliveDeg(alive).localCheckpoint(eager = true)
+    val out = Lineage.truncate(aliveDeg(alive), eager = true)
     base.unpersist(); nodes.unpersist()
     out
   }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
+import graft.Lineage
+
 /** Synchronous label propagation (LPA, Raghavan et al. 2007) over a
   * directed edge list — the classic near-linear community-detection
   * pass. Every node starts with its own id as label; each iteration a
@@ -29,9 +31,10 @@ import org.apache.spark.storage.StorageLevel
   *    distinct neighbour-label volume;
   *  - the mode-with-tie-break is a single `max(struct(cnt, -lbl))`
   *    aggregate — no per-node window, no sort;
-  *  - the label table is `localCheckpoint`ed EVERY round (lazily;
-  *    eagerly on the last), not at [[PageRank.CheckpointInterval]]:
-  *    unlike PageRank's single-reference loop, each LPA update
+  *  - the label table is truncated through `Lineage.truncate` EVERY
+  *    round (lazily; eagerly on the last), not at
+  *    [[PageRank.CheckpointInterval]]: unlike PageRank's
+  *    single-reference loop, each LPA update
   *    references the previous label table twice (once inside the
   *    neighbour-mode aggregate, once as the keep-current fallback), so
   *    an interval-k checkpoint would let the logical plan double every
@@ -77,14 +80,14 @@ object LabelPropagation {
         .groupBy(col("src"))
         .agg(max(struct(col("cnt"), (-col("lbl")).as("nl"))).as("m"))
         .select(col("src").as("id"), (-col("m.nl")).as("newLbl"))
-      labels = labels.join(bcast(mode), Seq("id"), "left")
-        .select(col("id"), coalesce(col("newLbl"), col("lbl")).as("lbl"))
-        .localCheckpoint(eager = i == iterations)
+      labels = Lineage.truncate(labels.join(bcast(mode), Seq("id"), "left")
+        .select(col("id"), coalesce(col("newLbl"), col("lbl")).as("lbl")),
+        eager = i == iterations)
     }
     if (iterations == 0) {
       // materialize the trivial identity labelling so the caches below
       // can be released without the returned frame recomputing them
-      labels = labels.localCheckpoint(eager = true)
+      labels = Lineage.truncate(labels, eager = true)
     }
     base.unpersist(); nodes.unpersist()
     labels

@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
+import graft.Lineage
+
 /** Distributed PageRank over a directed edge list, in exact fixed-point
   * integer arithmetic ("token passing"): every node starts with
   * `initTokens`, each iteration sends `floor(tokens / out_degree)` along
@@ -33,9 +35,10 @@ import org.apache.spark.storage.StorageLevel
   *    iteration shuffles only O(nodes) rows;
   *  - the received-token aggregate is a sum, so map-side partial
   *    aggregation absorbs hub in-degree skew before the shuffle;
-  *  - each iteration `localCheckpoint`s the rank table (lazily) to keep
-  *    lineage flat — iteration i's plan does not re-derive iterations
-  *    1..i-1.
+  *  - every [[CheckpointInterval]] iterations the rank table is
+  *    truncated through `Lineage.truncate` (lazily; eagerly on the last)
+  *    to keep lineage flat — iteration i's plan does not re-derive
+  *    iterations 1..i-1.
   *
   * Dangling nodes (no out-edges) keep receiving but send nothing — their
   * inbound mass simply decays (the "mass leaks" formulation). Classic
@@ -49,7 +52,7 @@ object PageRank {
     * directions. Duplicate edges count twice (multigraph semantics) —
     * `distinct()` upstream if that is not wanted.
     */
-  /** Rounds between lineage-flattening localCheckpoints. */
+  /** Rounds between lineage truncations. */
   val CheckpointInterval = 5
 
   def run(edges: DataFrame, iterations: Int,
@@ -114,12 +117,12 @@ object PageRank {
       // result, and a session running many queries doesn't accumulate
       // per-run caches.
       if (i == iterations || i % CheckpointInterval == 0)
-        ranks = ranks.localCheckpoint(eager = i == iterations)
+        ranks = Lineage.truncate(ranks, eager = i == iterations)
     }
     if (iterations == 0) {
       // materialize the init ranks so the caches below can be released
       // without the returned frame recomputing them
-      ranks = ranks.localCheckpoint(eager = true)
+      ranks = Lineage.truncate(ranks, eager = true)
     }
     e.unpersist(); deg.unpersist(); nodes.unpersist()
     ranks

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.Lineage
+
 /** Exact triangle enumeration over an undirected simple graph via
   * DEGREE-ORDERED orientation — the node-iterator++ / "forward"
   * algorithm (Schank & Wagner, "Finding, Counting and Listing all
@@ -34,10 +36,10 @@ import org.apache.spark.sql.functions._
   * sides shuffle on the same key from the same child plan, so the
   * exchange is REUSED, not recomputed) and the closing join on the
   * (b, c) edge pair. The oriented edge set is referenced three times
-  * (both wedge sides + the closing probe), so it is lazily
-  * localCheckpoint'ed — materialized once on first action, lineage
-  * truncated, blocks freed by the ContextCleaner when unreferenced
-  * (the same three-use discipline as SemDeDup's assignment table).
+  * (both wedge sides + the closing probe), so it is lazily truncated
+  * through `Lineage.truncate` — materialized once on first action,
+  * blocks freed by the ContextCleaner when unreferenced (the same
+  * three-use discipline as SemDeDup's assignment table).
   *
   * Input contract: any edge orientation, duplicates and self-loops
   * tolerated — the operator canonicalizes to a distinct (lo, hi) set
@@ -67,18 +69,18 @@ object Triangles {
 
   /** Every triangle of the input graph exactly once, as
     * (a, b, c) with pr(a) < pr(b) < pr(c). The canonical edge set is
-    * lazily localCheckpoint'ed first — it feeds both the degree
+    * lazily truncated first — it feeds both the degree
     * aggregate and the orientation join, and without materialization
     * each consumer would recompute the full upstream edge derivation
     * (for a kNN-graph caller, the whole scoring pass). */
   def triangleRows(edges: DataFrame, u: String, v: String): DataFrame =
     triangleRowsCanonical(
-      canonicalEdges(edges, u, v).localCheckpoint(false))
+      Lineage.truncate(canonicalEdges(edges, u, v)))
 
   /** As [[triangleRows]] for a caller-supplied DISTINCT canonical
     * (lo, hi) edge set — skips the canonicalization shuffle. The frame
     * is read more than once: pass something already materialized (or
-    * cheap), as the registry consumers do via localCheckpoint. */
+    * cheap), as the registry consumers do via `Lineage.truncate`. */
   def triangleRowsCanonical(canon: DataFrame): DataFrame = {
     val degs = degrees(canon)
     // Attach endpoint degrees. The degree table is O(V) — AQE
@@ -90,15 +92,14 @@ object Triangles {
     // Orient lower priority → higher. lo < hi by construction, so the
     // equal-degree tie resolves to lo-first.
     val loFirst = col("dlo") < col("dhi") || (col("dlo") === col("dhi"))
-    val oriented = withDeg.select(
+    // Referenced three times below; materialize once, lazily. The
+    // source-side degree is NOT carried: the wedge order only compares
+    // dst priorities, so an extra long per row would widen this
+    // checkpoint and the wedge-join shuffle for nothing.
+    val oriented = Lineage.truncate(withDeg.select(
       when(loFirst, col("lo")).otherwise(col("hi")).as("src"),
       when(loFirst, col("hi")).otherwise(col("lo")).as("dst"),
-      when(loFirst, col("dhi")).otherwise(col("dlo")).as("dstDeg"))
-      // Referenced three times below; materialize once, lazily. The
-      // source-side degree is NOT carried: the wedge order only
-      // compares dst priorities, so an extra long per row would widen
-      // this checkpoint and the wedge-join shuffle for nothing.
-      .localCheckpoint(false)
+      when(loFirst, col("dhi")).otherwise(col("dlo")).as("dstDeg")))
     val o1 = oriented.select(col("src").as("a"),
       col("dst").as("b"), col("dstDeg").as("db"))
     val o2 = oriented.select(col("src").as("a2"), col("dst").as("c"),
@@ -122,7 +123,7 @@ object Triangles {
     * consumers left-join [[degrees]] to restore zero rows. */
   def perVertexCounts(edges: DataFrame, u: String, v: String): DataFrame =
     perVertexFromCanonical(
-      canonicalEdges(edges, u, v).localCheckpoint(false))
+      Lineage.truncate(canonicalEdges(edges, u, v)))
 
   /** As [[perVertexCounts]] for a caller-supplied canonical edge set. */
   def perVertexFromCanonical(canon: DataFrame): DataFrame = {

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{GraftConf, QueryDef, Tables}
+import graft.{GraftConf, Lineage, QueryDef, Tables}
 import graft.functions.GraftFunctions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -111,7 +111,7 @@ object DedupQueries {
     * (87.2 vs 111.7 s, simhash a wash) and above — the default sits at
     * the bracket midpoint, 1.34 MiB/core ≈ 43 MB on the study box. A
     * size-listing error fails CLOSED (pathBytes -1 is below any gate).
-    * Results are unchanged on both sides — localCheckpoint is
+    * Results are unchanged on both sides — `Lineage.truncate` is
     * semantics-preserving and each query build re-materializes from the
     * parquet inputs (nothing is reused across runs). A build calls this
     * once and threads the answer to every subtree it shapes. */
@@ -145,16 +145,16 @@ object DedupQueries {
         array_distinct(shingleHash60(col("ws"), 3, modP = true)).as("hs"))
     // Materialize-once above the scale gate (see materializeContraction):
     // one scan+shingle pass feeds every downstream reference instead of
-    // one per reference. LAZY localCheckpoint — materialized by the
+    // one per reference. LAZY truncation — materialized by the
     // consuming query's own first action, re-done per build, never
     // shared across runs. `members` is checkpointed too ((doc_id, rep),
     // two longs/row): its digest scan of the corpus is otherwise
     // duplicated once per expansion join.
-    val repHs = if (mat) repHs0.localCheckpoint(false) else repHs0
+    val repHs = if (mat) Lineage.truncate(repHs0) else repHs0
     val members0 = keyed.select(col("doc_id"), col("_dig"))
       .join(repHs.select(col("_dig"), col("doc_id").as("rep")), "_dig")
       .select(col("doc_id"), col("rep"))
-    val members = if (mat) members0.localCheckpoint(false) else members0
+    val members = if (mat) Lineage.truncate(members0) else members0
     (repHs.select(col("doc_id"), col("hs")), members)
   }
 
@@ -244,7 +244,8 @@ object DedupQueries {
     * the verified near-dup edge set (shared by the cluster and corpus
     * queries) — large-star/small-star contraction
     * ([[graft.operators.ConnectedComponents]]): O(log diameter) rounds,
-    * flat lineage via per-round localCheckpoint, one action per round.
+    * flat lineage via a per-round `Lineage.truncate`, one action per
+    * round.
     */
   private[queries] val labelsCache =
     new java.util.concurrent.ConcurrentHashMap[String, (String, DataFrame)]()
@@ -264,7 +265,7 @@ object DedupQueries {
   /** Memoized [[computeDupClusterLabels]]: the label table is a
     * deterministic artifact of the corpus version, but computing it
     * runs the large-star/small-star loop with one driver ACTION and a
-    * localCheckpoint per round — work the cache manager cannot dedupe
+    * lineage truncation per round — work the cache manager cannot dedupe
     * across query builds (checkpointed plans are never canonically
     * equal). Without the memo every build of the three cluster
     * consumers (td_dedup_clusters / td_dedup_corpus /
@@ -663,12 +664,12 @@ object DedupQueries {
         |       ELSE g.n_cand_verified / CAST(g.n_cand AS DOUBLE) END
         |    AS precision_at_05
         |FROM hit, g ORDER BY band_lo""".stripMargin) { (s, dir) =>
-      val sh = t(s, dir, "documents")
+      // 4 consumers (prefix, 2 verify sides, sig)
+      val sh = Lineage.truncate(t(s, dir, "documents")
         .select(col("doc_id"), words(col("text")).as("ws"))
         .filter(size(col("ws")) >= 3)
         .select(col("doc_id"),
-          array_distinct(shingleHash60(col("ws"), 3, modP = true)).as("hs"))
-        .localCheckpoint(false) // 4 consumers (prefix, 2 verify sides, sig)
+          array_distinct(shingleHash60(col("ws"), 3, modP = true)).as("hs")))
       // exact truth: prefix-filter candidates -> exact jaccard >= 0.3
       val shs = sh.select(col("doc_id"), col("hs"),
         array_sort(col("hs")).as("shs"))
@@ -715,11 +716,12 @@ object DedupQueries {
         concat_ws("_", b, element_at(col("sig"), b * 2 + 1),
           element_at(col("sig"), b * 2 + 2)))
       val bands = sig.select(col("doc_id"), explode(bandArr).as("bkey"))
-      val cand = bands.select(col("doc_id").as("a_id"), col("bkey"))
+      // 2 consumers: precision agg + hit join
+      val cand = Lineage.truncate(bands
+        .select(col("doc_id").as("a_id"), col("bkey"))
         .join(bands.select(col("doc_id").as("b_id"), col("bkey").as("bkey_y")),
           col("bkey") === col("bkey_y") && col("a_id") < col("b_id"))
-        .select(col("a_id"), col("b_id")).distinct()
-        .localCheckpoint(false) // 2 consumers: precision agg + hit join
+        .select(col("a_id"), col("b_id")).distinct())
       val g = withJ(cand).agg(count(lit(1)).as("n_cand"),
         count(when(col("j") >= 0.5, 1)).as("n_cand_verified"))
       val hit = truth
@@ -799,11 +801,11 @@ object DedupQueries {
         |          ORDER BY quality_score DESC, doc_id) AS rn FROM m)
         |SELECT doc_id, component_id, quality_score, rn = 1 AS is_rep
         |FROM r ORDER BY doc_id""".stripMargin) { (s, dir) =>
-      val m = dupClusterLabels(s, dir)
+      // 2 consumers: rep cut + final join
+      val m = Lineage.truncate(dupClusterLabels(s, dir)
         .select(col("id").as("doc_id"), col("label").as("component_id"))
         .join(TextQueries.qualityScored(s, dir)
-          .select(col("doc_id"), col("quality_score")), "doc_id")
-        .localCheckpoint(false) // 2 consumers: rep cut + final join
+          .select(col("doc_id"), col("quality_score")), "doc_id"))
       val rep = graft.plans.TopK.topKPerKey(m,
           keys = Seq(col("component_id")),
           order = Seq(col("quality_score").desc, col("doc_id").asc), k = 1)
@@ -846,7 +848,7 @@ object DedupQueries {
       // join side + every m expansion: 8 document scans in the plan).
       // One checkpointed pass feeds them all; lazy, per-build.
       val sims = if (materializeContraction(s, dir))
-        sims0.localCheckpoint(false) else sims0
+        Lineage.truncate(sims0) else sims0
       // hamming depends only on the fingerprint → contract identical
       // fingerprints to a representative, band-join the DISTINCT
       // fingerprints, and expand. Keeps the band join linear in distinct
@@ -1186,15 +1188,14 @@ object DedupQueries {
         |ORDER BY c.vec_id""".stripMargin) { (s, dir) =>
       val k = GraftConf.SemdedupCells(s)
       // the assignment subtree is referenced three times (both
-      // self-join sides + the final projection); lazily localCheckpoint
-      // it so the n x k distance evaluation — the query's dominant term
+      // self-join sides + the final projection); lazily truncate it so
+      // the n x k distance evaluation — the query's dominant term
       // once k grows with the corpus — runs ONCE and the joins read the
       // materialized (vec_id, cell) pairs, exactly the "materialize the
       // assignment as a corpus column" step a production pipeline runs
-      // (same per-stage localCheckpoint discipline as the graph family)
-      val cells = SimilarityQueries.kmeansAssign(s, dir, k)
-        .select(col("vec_id"), col("cell_lloyd").as("cell"))
-        .localCheckpoint(false)
+      // (same per-stage truncation discipline as the graph family)
+      val cells = Lineage.truncate(SimilarityQueries.kmeansAssign(s, dir, k)
+        .select(col("vec_id"), col("cell_lloyd").as("cell")))
       val v = normalizedEmbeddings(s, dir)
         .join(cells, "vec_id")
         .select(col("vec_id"), col("cell"), col("an"))
@@ -1365,13 +1366,12 @@ object DedupQueries {
         .filter(col("df") >= 2 && col("df") <= 50)
         .select(col("h"))
       val xf = x.join(g, Seq("h"), "left_semi")
-      val e = xf.select(col("h"), col("doc_id").as("a_id"))
+      // read by three aggregates below; materialize the pair join once
+      val e = Lineage.truncate(xf.select(col("h"), col("doc_id").as("a_id"))
         .join(xf.select(col("h").as("h_b"), col("doc_id").as("b_id")),
           col("h") === col("h_b") && col("a_id") < col("b_id"))
         .select(col("a_id").as("lo"), col("b_id").as("hi"))
-        .distinct()
-        // read by three aggregates below; materialize the pair join once
-        .localCheckpoint(false)
+        .distinct())
       val d = graft.operators.Triangles.degrees(e)
       val nodesWedges = d.agg(count(lit(1)).as("n_nodes"),
         expr("CAST(COALESCE(sum((deg*(deg-1)) div 2), 0) AS BIGINT)")

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{QueryDef, Tables}
+import graft.{Lineage, QueryDef, Tables}
 import graft.operators.MultimodalPipeline
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
@@ -187,10 +187,9 @@ object MultimodalQueries {
         |ORDER BY hb.doc_id""".stripMargin) { (s, dir) =>
       // consumed by the rep contraction AND the final expand join;
       // materialize so the codec pass decodes each image exactly once
-      val hb = MultimodalPipeline.dhashImages(
+      val hb = Lineage.truncate(MultimodalPipeline.dhashImages(
         MultimodalPipeline.toGradientPngBlobs(
-          Tables.load(s, dir, "documents"))).toDF()
-        .localCheckpoint(false)
+          Tables.load(s, dir, "documents"))).toDF())
       val hashCols = Seq("h0", "h1", "h2", "h3")
       val reps = hb.groupBy(hashCols.map(col): _*)
         .agg(min(col("doc_id")).as("rep"))

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{GraftConf, QueryDef, Tables}
+import graft.{GraftConf, Lineage, QueryDef, Tables}
 import graft.functions.GraftFunctions._
 import graft.operators.Triangles
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -159,7 +159,7 @@ object SimilarityQueries {
     *   - probe selection: TopKPerKey k=probes (map-side cut, shuffle
     *     O(n·probes)), NOT a row_number window over the n × cells
     *     exchange ([[annProbeFrame]]);
-    *   - the probes-rows-per-node probe frame is localCheckpointed so
+    *   - the probes-rows-per-node probe frame is lineage-truncated so
     *     the scoring pass runs once, not once per join side.
     * Multi-probe (probes > 1) is the standard IVF recall lever (an
     * exact neighbor just across a cell boundary is found via the
@@ -173,7 +173,7 @@ object SimilarityQueries {
     // checkpoint truncates the visible plan to a Scan ExistingRDD, so
     // the shape gate inspects the un-truncated build
     val pr0 = annProbeFrame(s, n, cellsOverride)
-    val pr = if (checkpoint) pr0.localCheckpoint(false) else pr0
+    val pr = if (checkpoint) Lineage.truncate(pr0) else pr0
     val qside = pr.select(col("vec_id").as("q_id"),
       col("label").as("q_label"), col("an").as("qa"), col("cell"))
     val cside = pr.filter(col("rn") === 1)
@@ -198,8 +198,7 @@ object SimilarityQueries {
     * aggregate and the triangle enumeration; materialized once so the
     * kNN scoring pass never re-runs. */
   private def graphStatsTail(knn: DataFrame): DataFrame = {
-    val e = Triangles.canonicalEdges(knn, "q_id", "n_id")
-      .localCheckpoint(false)
+    val e = Lineage.truncate(Triangles.canonicalEdges(knn, "q_id", "n_id"))
     val d = Triangles.degrees(e)
     val pv = Triangles.perVertexFromCanonical(e)
     d.join(pv, Seq("id"), "left")
@@ -703,9 +702,8 @@ object SimilarityQueries {
       val cents = n.filter(!isNew).orderBy(col("vec_id")).limit(cells)
         .select(col("vec_id").as("cid"), col("an").as("ca"))
       // the shared probe/assignment discipline (IvfIndex.probeFrame)
-      val pr = graft.operators.IvfIndex.probeFrame(
-          n.select(col("vec_id"), col("an")), cents, "vec_id", "an", 2)
-        .localCheckpoint(false)
+      val pr = Lineage.truncate(graft.operators.IvfIndex.probeFrame(
+        n.select(col("vec_id"), col("an")), cents, "vec_id", "an", 2))
       val qside = pr.filter(col("vec_id") % 5 === 4)
         .select(col("vec_id").as("q_id"), col("an").as("qa"), col("cell"))
       val cside = pr.filter(col("rn") === 1)

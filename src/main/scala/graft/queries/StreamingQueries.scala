@@ -2,7 +2,7 @@ package graft.queries
 
 import java.util.concurrent.atomic.AtomicInteger
 
-import graft.{QueryDef, Tables}
+import graft.{Lineage, QueryDef, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -954,7 +954,7 @@ object StreamingQueries {
     // zero shuffle): the stream side probes its top-2 cells, the
     // static side is the stored POSTINGS table read per micro-batch (a
     // partition-pruned parquet scan in production — no recomputed home
-    // cells, no localCheckpoint), joined on cell id (stream-static
+    // cells, no lineage truncation), joined on cell id (stream-static
     // inner, the blocking discipline of annKnnEdges).
     // The per-query top-3 is BOUNDED STATE: the long-keyed bottom-k
     // aggregate keyed by the order-preserving [[DoubleSortBits]]
@@ -1128,7 +1128,7 @@ object StreamingQueries {
       // corpus scan + a labels·dim shuffle) would run once per batch
       // plus once for the baseline (review r15); checkpointed it runs
       // once
-      val cu = labelCentroids(ex).localCheckpoint(false)
+      val cu = Lineage.truncate(labelCentroids(ex))
       val est = driftScoreAgg(ex, cu, "n_existing", "esum")
       val stream = driftScoreAgg(
         Tables.loadStream(s, dir, "embeddings")

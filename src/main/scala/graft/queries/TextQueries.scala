@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{QueryDef, Tables}
+import graft.{Lineage, QueryDef, Tables}
 import graft.functions.GraftFunctions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -145,7 +145,7 @@ object TextQueries {
     * (inherent to BPE — merge k+1 depends on merge k). The chained
     * replace() projections would make job k recompute k narrow maps
     * (O(k²·vocab) total), so every [[CheckpointEvery]] merges the
-    * representation is lazily localCheckpoint'ed — the next argmax job
+    * representation is lazily `Lineage.truncate`d — the next argmax job
     * materializes it and truncates lineage, keeping per-job work at
     * ≤CheckpointEvery replaces over the vocabulary and wall-time LINEAR
     * in merge count (measured in BASELINE.md via graft.tools.BpeStress).
@@ -228,7 +228,7 @@ object TextQueries {
               lit(bpePh(step))).as("repr"),
             col("freq"))
           if (step % CheckpointEvery == 0)
-            repr = repr.localCheckpoint(false)
+            repr = Lineage.truncate(repr)
           step += 1
       }
     }

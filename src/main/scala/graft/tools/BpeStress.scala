@@ -11,7 +11,7 @@ import graft.queries.TextQueries
   * What it certifies: each merge is one distributed pair-count
   * aggregation over the cached O(vocab) representation plus a 1-row
   * argmax collect (inherent to BPE — merge k+1 depends on merge k),
-  * and the every-[[TextQueries.CheckpointEvery]]-rounds localCheckpoint
+  * and the every-[[TextQueries.CheckpointEvery]]-rounds truncation
   * keeps lineage (and therefore per-job work) flat — so wall-time is
   * LINEAR in merge count and jobs/merge is the constant 2 (the
   * aggregation's shuffle-map job and the argmax result job; the lazy

@@ -2,7 +2,7 @@ package graft.tools
 
 import java.util.concurrent.atomic.AtomicReference
 
-import graft.{GraftConf, QueryListener, Tables}
+import graft.{GraftConf, Lineage, QueryListener, Tables}
 import graft.functions.GraftFunctions.dot
 import graft.operators.IvfIndex
 import org.apache.spark.sql.{Dataset, Row}
@@ -114,8 +114,8 @@ object DriftAutoRetrain {
     val embPath = s"$out/embeddings.parquet"
 
     val n = DedupQueries.normalizedEmbeddings(spark, out)
-    val grown = n.select(col("vec_id"), col("an")).localCheckpoint(false)
-    val ex = n.filter(col("vec_id") % 5 =!= 4).localCheckpoint(false)
+    val grown = Lineage.truncate(n.select(col("vec_id"), col("an")))
+    val ex = Lineage.truncate(n.filter(col("vec_id") % 5 =!= 4))
     val preDrift = ex.select(col("vec_id"), col("an"))
 
     // ---- the CURRENTLY-SERVING vintage, published before any arrival
@@ -131,12 +131,11 @@ object DriftAutoRetrain {
 
     // ---- static baseline of the monitor (pre-drift mean cosine per
     // label), computed once — exactly st_embedding_drift's batch leg
-    val cu = StreamingQueries.labelCentroids(
-      ex.select(col("label"), col("an"))).localCheckpoint(false)
-    val est = StreamingQueries
+    val cu = Lineage.truncate(StreamingQueries.labelCentroids(
+      ex.select(col("label"), col("an"))))
+    val est = Lineage.truncate(StreamingQueries
       .driftScoreAgg(ex.select(col("label"), col("an")), cu,
-        "n_existing", "esum")
-      .localCheckpoint(false)
+        "n_existing", "esum"))
 
     // ---- the monitored arrival stream: micro-batched file source over
     // the SAME fixture files, st_embedding_drift's scoring state
@@ -225,20 +224,18 @@ object DriftAutoRetrain {
   private def serveAb(spark: org.apache.spark.sql.SparkSession,
       out: String, r: HandoffReport): Unit = {
     val grown = graft.queries.DedupQueries.normalizedEmbeddings(spark, out)
-    val queries = grown.filter(col("vec_id") % 5 === 4 &&
+    val queries = Lineage.truncate(grown.filter(col("vec_id") % 5 === 4 &&
         col("vec_id") < r.nBase * 2)
-      .select(col("vec_id").as("q_id"), col("an").as("qa"))
-      .localCheckpoint(false)
+      .select(col("vec_id").as("q_id"), col("an").as("qa")))
     val nQueries = queries.count()
-    val truth = graft.plans.TopK.topKPerKey(
+    val truth = Lineage.truncate(graft.plans.TopK.topKPerKey(
         grown.crossJoin(broadcast(queries))
           .filter(col("vec_id") =!= col("q_id"))
           .select(col("q_id"), col("vec_id").as("n_id"),
             dot(col("qa"), col("an")).as("cosine")),
         keys = Seq(col("q_id")),
         order = Seq(col("cosine").desc, col("n_id").asc), k = 3)
-      .select(col("q_id"), col("n_id"))
-      .localCheckpoint(false)
+      .select(col("q_id"), col("n_id")))
     val nTrue = truth.count()
     val meter = QueryListener.attach(spark)
     val legs = for ((tag, dir) <- Seq("stale" -> r.staleDir,
@@ -260,8 +257,8 @@ object DriftAutoRetrain {
       val skew = occRow.getLong(0).toDouble * occRow.getLong(1) /
         occRow.getLong(2)
       // recall of this vintage's centroids over the GROWN corpus
-      val postings = IvfIndex.build(grown, r.cells, Some(lc))._2
-        .localCheckpoint(false)
+      val postings = Lineage.truncate(
+        IvfIndex.build(grown, r.cells, Some(lc))._2)
       val Seq(rec1, rec2) = Seq(1, 2).map(p => truth.join(
         IvfIndex.serve(queries, lc, postings, probes = p)
           .select(col("q_id"), col("n_id")), Seq("q_id", "n_id"))

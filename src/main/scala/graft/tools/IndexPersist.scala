@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.{QueryListener, RelStress, Tables}
+import graft.{Lineage, QueryListener, RelStress, Tables}
 import graft.operators.IvfIndex
 import org.apache.spark.sql.functions._
 
@@ -103,8 +103,8 @@ object IndexPersist {
       // assembly while the Lloyd compute silently lands in build_s
       // (ADVICE r17). Eager also keeps the guarantee that the
       // assignment broadcast never re-runs the Lloyd plan.
-      val trained = IvfIndex.trainSampled(sample, cells, rounds = 2)
-        .localCheckpoint(true)
+      val trained = Lineage.truncate(
+        IvfIndex.trainSampled(sample, cells, rounds = 2), eager = true)
       val tTrain = (System.nanoTime() - t0) / 1e9
       val (cents, postings) = IvfIndex.build(corpus, cells,
         centsOverride = Some(trained))

@@ -28,8 +28,7 @@ class GraftConfSpec extends AnyFunSuite with SparkTestSession {
     ButterflyProbePairBound -> Seq("1.6e7", "-1"),
     ButterflyBroadcastPairLimit -> Seq("none", "-5"),
     CcSaltBuckets -> Seq("abc", "-1"),
-    CcCheckpointDir -> Seq(" "),
-    CcCheckpointInterval -> Seq("five", "0"),
+    CheckpointDir -> Seq(" "),
     DedupBucketChunkBytes -> Seq("8MB", "0"),
     DedupMaterializePerCoreBytes -> Seq("auto", "-1"),
     TopkRewrite -> Seq("yes"),
@@ -38,8 +37,8 @@ class GraftConfSpec extends AnyFunSuite with SparkTestSession {
     StreamStatePartitions -> Seq("four", "0"),
     BpeLocalVocabLimit -> Seq("1e6", "-1"))
 
-  test("21 keys, each declared once under spark.graft., 8 of them bench-only") {
-    assert(all.size == 21)
+  test("20 keys, each declared once under spark.graft., 8 of them bench-only") {
+    assert(all.size == 20)
     assert(all.map(_.name).distinct.size == all.size)
     assert(all.forall(_.name.startsWith("spark.graft.")))
     assert(benchOnly.map(_.name).toSet == Set("ann.queryIdBound",
@@ -85,8 +84,10 @@ class GraftConfSpec extends AnyFunSuite with SparkTestSession {
   }
 
   test("an undeclared spark.graft. key fails naming it") {
-    // a deleted knob and a typo of cc.saltBuckets
+    // deleted knobs and a typo of cc.saltBuckets
     for ((k, v) <- Seq("spark.graft.base.partitions" -> "4",
+        "spark.graft.cc.checkpointDir" -> "/tmp/ck",
+        "spark.graft.cc.checkpointInterval" -> "5",
         "spark.graft.cc.saltBucket" -> "2")) {
       spark.conf.set(k, v)
       try {
@@ -120,8 +121,9 @@ class GraftConfSpec extends AnyFunSuite with SparkTestSession {
     failsNaming(CcSaltBuckets.name, "abc") {
       operators.ConnectedComponents.labels(edges).collect()
     }
-    failsNaming(CcCheckpointInterval.name, "0") {
-      operators.ConnectedComponents.labels(edges).collect()
+    // every truncation site reads the key, not only ConnectedComponents
+    failsNaming(CheckpointDir.name, " ") {
+      operators.PageRank.run(edges, iterations = 1).collect()
     }
   }
 

@@ -72,6 +72,8 @@ class ConnectedComponentsSpec extends AnyFunSuite with SparkTestSession {
     }
   }
 
+  private val checkpointDir = graft.GraftConf.CheckpointDir.name
+
   test("per-node min plans as a salted two-phase aggregate") {
     val nbrs = Seq((1L, 2L), (1L, 3L), (4L, 2L)).toDF("u", "v")
     def hashAggs(salt: Int): Int =
@@ -117,12 +119,8 @@ class ConnectedComponentsSpec extends AnyFunSuite with SparkTestSession {
       "spark.sql.shuffle.partitions" -> "8") {
       val got = run(edges)
       assert(got == brute(edges))
-      // listener events are async — wait until the max is quiescent
-      var prev = -1L
-      var spins = 0
-      while (maxTaskRecords.get() != prev && spins < 80) {
-        prev = maxTaskRecords.get(); Thread.sleep(25); spins += 1
-      }
+      // listener events are async — the bus fence delivers every one
+      org.apache.spark.graft.BusShim.drain(spark.sparkContext)
       assert(maxTaskRecords.get() < hubDegree / 2,
         s"a task shuffle-read ${maxTaskRecords.get()} rows — hub landed on one reducer")
     } finally spark.sparkContext.removeSparkListener(listener)
@@ -133,46 +131,22 @@ class ConnectedComponentsSpec extends AnyFunSuite with SparkTestSession {
     try {
       val edges = (1L until 40L).map(i => (i, i + 1)) // diameter 39, >1 round
       val expected = brute(edges)
-      val got = withConf(
-        "spark.graft.cc.checkpointDir" -> dir.toString,
-        "spark.graft.cc.checkpointInterval" -> "2") {
+      val got = withConf(checkpointDir -> dir.toString) {
         run(edges)
       }
       assert(got == expected)
-      // reliable checkpoints actually landed on disk, and superseded ones
-      // were deleted: what remains is round 0's (the final labeling's
-      // `nodes` side still reads it) plus the latest round's
+      // reliable checkpoints actually landed on disk, and every round's
+      // superseded one was released: what remains is round 0's (the
+      // final labeling's `nodes` side still reads it) plus the latest.
+      // Every round is reliable, so no intermediate round's dir may leak.
       import scala.jdk.CollectionConverters._
       val rddDirs = java.nio.file.Files.walk(dir).iterator().asScala
         .filter(_.getFileName.toString.startsWith("rdd-")).toSeq
       assert(rddDirs.nonEmpty, "no reliable checkpoint directories written")
       assert(rddDirs.size == 2,
         s"expected round-0 + latest checkpoint dirs only, got: $rddDirs")
-    } finally {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(dir).iterator().asScala.toSeq.reverse
-        .foreach(p => java.nio.file.Files.deleteIfExists(p))
-    }
-  }
-
-  test("checkpointInterval=1 does not leak intermediate checkpoint dirs") {
-    // regression: round-0 and round-1 checkpoints both materialize inside
-    // the FIRST action; a listing-diff sweep protected both forever. The
-    // identity-based sweep must keep exactly round-0 + the latest.
-    val dir = java.nio.file.Files.createTempDirectory("graft-cc-ck1")
-    try {
-      val edges = (1L until 40L).map(i => (i, i + 1))
-      val got = withConf(
-        "spark.graft.cc.checkpointDir" -> dir.toString,
-        "spark.graft.cc.checkpointInterval" -> "1") {
-        run(edges)
-      }
-      assert(got == brute(edges))
-      import scala.jdk.CollectionConverters._
-      val rddDirs = java.nio.file.Files.walk(dir).iterator().asScala
-        .filter(_.getFileName.toString.startsWith("rdd-")).toSeq
-      assert(rddDirs.size == 2,
-        s"expected round-0 + latest checkpoint dirs only, got: $rddDirs")
+      // one context checkpoint dir for the run, not one per round
+      assert(java.nio.file.Files.list(dir).count() == 1)
     } finally {
       import scala.jdk.CollectionConverters._
       java.nio.file.Files.walk(dir).iterator().asScala.toSeq.reverse
@@ -196,9 +170,7 @@ class ConnectedComponentsSpec extends AnyFunSuite with SparkTestSession {
           CcSourceComputeCounter.n.incrementAndGet()
           it.map(i => (i, i + 1))
         }.toDF("src", "dst")
-      val got = withConf(
-        "spark.graft.cc.checkpointDir" -> dir.toString,
-        "spark.graft.cc.checkpointInterval" -> "2") {
+      val got = withConf(checkpointDir -> dir.toString) {
         ConnectedComponents.labels(source)
           .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       }

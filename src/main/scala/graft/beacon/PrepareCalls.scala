@@ -4,15 +4,15 @@ import graft.beacon.BeaconExprs._
 import graft.beacon.CallsHeaderMap.{canonicalOrder, labeledFields, renameMap}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.FilePartition
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** The `prepare-calls` pipeline (reference: beacon/prepare_calls.py:31-191)
   * re-expressed Spark-first: one cached base scan feeding eight derived
   * DataFrames (the reference re-parses its CSV ~14×; SURVEY.md §3 E2),
-  * petl's driver-memory dict lookups replaced by broadcast left joins, and
-  * file-order determinism made explicit with an `_ord` struct column that
-  * sinks sort on (SURVEY.md §7.3.1).
+  * petl's five driver-memory dict lookups replaced by one per-key rollup
+  * of the base joined back once ([[qa]]), and file-order determinism
+  * made explicit with an `_ord` struct column that sinks sort on
+  * (SURVEY.md §7.3.1).
   */
 object PrepareCalls {
 
@@ -138,12 +138,41 @@ object PrepareCalls {
   def apply(canonical: DataFrame, users: Users): Outputs = {
     val sp = base(canonical)
 
+    // Derived columns that a sink table and the QA lookups both read,
+    // each defined once over the base's raw columns.
+    val triageCompletedOn =
+      triageCompletion(col("was_contact_made"), col("latest_attempt_date"))
+    val noteCategory = callNoteCategory(col("was_contact_made"), col("outcome"))
+    val noteCount = callNoteCount(col("was_contact_made"))
+    // F3 reads the RAW food_priority; C15-C17 read it parsed.
+    val foodNeed = needsFood(col("outcome"), col("food_priority"))
+    val foodPriority = parseFoodPriority(col("food_priority"))
+    val foodCompletedOn = foodCompletion(foodPriority, col("latest_attempt_date"))
+    val foodSupplemental = supplementalData(foodPriority)
+    val foodUser = lit(users.foodNeedsUser)
+    val callbackDate = parseCallbackDate(col("callback_date"))
+    val callbackNeed = needsCallback(callbackDate, col("outcome"),
+      col("food_priority"))
+    val callbackStartOn =
+      callbackStartDate(callbackDate, col("latest_attempt_date"))
+    // The four remaining needs (prepare_calls.py:92-129) in cat order
+    // (prepare_calls.py:148-155/187-191): filter, category, user id.
+    val remaining = Seq(
+      (truthy(col("addl_medication_prescriptions")), "prescription pickups",
+        lit(users.simpleNeedsUser)),
+      (truthy(col("addl_mental_wellbeing")), "physical and mental wellbeing",
+        lit(users.complexNeedsUser)),
+      (truthy(col("addl_financial")), "financial support",
+        lit(users.complexNeedsUser)),
+      (needsOtherSupport(col("outcome")), "other", otherNeedUser(
+        users.complexNeedsUser, users.simpleNeedsUser,
+        users.callLogReviewUser)))
+
     // original_triage_needs (prepare_calls.py:46-52)
     val originalTriageNeeds = sp
       .withColumn("category", lit("phone triage"))
       .withColumn("name", lit(MsgOriginalTriageNeed))
-      .withColumn("completed_on",
-        triageCompletion(col("was_contact_made"), col("latest_attempt_date")))
+      .withColumn("completed_on", triageCompletedOn)
       .select((needsFields :+ "completed_on").map(col) :+
         ord(0, col("_idx")): _*)
 
@@ -152,9 +181,8 @@ object PrepareCalls {
     // was_contact_made values get count 0 and vanish at explode.
     val callNotes = sp
       .filter(col("was_contact_made").isNotNull)
-      .withColumn("category",
-        callNoteCategory(col("was_contact_made"), col("outcome")))
-      .withColumn("n", callNoteCount(col("was_contact_made")))
+      .withColumn("category", noteCategory)
+      .withColumn("n", noteCount)
       .select(col("_idx"), col("nhs_number"), col("created_at"),
         col("updated_at"), col("category"),
         posexplode(array_repeat(lit(1), col("n"))).as(Seq("pos", "dummy")))
@@ -173,59 +201,40 @@ object PrepareCalls {
     val originalTriageNotes =
       importNotes.unionByName(callNotes, allowMissingColumns = true)
 
-    // food_needs (prepare_calls.py:70-80). Note the F3 filter reads the
-    // RAW food_priority; parsing happens after.
+    // food_needs (prepare_calls.py:70-80). C8's body reads the parsed
+    // priority, so food_priority is replaced before `name`.
     val foodNeeds = sp
-      .filter(needsFood(col("outcome"), col("food_priority")))
+      .filter(foodNeed)
       .withColumn("category", lit("groceries and cooked meals"))
-      .withColumn("food_priority", parseFoodPriority(col("food_priority")))
-      .withColumn("supplemental_data", supplementalData(col("food_priority")))
-      .withColumn("completed_on",
-        foodCompletion(col("food_priority"), col("latest_attempt_date")))
-      .withColumn("user_id", lit(users.foodNeedsUser))
+      .withColumn("completed_on", foodCompletedOn)
+      .withColumn("supplemental_data", foodSupplemental)
+      .withColumn("user_id", foodUser)
+      .withColumn("food_priority", foodPriority)
       .withColumn("name", composeFoodNeedDesc(col("completed_on")))
       .select((needsFields ++ Seq("completed_on", "supplemental_data",
         "user_id")).map(col) :+ ord(0, col("_idx")): _*)
 
-    // callback_needs (prepare_calls.py:82-90): parse first, then filter.
+    // callback_needs (prepare_calls.py:82-90). The body reads the parsed
+    // callback_date, so it is replaced before `name`.
     val callbackNeeds = sp
-      .withColumn("callback_date", parseCallbackDate(col("callback_date")))
-      .filter(needsCallback(col("callback_date"), col("outcome"),
-        col("food_priority")))
+      .filter(callbackNeed)
+      .withColumn("start_on", callbackStartOn)
+      .withColumn("callback_date", callbackDate)
       .withColumn("category", lit("phone triage"))
       .withColumn("name", composeWithPrefix(MsgCallbackNeed))
-      .withColumn("start_on",
-        callbackStartDate(col("callback_date"), col("latest_attempt_date")))
       .select((needsFields :+ "start_on").map(col) :+ ord(0, col("_idx")): _*)
 
-    // The four remaining-need pipelines (prepare_calls.py:92-129), each a
-    // filter + constant category + composed name + user id.
-    def simpleNeed(rank: Int, filterCol: Column, category: String,
-        userId: Column): DataFrame = sp
-      .filter(filterCol)
-      .withColumn("category", lit(category))
-      .withColumn("name", composeWithPrefix(MsgOtherNeed))
-      .withColumn("user_id", userId)
-      .select((needsFields :+ "user_id").map(col) :+ ord(rank, col("_idx")): _*)
-
-    val prescriptionNeeds = simpleNeed(0,
-      truthy(col("addl_medication_prescriptions")),
-      "prescription pickups", lit(users.simpleNeedsUser))
-    val mentalWellbeingNeeds = simpleNeed(1,
-      truthy(col("addl_mental_wellbeing")),
-      "physical and mental wellbeing", lit(users.complexNeedsUser))
-    val financialNeeds = simpleNeed(2, truthy(col("addl_financial")),
-      "financial support", lit(users.complexNeedsUser))
-    val otherNeeds = simpleNeed(3, needsOtherSupport(col("outcome")),
-      "other", otherNeedUser(users.complexNeedsUser, users.simpleNeedsUser,
-        users.callLogReviewUser))
-
-    // cat of the four (prepare_calls.py:148-155/187-191); _ord.rank keeps
-    // petl's concatenation order.
-    val remainingNeeds = prescriptionNeeds
-      .unionByName(mentalWellbeingNeeds)
-      .unionByName(financialNeeds)
-      .unionByName(otherNeeds)
+    // cat of the four remaining needs; _ord.rank keeps petl's
+    // concatenation order.
+    val remainingNeeds = remaining.zipWithIndex.map {
+      case ((need, category, userId), rank) => sp
+        .filter(need)
+        .withColumn("category", lit(category))
+        .withColumn("name", composeWithPrefix(MsgOtherNeed))
+        .withColumn("user_id", userId)
+        .select((needsFields :+ "user_id").map(col) :+
+          ord(rank, col("_idx")): _*)
+    }.reduce(_ unionByName _)
 
     // contact_profile_updates (prepare_calls.py:131-143)
     val contactProfileUpdates = sp
@@ -239,83 +248,65 @@ object PrepareCalls {
         "dietary_details", "has_covid_symptoms").map(col) :+
         ord(0, col("_idx")): _*)
 
-    val qualityAssurance = qa(sp, originalTriageNeeds, callNotes, foodNeeds,
-      callbackNeeds, remainingNeeds)
+    def status(completedOn: Column): Column =
+      when(completedOn.isNotNull, "Completed").otherwise("To do")
+    val qualityAssurance = qa(sp,
+      firstMatch(lit(true), status(triageCompletedOn))
+        .as("original_triage_status"),
+      listOf(array_repeat(struct(col("_idx"), noteCategory.as("text")),
+        noteCount), ", ").as("original_triage_call_notes"),
+      firstMatch(foodNeed, concat_ws("\n",
+        lit("Food need created"),
+        concat(lit("Priority: "), coalesce(
+          get_json_object(foodSupplemental, "$.food_priority"), lit(""))),
+        concat(lit("Status: "), status(foodCompletedOn)),
+        concat(lit("Assigned to: "), foodUser))).as("food_need"),
+      firstMatch(callbackNeed, concat_ws("\n",
+        lit("Callback need created"),
+        concat(lit("Start on: "), callbackStartOn.cast("string"))))
+        .as("callback_need"),
+      // "<Category> (Assigned to <id>)" by cat rank, then file order
+      // (initcap ≡ Python str.title for these categories).
+      listOf(filter(array(remaining.zipWithIndex.map {
+        case ((need, category, userId), rank) => when(need, struct(
+          lit(rank).as("rank"), col("_idx"), concat(initcap(lit(category)),
+            lit(" (Assigned to "), userId, lit(")")).as("text")))
+      }: _*), _.isNotNull), "\n").as("remaining_needs"))
 
     Outputs(sp, qualityAssurance, contactProfileUpdates, originalTriageNeeds,
       originalTriageNotes, foodNeeds, callbackNeeds, remainingNeeds)
   }
 
-  /** First row per nhs_number in file order — the deterministic form of
-    * petl dictlookupone's first-match semantics (prepare_calls.py:147-151;
-    * SURVEY.md §2.4 J1). */
-  private def firstPerKey(df: DataFrame, cols: Seq[String]): DataFrame = {
-    val w = Window.partitionBy(col("nhs_number")).orderBy(col("_ord"))
-    df.withColumn("_rn", row_number().over(w))
-      .filter(col("_rn") === 1)
-      .select(("nhs_number" +: cols).map(col): _*)
+  /** J1, petl dictlookupone's first match (prepare_calls.py:147-151):
+    * `value` of the lowest-`_idx` row of the group that passes `filter`,
+    * null when none does. */
+  private def firstMatch(filter: Column, value: Column): Column =
+    min(when(filter, struct(col("_idx"), value.as("v")))).getField("v")
+
+  /** J2, petl dictlookup's list per key: every row's `entries` (structs
+    * whose leading fields order them and whose `text` is listed), over
+    * the group, sorted and joined with `sep`; null when there are none. */
+  private def listOf(entries: Column, sep: String): Column = {
+    val all = sort_array(flatten(collect_list(entries)))
+    when(size(all) > 0, array_join(transform(all, _.getField("text")), sep))
   }
 
-  /** The QA audit table (prepare_calls.py:145-173): petl's driver-memory
-    * dict lookups become broadcast left joins — J1 (first match) via a
-    * file-order row_number, J2 (list per key) via sort_array(collect_list).
-    */
-  private def qa(sp: DataFrame, originalTriageNeeds: DataFrame,
-      callNotes: DataFrame, foodNeeds: DataFrame, callbackNeeds: DataFrame,
-      remainingNeeds: DataFrame): DataFrame = {
-
-    val triageStatus = firstPerKey(originalTriageNeeds, Seq("completed_on"))
-      .select(col("nhs_number"),
-        when(col("completed_on").isNotNull, "Completed")
-          .otherwise("To do").as("original_triage_status"))
-
-    // J2: all call-note categories per key, in file order, comma-joined.
-    val noteCats = callNotes
-      .groupBy(col("nhs_number"))
-      .agg(array_join(transform(
-        sort_array(collect_list(struct(col("_ord"), col("category")))),
-        x => x.getField("category")), ", ").as("original_triage_call_notes"))
-
-    val foodNeed = firstPerKey(foodNeeds,
-      Seq("completed_on", "supplemental_data", "user_id"))
-      .select(col("nhs_number"), concat_ws("\n",
-        lit("Food need created"),
-        concat(lit("Priority: "), coalesce(
-          get_json_object(col("supplemental_data"), "$.food_priority"),
-          lit(""))),
-        concat(lit("Status: "), when(col("completed_on").isNotNull,
-          "Completed").otherwise("To do")),
-        concat(lit("Assigned to: "), col("user_id"))).as("food_need"))
-
-    val callbackNeed = firstPerKey(callbackNeeds, Seq("start_on"))
-      .select(col("nhs_number"), concat_ws("\n",
-        lit("Callback need created"),
-        concat(lit("Start on: "), col("start_on").cast("string")))
-        .as("callback_need"))
-
-    // J2 over the 4-way cat: per-key lines "<Category> (Assigned to <id>)"
-    // in cat order (initcap ≡ Python str.title for these categories).
-    val remaining = remainingNeeds
-      .groupBy(col("nhs_number"))
-      .agg(array_join(transform(
-        sort_array(collect_list(struct(col("_ord"), col("category"),
-          col("user_id")))),
-        x => concat(initcap(x.getField("category")), lit(" (Assigned to "),
-          x.getField("user_id"), lit(")"))), "\n").as("remaining_needs"))
-
-    // No broadcast() hints: the five build sides are per-nhs_number
-    // rollups of the SAME input table — O(n), not dimension tables. A
-    // forced broadcast would OOM at scale; AQE broadcasts them anyway
-    // while they are actually small (pinned by PrepareCallsSpec).
+  /** The QA audit table (prepare_calls.py:145-173). petl's five dict
+    * lookups keyed on nhs_number (SURVEY.md §2.4 J1/J2) each depend on
+    * one key's base rows in `_idx` order, so ONE groupBy(nhs_number) of
+    * the base computes every `lookup` ([[firstMatch]], [[listOf]]) and
+    * ONE left join puts them back: a groupjoin (Moerkotte & Neumann,
+    * VLDB 2011). The equi-join never matches a null key, so a null
+    * nhs_number gets null lookups, not another null row's (pinned by
+    * PrepareCallsSpec). No broadcast() hint: the rollup has a row per
+    * key, O(n) in the input, so a forced broadcast would OOM at scale;
+    * AQE broadcasts it while it is actually small. */
+  private def qa(sp: DataFrame, lookups: Column*): DataFrame =
     sp.withColumn("call_log", composeBody(Nil))
-      .join(triageStatus, Seq("nhs_number"), "left")
-      .join(noteCats, Seq("nhs_number"), "left")
-      .join(foodNeed, Seq("nhs_number"), "left")
-      .join(callbackNeed, Seq("nhs_number"), "left")
-      .join(remaining, Seq("nhs_number"), "left")
+      .join(sp.groupBy(col("nhs_number")).agg(lookups.head, lookups.tail: _*),
+        Seq("nhs_number"), "left")
       .select(Seq("nhs_number", "latest_attempt_date",
         "original_triage_status", "original_triage_call_notes", "food_need",
         "callback_need", "remaining_needs", "call_log").map(col) :+
         ord(0, col("_idx")): _*)
-  }
 }

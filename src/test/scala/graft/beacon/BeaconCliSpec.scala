@@ -2,7 +2,7 @@ package graft.beacon
 
 import java.nio.file.Files
 
-import graft.SparkTestSession
+import graft.{QueryListener, SparkTestSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 import scala.jdk.CollectionConverters._
@@ -67,5 +67,20 @@ class BeaconCliSpec extends AnyFunSuite with SparkTestSession {
     assert(written.asScala == outputs.all.keySet)
     assert(BeaconCli.SinkConcurrency == 3)
     assert(peak.get == BeaconCli.SinkConcurrency)
+  }
+
+  test("per-sink job counts on the fixture: the QA audit table takes at most 5") {
+    val inDir = Files.createTempDirectory("cli-in-")
+    val outDir = Files.createTempDirectory("cli-out-")
+    val calls = CallsFixture.writeCallsCsv(inDir)
+    val outputs = PrepareCalls(PrepareCalls.fromCsv(spark, calls.toString),
+      PrepareCalls.Users(101L, 102L, 103L, 104L))
+    outputs.base.count() // the shared base, materialized as writeSinks does
+    val listener = QueryListener.attach(spark)
+    val jobs = try outputs.all.toSeq.sortBy(_._1).map { case (name, df) =>
+      name -> listener.timed(CsvIO.writeCsv(df, s"$outDir/$name.csv"))._3.jobs
+    } finally listener.detach()
+    info(jobs.map { case (n, j) => s"$n=$j" }.mkString(" "))
+    assert(jobs.toMap.apply("quality_assurance") <= 5, jobs)
   }
 }

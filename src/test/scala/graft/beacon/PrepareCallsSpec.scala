@@ -2,9 +2,17 @@ package graft.beacon
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import graft.SparkTestSession
 import graft.beacon.BeaconExprs._
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoinExec}
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Golden end-to-end tests for the prepare-calls pipeline against the
@@ -12,7 +20,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * documented edge semantics: trailing-space outcomes, explode counts,
   * error-as-null parses, first-match lookups, file-order outputs.
   */
-class PrepareCallsSpec extends AnyFunSuite with SparkTestSession {
+class PrepareCallsSpec extends AnyFunSuite with SparkTestSession
+    with AdaptiveSparkPlanHelper {
 
   private val users = PrepareCalls.Users(101L, 102L, 103L, 104L)
 
@@ -165,15 +174,24 @@ class PrepareCallsSpec extends AnyFunSuite with SparkTestSession {
   }
 
   test("qa joins are broadcast at fixture scale without forced hints (AQE)") {
-    // The five qa build sides are O(n) rollups of the input table, so the
-    // code no longer pins broadcast(); this asserts the perf property —
-    // AQE still picks broadcast while the sides are actually small —
-    // without hard-coding the strategy for scales where it would be wrong.
+    // The QA build side is one O(n) rollup of the input table (a row per
+    // nhs_number), so the code pins no broadcast(); this asserts the perf
+    // property — one shuffle, for the rollup, and AQE still broadcasts it
+    // while it is actually small — without hard-coding the strategy for
+    // scales where it would be wrong.
     val df = outputs.qualityAssurance
     df.collect() // finalize the adaptive plan
-    val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("BroadcastHashJoin"), plan)
-    assert(!plan.contains("SortMergeJoin"), plan)
+    val plan = df.queryExecution.executedPlan
+    val keys = collect(plan) { case e: ShuffleExchangeExec =>
+      e.outputPartitioning match {
+        case h: HashPartitioning =>
+          h.expressions.collect { case a: Attribute => a.name }
+        case other => Seq(other.toString)
+      }
+    }
+    assert(keys == Seq(Seq("nhs_number")), plan)
+    assert(collect(plan) { case j: BroadcastHashJoinExec => j }.size == 1, plan)
+    assert(collect(plan) { case j: SortMergeJoinExec => j }.isEmpty, plan)
   }
 
   test("import_data default is the compact serializer; petl-byte twin pinned (C1)") {
@@ -243,6 +261,75 @@ class PrepareCallsSpec extends AnyFunSuite with SparkTestSession {
     assert(sortedRows(out.remainingNeeds).isEmpty)
     val triage = sortedRows(out.originalTriageNeeds)
     assert(triage.map(_.getString(0)) == Seq("1", "2"))
+  }
+
+  /** A canonical frame from canonical-name → value maps through
+    * [[PrepareCalls.canonicalize]]; an absent name is null, as the CSV
+    * reader yields a blank cell. */
+  private def canonical(rows: Seq[Map[String, String]]): DataFrame = {
+    val names = CallsHeaderMap.canonicalOrder
+    PrepareCalls.canonicalize(spark.createDataFrame(
+      rows.map(r => Row.fromSeq(names.map(r.get(_).orNull))).asJava,
+      StructType(names.map(StructField(_, StringType)))))
+  }
+
+  private val qaLookups = Seq("original_triage_status",
+    "original_triage_call_notes", "food_need", "callback_need",
+    "remaining_needs")
+
+  test("quality_assurance: a null nhs_number matches no lookup, not even another null") {
+    val out = PrepareCalls(canonical(Seq(
+      Map("latest_attempt_date" -> "06/04/2020", "was_contact_made" -> "Yes",
+        "outcome" -> "Food referral ", "food_priority" -> "Priority 1",
+        "addl_medication_prescriptions" -> "insulin"),
+      Map("latest_attempt_date" -> "07/04/2020",
+        "was_contact_made" -> "No 2 attempts made",
+        "callback_date" -> "14/04/2020", "addl_financial" -> "debt"),
+      Map("nhs_number" -> "100", "latest_attempt_date" -> "08/04/2020",
+        "was_contact_made" -> "Yes"))), users)
+    val rows = sortedRows(out.qualityAssurance.select("nhs_number",
+      qaLookups :+ "_ord": _*))
+    assert(rows.size == 3)
+    for (r <- rows.take(2)) {
+      assert(r.isNullAt(0))
+      assert((1 to qaLookups.size).forall(r.isNullAt), r)
+    }
+    assert(rows(2).getString(1) == "Completed") // a keyed row still matches
+  }
+
+  test("quality_assurance: first MATCHING row per lookup, needs in cat order (J1/J2)") {
+    val out = PrepareCalls(canonical(Seq(
+      // 100's first row: no food or callback need
+      Map("nhs_number" -> "100", "latest_attempt_date" -> "06/04/2020",
+        "was_contact_made" -> "No 2 attempts made"),
+      // 200's earlier row: a wellbeing need (cat rank 1)
+      Map("nhs_number" -> "200", "latest_attempt_date" -> "07/04/2020",
+        "was_contact_made" -> "Yes", "addl_mental_wellbeing" -> "anxious"),
+      // 100's later row: food and callback needs
+      Map("nhs_number" -> "100", "latest_attempt_date" -> "08/04/2020",
+        "was_contact_made" -> "Yes", "food_priority" -> "Priority 2",
+        "callback_date" -> "20/04/2020"),
+      // 200's later row: a prescription need (cat rank 0)
+      Map("nhs_number" -> "200", "latest_attempt_date" -> "09/04/2020",
+        "was_contact_made" -> "Yes",
+        "addl_medication_prescriptions" -> "insulin"))), users)
+    val rows = sortedRows(out.qualityAssurance.select("nhs_number",
+      qaLookups :+ "_ord": _*))
+    assert(rows.map(_.getString(0)) == Seq("100", "200", "100", "200"))
+    for (r <- Seq(rows(0), rows(2))) {
+      assert(r.getString(1) == "To do") // the first row's, not a later match
+      assert(r.getString(2) ==
+        "phone_failure, phone_failure, phone_success")
+      assert(r.getString(3) ==
+        "Food need created\nPriority: 2\nStatus: Completed\nAssigned to: 101")
+      assert(r.getString(4) == "Callback need created\nStart on: 2020-04-20")
+      assert(r.isNullAt(5))
+    }
+    for (r <- Seq(rows(1), rows(3))) {
+      assert(r.isNullAt(3) && r.isNullAt(4))
+      assert(r.getString(5) == "Prescription Pickups (Assigned to 103)\n" +
+        "Physical And Mental Wellbeing (Assigned to 102)")
+    }
   }
 
   private def sortedRows(df: org.apache.spark.sql.DataFrame): Seq[Row] =
